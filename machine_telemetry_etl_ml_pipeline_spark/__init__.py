@@ -14,6 +14,9 @@ Layout:
     ml            VectorAssembler/StandardScaler/GBT pipelines + anomaly
     streaming     Structured Streaming windows / watermark / dedup
     ingest        the reference's CSV->table ETL path
+    registry      the driver's query library: one module per entry-name family
+                  (ref, ext, tpch, stream, llm, ml, graph, udf), each entry a
+                  Spark builder paired with its DuckDB oracle SQL
 """
 
 __version__ = "0.1.0"

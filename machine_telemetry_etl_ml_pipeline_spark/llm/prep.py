@@ -81,7 +81,7 @@ def md5_bucket(col, n_digits: int = 2) -> "F.Column":
 
 def hex_bucket_sql(h_expr: str, n_digits: int = 2) -> str:
     """DuckDB twin of md5_bucket, colocated with it so the two stay in
-    lockstep (registry_ext11 carries an older local copy for its
+    lockstep (registry/ext.py carries an older local copy for its
     already-driver-verified entries): integer in [0, 16^n) from the
     first n hex digits of an md5 SQL expression."""
     digit = "(strpos('0123456789abcdef', substr({h}, {p}, 1)) - 1)"

@@ -140,7 +140,7 @@ def reference_model_scores(df: DataFrame) -> DataFrame:
     Python worker (lru-cached), every output is a pure per-row
     function, so the shape is the 100 TB batch-inference one —
     embarrassingly parallel map, no shuffle, broadcast-size model.
-    Registry twin: ml_model_exact_scoring (registry_ext32) proves this
+    Registry twin: ml_model_exact_scoring (registry/ml.py) proves this
     exact scoring path bitwise against driver-local scoring through
     the driver's DuckDB gate."""
     from pyspark.sql.types import IntegerType, StructField, StructType

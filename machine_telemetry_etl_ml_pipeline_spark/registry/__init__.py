@@ -1,0 +1,62 @@
+"""Declared-query registry: every implemented operator from SURVEY.md §2
+as a (spark_builder, duckdb_oracle_sql) pair over the driver's testdata.
+
+One module per entry-name family (``ref``, ``ext``, ``tpch``,
+``stream``, ``llm``, ``ml``, ``graph``, ``udf``); ``sql_scripting``
+holds the ``ext_*`` SQL-scripting entries. Importing this package
+imports every module below it, which fills ``REGISTRY``. The order the
+driver reads is ``__spark_entry__.QUERY_ORDER``, not registration order.
+
+Conventions (driver compares row count + schema + order-insensitive
+value hash):
+- every computed column is aliased identically in Spark and SQL;
+- float outputs are rounded to 4 decimals on BOTH sides;
+- timestamps are projected as epoch seconds (BIGINT) to dodge
+  timezone/precision representation differences;
+- every top-k has a deterministic tiebreak on a key column.
+"""
+
+from __future__ import annotations
+
+import importlib
+import pkgutil
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..session import tune_session
+from ..sources.catalog import load_table
+
+
+@dataclass
+class Query:
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None  # None -> rows-only check
+
+
+REGISTRY: dict[str, Query] = {}
+
+
+def register(name: str, oracle: str | None):
+    def deco(fn):
+        REGISTRY[name] = Query(fn=fn, oracle=oracle)
+        return fn
+
+    return deco
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str, ts_range=None) -> DataFrame:
+    tune_session(spark)
+    return load_table(spark, sf_dir, name, ts_range=ts_range)
+
+
+def _epoch(col: str = "ts"):
+    """Epoch seconds as BIGINT; floor matches DuckDB CAST(floor(epoch(ts)))."""
+    return F.unix_timestamp(F.col(col)).cast("long")
+
+
+# The family modules import the names above, so they load last.
+for _mod in pkgutil.iter_modules(__path__):
+    importlib.import_module(f"{__name__}.{_mod.name}")

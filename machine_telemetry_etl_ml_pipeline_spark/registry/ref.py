@@ -1,29 +1,20 @@
-"""Declared-query registry: every implemented operator from SURVEY.md §2
-as a (spark_builder, duckdb_oracle_sql) pair over the driver's testdata.
+"""``ref_*`` entries: the reference telemetry surface (SURVEY.md §2A).
 
-The reference's telemetry surface (/root/reference/project/db.py) maps
-onto ``events`` — latest-per-user_id is the analog of
-latest-per-machineid (FIXTURES.md §B) — and the extension surface (§2B)
-onto the TPC-H-ish star schema.
-
-Conventions (driver compares row count + schema + order-insensitive
-value hash):
-- every computed column is aliased identically in Spark and SQL;
-- float outputs are rounded to 4 decimals on BOTH sides;
-- timestamps are projected as epoch seconds (BIGINT) to dodge
-  timezone/precision representation differences;
-- every top-k has a deterministic tiebreak on a key column.
+The reference's query library (/root/reference/project/db.py) maps onto
+``events``: latest-per-user_id is the analog of latest-per-machineid
+(FIXTURES.md §B). Entries cover its scans, filters, latest-N and
+latest-per-key reads, range scans, extrema, grouped statistics and the
+ingest-side normalisation (projection rename, null fill, surrogate
+ids).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass
+import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.core import (
+from ..operators.core import (
     distinct_values,
     grouped_stats,
     latest_n,
@@ -32,35 +23,9 @@ from .operators.core import (
     stats,
     top_k_by,
 )
-from .session import tune_session
-from .sources.catalog import load_table
-
-
-@dataclass
-class Query:
-    fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None -> rows-only check
-
-
-REGISTRY: dict[str, Query] = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        REGISTRY[name] = Query(fn=fn, oracle=oracle)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str, ts_range=None) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name, ts_range=ts_range)
-
-
-def _epoch(col: str = "ts"):
-    """Epoch seconds as BIGINT; floor matches DuckDB CAST(floor(epoch(ts)))."""
-    return F.unix_timestamp(F.col(col)).cast("long")
+from ..session import tune_session
+from ..sources.catalog import load_table
+from . import _epoch, _t, register
 
 
 EPOCH_SQL = "CAST(floor(epoch(ts)) AS BIGINT)"
@@ -317,6 +282,7 @@ _EXACT_AVG_VALUE_SQL = (
     " / (count(value) * 100)) / 10000.0"
 )
 
+
 @register(
     "ref_stats_global",
     f"""
@@ -490,4 +456,178 @@ def ref_zscore_standardize(spark, sf_dir):
             "event_id",
             F.round((F.col("value") - F.col("__mu")) / F.col("__sigma"), 4).alias("value_z"),
         )
+    )
+
+
+# --- write-path / sink operators ------------------------------------------
+# Oracle-checked (round-2 upgrade): each sink writes a payload derived
+# deterministically from a source table, reads it back, and emits digest
+# aggregates; the DuckDB oracle computes the SAME digests straight from
+# the source view. No file dependency in the oracle (robust to driver
+# run order), but a corrupted/partial write-read round trip changes the
+# Spark-side digest and fails the hash.
+
+
+@register(
+    "ref_sink_batch_insert",
+    """
+    SELECT count(*) AS after_first,
+           2 * count(*) AS after_second,
+           2 * CAST(sum(event_id) AS BIGINT) AS sum_event_id,
+           2 * CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+    FROM events
+    """,
+)
+def ref_sink_batch_insert(spark, sf_dir):
+    """Batch append sink — the reference's execute_values page_size=1000
+    + commit (database_and_model_tools.py:75-97). Two appends of the
+    same deterministic events projection into a fresh parquet table
+    (distributed write, one atomic commit per batch); the result is the
+    read-back count after each commit plus read-back content digests,
+    which the oracle recomputes from the logical source."""
+    path = tempfile.mkdtemp(prefix="sink_batch_") + "/t"
+    src = _t(spark, sf_dir, "events").select(
+        "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
+    )
+    after_first = None
+    for i in range(2):
+        src.write.mode("append").parquet(path)
+        if i == 0:
+            after_first = spark.read.parquet(path).count()
+    back = spark.read.parquet(path)
+    return back.agg(
+        F.lit(after_first).cast("long").alias("after_first"),
+        F.count(F.lit(1)).alias("after_second"),
+        F.sum("event_id").alias("sum_event_id"),
+        F.sum("cents").alias("sum_cents"),
+    )
+
+
+@register(
+    "ref_sink_insert_defaults",
+    """
+    SELECT * FROM (VALUES
+      ('operator', 'regression', 0.9::DOUBLE, true),
+      ('manager',  'anomaly',    0.0::DOUBLE, true)
+    ) t(role, intent, confidence, has_ts)
+    """,
+)
+def ref_sink_insert_defaults(spark, sf_dir):
+    """Insert with default-valued columns + None->0.0 coercion — the
+    reference's log_user_query (project/db.py:163-169): ts_epoch is
+    stamped at write time, NULL confidence coalesced to 0.0. The
+    write-time default semantics (coalesce applied, timestamp present)
+    are read back from the parquet commit and checked against the
+    literal expected rows."""
+    path = tempfile.mkdtemp(prefix="sink_defaults_") + "/t"
+    rows = spark.createDataFrame(
+        [("operator", "q1", "regression", 0.9), ("manager", "q2", "anomaly", None)],
+        "role string, query string, intent string, confidence double",
+    )
+    stamped = rows.withColumn("confidence", F.coalesce("confidence", F.lit(0.0))).withColumn(
+        "ts_epoch", F.unix_timestamp(F.current_timestamp()).cast("long")
+    )
+    stamped.write.mode("append").parquet(path)
+    back = spark.read.parquet(path)
+    return back.select(
+        "role", "intent", "confidence", F.col("ts_epoch").isNotNull().alias("has_ts")
+    )
+
+
+@register(
+    "ref_sink_insert_json",
+    """
+    SELECT 'M001' AS machine_id, 'regression' AS intent,
+           82.5::DOUBLE AS numerical_answer,
+           'fuelconsumption' AS first_key, 2 AS n_features
+    """,
+)
+def ref_sink_insert_json(spark, sf_dir):
+    """JSON-serialized feature insert — the reference's log_prediction
+    (project/db.py:171-185): map -> to_json at write, from_json on
+    read-back (JSONB parity via MapType, SURVEY §1.2). first_key uses
+    array_sort for a deterministic map-key order."""
+    path = tempfile.mkdtemp(prefix="sink_json_") + "/t"
+    rows = spark.createDataFrame(
+        [("M001", "regression", 82.5, {"fuelconsumption": 10.5, "humidity": 68.0})],
+        "machine_id string, intent string, numerical_answer double, features map<string,double>",
+    )
+    rows.withColumn("features_json", F.to_json("features")).drop("features").write.mode(
+        "append"
+    ).parquet(path)
+    back = spark.read.parquet(path).withColumn(
+        "features", F.from_json("features_json", "map<string,double>")
+    )
+    return back.select(
+        "machine_id",
+        "intent",
+        "numerical_answer",
+        F.array_sort(F.map_keys("features"))[0].alias("first_key"),
+        F.size(F.map_keys("features")).alias("n_features"),
+    )
+
+
+@register(
+    "ref_ddl_create_table",
+    """
+    SELECT * FROM (VALUES
+      ('machineid', 'string'), ('ts_epoch', 'bigint'),
+      ('enginetemperature', 'double'), ('status', 'string'),
+      ('status_encoded', 'int')
+    ) t(col_name, data_type)
+    """,
+)
+def ref_ddl_create_table(spark, sf_dir):
+    """DDL surface — the reference's CREATE TABLE IF NOT EXISTS
+    (project/db.py:77-126) as Spark SQL DDL over a parquet location;
+    returns the created table's schema as rows. Oracle (round-2
+    upgrade): the literal expected schema — checks both the CREATE and
+    that the second IF NOT EXISTS was a no-op (a re-create with the
+    1-column schema would change the output)."""
+    import uuid
+
+    loc = tempfile.mkdtemp(prefix="ddl_") + "/t"
+    # unique per invocation: a fixed name would race under concurrent
+    # query execution (DROP vs CREATE interleaving)
+    name = f"telemetry_ddl_check_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(
+        f"""
+        CREATE TABLE IF NOT EXISTS {name} (
+          machineid STRING, ts_epoch BIGINT, enginetemperature DOUBLE,
+          status STRING, status_encoded INT
+        ) USING parquet LOCATION '{loc}'
+        """
+    )
+    # idempotency: the reference loops IF NOT EXISTS on every run
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} (machineid STRING) USING parquet LOCATION '{loc}'"
+    )
+    out = spark.sql(f"DESCRIBE TABLE {name}").select("col_name", "data_type")
+    return out.filter(~F.col("col_name").startswith("#"))
+
+
+# --- SERIAL / surrogate keys (SURVEY §1.2 type-mapping row 1) ---------------
+
+
+@register(
+    "ref_surrogate_ids",
+    """
+    SELECT row_number() OVER (ORDER BY ts, event_id) AS sid, event_id
+    FROM events QUALIFY sid <= 100
+    """,
+)
+def ref_surrogate_ids(spark, sf_dir):
+    """SERIAL-column parity (reference id SERIAL PRIMARY KEY,
+    db.py:82): Spark has no auto-increment; stable surrogate keys are
+    a row_number over an explicit total order (SURVEY §1.2).
+    monotonically_increasing_id() is the shuffle-free alternative when
+    stability across runs is not required."""
+    from pyspark.sql import Window
+
+    e = _t(spark, sf_dir, "events")
+    w = Window.orderBy(F.col("ts").asc(), F.col("event_id").asc())
+    return (
+        e.select(F.row_number().over(w).alias("sid"), "event_id")
+        .filter(F.col("sid") <= 100)
     )

@@ -1,27 +1,15 @@
-"""Fifteenth extension batch (round 5): Spark 4 SQL programmability —
-session variables (DECLARE/SET VAR), EXECUTE IMMEDIATE dynamic SQL,
-and SQL scripting (BEGIN...END control flow).
+"""``ext_*`` entries for Spark SQL scripting and session state: session
+variables (DECLARE / SET VAR), EXECUTE IMMEDIATE, and compound
+BEGIN ... END scripts with loops.
 
-These are the surfaces that absorb the reference's imperative
-query-construction layer (project/db.py builds SQL strings in Python
-methods and interpolates thresholds client-side — db.py:254-271 et
-al.): a session variable replaces the Python-side constant, EXECUTE
-IMMEDIATE replaces string-built SQL with parameter binding, and a
-script block replaces the fetch-compute-requery round trip. Each
-oracle states the equivalent STATIC relational query, proving the
-programmability layer changes how the query is ASSEMBLED, never what
-it computes.
-
-Determinism contract: every variable holds an exact integer (ids,
-cents, counts) computed by integer aggregates, so assembly-time state
-introduces no float drift; the single session is reused, so DECLARE
-OR REPLACE keeps entries re-runnable."""
+These entries run SQL text against temp views registered through
+``_t``, so the views see the tuned session; the ``_views`` in ``ext``
+loads the tables without tuning and is a different helper.
+"""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F  # noqa: F401  (parity with sibling batches)
-
-from .registry import _t, register
+from . import _t, register
 
 
 def _views(spark, sf_dir, *names):

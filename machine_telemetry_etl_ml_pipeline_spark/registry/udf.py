@@ -1,12 +1,9 @@
-"""UDF surface (SURVEY §2B last row): scalar pandas_udf, grouped-map
-applyInPandas, and row-at-a-time Python UDF — each oracle-checked so
-the Python<->JVM plumbing is held to the same differential bar as the
-built-in operators.
+"""``udf_*`` entries: Python-executed operators (row UDFs, pandas UDFs,
+applyInPandas, mapInArrow, Python UDTFs).
 
-Scale notes: pandas_udf/applyInPandas move Arrow BATCHES across the
-Python boundary (vectorized, ~10-100x over per-row); the plain @udf
-exists for API completeness and is the documented slow path — nothing
-in this repo uses it on a hot path.
+These are the entries whose work runs in Python workers. Their two
+row-at-a-time UDF sites are the documented slow-path demo that the
+anti-pattern census (tools/antipattern_scan.py) keeps on record.
 """
 
 from __future__ import annotations
@@ -14,11 +11,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from .registry import _t, register
+from . import _t, register
 
 
 @register(

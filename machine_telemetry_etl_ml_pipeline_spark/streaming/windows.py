@@ -4,7 +4,7 @@ continuous analog of the reference's daily Airflow batch
 event-time windows, stateful dedup, and stream-static joins over an
 events-shaped stream.
 
-Batch twins of the window aggregations live in registry_ext
+Batch twins of the window aggregations live in registry/ext.py
 (ext_tumbling_window / ext_sliding_window / ext_session_windows) where
 they are oracle-checked; streaming state itself is rows-only by the
 driver contract (SURVEY §7 hard spot e).
@@ -81,7 +81,7 @@ def sliding_counts(
 
 def session_counts(stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
     """Native session windows (state-store backed) — batch twin:
-    registry_ext.ext_session_windows (gaps-and-islands)."""
+    registry.ext.ext_session_windows (gaps-and-islands)."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
@@ -128,7 +128,7 @@ def full_outer_click_purchase_join(
 ) -> DataFrame:
     """Watermarked FULL OUTER stream-stream interval join: clicks to
     purchases within [c_ts, c_ts + 30min] per user. Shared by the
-    registry entry (registry_ext31.stream_stream_join_full_outer, fed
+    registry entry (registry.stream.stream_stream_join_full_outer, fed
     by events_testdata_stream) and the late-data eviction proof
     (tests/test_streaming.py, fed by a multi-drain file source), so
     the proof exercises the shipped join shape. Each side's unmatched

@@ -33,6 +33,6 @@ def test_baseline_is_committed_and_nonempty():
     base = json.load(open(BASELINE))
     # the known bounded sites must be present — an accidentally
     # emptied baseline would make the growth gate vacuous
-    assert any(f.endswith("registry_udf.py") for f in base)
+    assert any(f.endswith("registry/udf.py") for f in base)
     total_collect = sum(f.get("collect", 0) for f in base.values())
     assert 0 < total_collect < 60

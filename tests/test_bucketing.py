@@ -58,7 +58,6 @@ def test_registry_bucketed_join_entry_is_colocated(spark):
     with NO shuffle on either side: the only Exchange in the executed
     plan is the final 5-group rollup. Tested at sf0.001 (bucket specs,
     not data volume, decide the plan shape)."""
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext3  # noqa: F401
     from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
     sf_dir = "/root/testdata/sf0.001"

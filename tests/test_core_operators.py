@@ -120,7 +120,6 @@ def test_stratified_sample_rates(spark):
     """ext_sample_stratified (hash-threshold Bernoulli per stratum):
     realized per-stratum rates land near the requested fractions, and
     fraction-1.0 strata keep every row."""
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext5  # noqa: F401  (registers the entry)
     from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
     from machine_telemetry_etl_ml_pipeline_spark.sources.catalog import load_table
 
@@ -145,7 +144,6 @@ def test_bernoulli_sample_rate(spark):
     """ext_sample (hash-threshold Bernoulli): realized rate near the
     10% target, and re-running selects the IDENTICAL sample (the
     reproducibility property the hash re-spec buys over seeded RNG)."""
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext4  # noqa: F401  (registers the entry)
     from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
     from machine_telemetry_etl_ml_pipeline_spark.sources.catalog import load_table
 

@@ -1,15 +1,14 @@
-"""Invariant tests for the round-5 batch-4/5 entries (registry_ext10):
-reset semantics and audio RMS recomputed in Python, brute-force
-Gini/argmin sweeps, lateral-alias expression substitution, SemDeDup
-monotonicity, join-view IVM equality, PCA eigenvalue bounds,
-confusion-cell identities, binaryFile digests, schema-evolution
-null-fills, and depth-2 tree partitioning."""
+"""Invariant tests for the round-5 batch-4/5 entries (now in
+registry/ext.py, llm.py, ml.py): reset semantics and audio RMS
+recomputed in Python, brute-force Gini/argmin sweeps, lateral-alias
+expression substitution, SemDeDup monotonicity, join-view IVM equality,
+PCA eigenvalue bounds, confusion-cell identities, binaryFile digests,
+schema-evolution null-fills, and depth-2 tree partitioning."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext10  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 from machine_telemetry_etl_ml_pipeline_spark.sources.catalog import load_table
 
@@ -79,7 +78,7 @@ def test_lateral_alias_substitutes_expressions(spark):
     assert rows, "expected rows for l_orderkey < 100"
     for r in rows:
         assert r.gross_cents == r.net_cents + r.tax_cents
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext2 import _views
+    from machine_telemetry_etl_ml_pipeline_spark.registry.ext import _views
 
     _views(spark, SF, "lineitem")
     nested = spark.sql(

@@ -1,15 +1,14 @@
-"""Invariant tests for the round-5 batch-6 entries (registry_ext11):
-properties the DuckDB oracle gate can't express — brute-force AUC and
-weighted-sample cross-checks against independent Python computations,
-the bloom filter's no-false-negative guarantee, calibration/Brier
-identities, ridge residual optimality, and feature-hash mass
-conservation."""
+"""Invariant tests for the round-5 batch-6 entries (now in
+registry/ext.py, llm.py, ml.py): properties the DuckDB oracle gate can't
+express — brute-force AUC and weighted-sample cross-checks against
+independent Python computations, the bloom filter's no-false-negative
+guarantee, calibration/Brier identities, ridge residual optimality, and
+feature-hash mass conservation."""
 
 from __future__ import annotations
 
 import math
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext11  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

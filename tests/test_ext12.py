@@ -1,4 +1,4 @@
-"""Invariant tests for the round-5 batch-7 entries (registry_ext12):
+"""Invariant tests for the round-5 batch-7 entries (now in registry/ml.py):
 brute-force KS and NDCG cross-checks against independent Python
 computations, and PSI smoothing/mass identities."""
 
@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import math
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext12  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

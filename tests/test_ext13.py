@@ -1,12 +1,12 @@
-"""Invariant tests for the round-5 batch-8 entries (registry_ext13):
-brute-force recounts for the Count-Min sketch and interval merge, a
-scipy-free Spearman cross-check, and lift-table mass identities."""
+"""Invariant tests for the round-5 batch-8 entries (now in
+registry/ext.py, stream.py, ml.py): brute-force recounts for the Count-
+Min sketch and interval merge, a scipy-free Spearman cross-check, and
+lift-table mass identities."""
 
 from __future__ import annotations
 
 from collections import Counter, defaultdict
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext13  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

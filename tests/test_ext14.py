@@ -1,6 +1,6 @@
-"""Invariant tests for the round-5 batch-9 entries (registry_ext14):
-brute-force recomputation of the two-proportion z-test and Welch's
-t-test from raw rows, plus statistical identities."""
+"""Invariant tests for the round-5 batch-9 entries (now in
+registry/ext.py, ml.py): brute-force recomputation of the two-proportion
+z-test and Welch's t-test from raw rows, plus statistical identities."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import hashlib
 import math
 from collections import defaultdict
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext14  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

@@ -1,12 +1,12 @@
-"""Invariant tests for the round-5 batch-10 entries (registry_ext15):
-the SQL-programmability layer must be pure assembly — identical
-results to the static formulations, re-runnable in one session."""
+"""Invariant tests for the round-5 batch-10 entries (now in
+registry/sql_scripting.py): the SQL-programmability layer must be pure
+assembly — identical results to the static formulations, re-runnable in
+one session."""
 
 from __future__ import annotations
 
 from collections import Counter
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext15  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

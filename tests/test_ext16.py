@@ -1,11 +1,11 @@
-"""Invariant tests for the round-6 batch (registry_ext16): idempotent
-foreachBatch sink, AQE skew join, label propagation, boosted stumps."""
+"""Invariant tests for the round-6 batch (now in registry/ext.py,
+stream.py, ml.py, graph.py): idempotent foreachBatch sink, AQE skew
+join, label propagation, boosted stumps."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext16  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"
@@ -63,9 +63,7 @@ def test_label_propagation_invariants(spark):
     increases any label (monotone), and the number of communities is
     >= the true component count (bounded rounds can only OVER-split,
     never merge two true components)."""
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext16 import (
-        _copurchase_edges,
-    )
+    from machine_telemetry_etl_ml_pipeline_spark.registry.graph import _copurchase_edges
 
     out = _run(spark, "graph_label_propagation").collect()
     sizes = {r.community: r.size for r in out}
@@ -124,7 +122,7 @@ def test_tdiv_matches_spark_div_on_negatives(spark):
     """_tdiv must replicate Spark SQL `div` (truncation toward zero,
     BigDecimal divideToIntegralValue) — Python's flooring `//` differs
     on negative dividends, and stump residual sums go negative."""
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext16 import _tdiv
+    from machine_telemetry_etl_ml_pipeline_spark.registry.ml import _tdiv
 
     pairs = [(a, b) for a in (-7, -3, -1, 1, 3, 7, 0) for b in (-4, -2, 2, 4)]
     df = spark.createDataFrame(pairs, "a long, b long")
@@ -144,7 +142,7 @@ def test_gbt_sufficient_stats_match_per_row_brute_force(spark):
     truncated leaves — and compare all 9 outputs, mse by bit pattern."""
     import struct
 
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext16 import _tdiv
+    from machine_telemetry_etl_ml_pipeline_spark.registry.ml import _tdiv
 
     row = _run(spark, "ml_gbt_stumps").collect()[0]
     raw = (

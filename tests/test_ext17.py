@@ -1,11 +1,11 @@
-"""Invariant tests for the round-6 part-2 batch (registry_ext17):
-Kaplan-Meier, skyline, seasonal indices, pagination, by-name union."""
+"""Invariant tests for the round-6 part-2 batch (now in registry/ext.py,
+stream.py, llm.py, ml.py): Kaplan-Meier, skyline, seasonal indices,
+pagination, by-name union."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext17  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"
@@ -286,8 +286,6 @@ def test_python_stream_source_exactly_once_across_restarts(spark):
 def test_stream_dynamic_gap_equals_batch_twin(spark):
     """The streaming state-store session merge must equal the batch
     session_window result row for row."""
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext7  # noqa: F401
-
     got = {
         (r.user_id, r.sess_start, r.sess_end, r.n_events)
         for r in _run(spark, "stream_session_dynamic_gap").collect()
@@ -333,8 +331,6 @@ def test_subsample_ci_brackets_point_estimate(spark):
 def test_asof_tolerance_is_filtered_backward_asof(spark):
     """Tolerance rows must be EXACTLY the backward as-of matches whose
     age fits the window — never a different candidate."""
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext  # noqa: F401
-
     tol = {r.event_id: (r.asof_event_id, r.age_us)
            for r in _run(spark, "ext_asof_join_tolerance").collect()}
     plain = {r.event_id: r.asof_event_id

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-3 batch (registry_ext18):
-OHLC resampling, linear interpolation, average precision, Cohen's
-kappa, Cramer's V — each checked against a brute-force Python
+"""Invariant tests for the round-6 part-3 batch (now in registry/ext.py,
+ml.py): OHLC resampling, linear interpolation, average precision,
+Cohen's kappa, Cramer's V — each checked against a brute-force Python
 recompute or a structural invariant at sf0.001."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext18  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

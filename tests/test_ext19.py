@@ -1,5 +1,5 @@
-"""Invariant tests for the round-6 part-4 batch (registry_ext19):
-table checksum, bitmap distinct, Bollinger bands, URL
+"""Invariant tests for the round-6 part-4 batch (now in registry/ext.py,
+llm.py, graph.py): table checksum, bitmap distinct, Bollinger bands, URL
 canonicalization, common-neighbor link prediction."""
 
 from __future__ import annotations
@@ -8,11 +8,8 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext19  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
-from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import (
-    _copurchase_edges,
-)
+from machine_telemetry_etl_ml_pipeline_spark.registry.graph import _copurchase_edges
 
 SF = "/root/testdata/sf0.001"
 

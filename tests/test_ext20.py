@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-5 batch (registry_ext20):
-Kendall tau-b, Theil-Sen slope, Z-order clustering, code detection,
-embedding outliers."""
+"""Invariant tests for the round-6 part-5 batch (now in registry/ext.py,
+llm.py, ml.py): Kendall tau-b, Theil-Sen slope, Z-order clustering, code
+detection, embedding outliers."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext20  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

@@ -1,12 +1,11 @@
-"""Invariant tests for the round-6 part-6 batch (registry_ext21):
-RFM segmentation, ABC classification, one-way ANOVA, Matthews
+"""Invariant tests for the round-6 part-6 batch (now in registry/ext.py,
+ml.py): RFM segmentation, ABC classification, one-way ANOVA, Matthews
 correlation, Brier score."""
 
 from __future__ import annotations
 
 import math
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext21  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

@@ -1,13 +1,12 @@
-"""Invariant tests for the round-6 part-7 batch (registry_ext22):
-k-core peeling, weighted SSSP, and 1-D Gaussian-mixture EM."""
+"""Invariant tests for the round-6 part-7 batch (now in registry/ml.py,
+graph.py): k-core peeling, weighted SSSP, and 1-D Gaussian-mixture EM."""
 
 from __future__ import annotations
 
 from collections import defaultdict
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext22  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
-from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import _copurchase_edges
+from machine_telemetry_etl_ml_pipeline_spark.registry.graph import _copurchase_edges
 
 SF = "/root/testdata/sf0.001"
 

@@ -1,5 +1,5 @@
-"""Invariant tests for the round-6 part-8 batch (registry_ext23):
-HMM forward posterior, MMR re-rank, Flesch readability."""
+"""Invariant tests for the round-6 part-8 batch (now in registry/llm.py,
+ml.py): HMM forward posterior, MMR re-rank, Flesch readability."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext23  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

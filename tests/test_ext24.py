@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-9 batch (registry_ext24):
-RAKE keywords, lang-ID confusion, bagged-stump forest, point-in-time
-churn labels, dynamic partition pruning."""
+"""Invariant tests for the round-6 part-9 batch (now in registry/ext.py,
+llm.py, ml.py): RAKE keywords, lang-ID confusion, bagged-stump forest,
+point-in-time churn labels, dynamic partition pruning."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext24  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.llm import textstats as ts
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-10 batch (registry_ext25):
-LOO target encoding, span corruption, clustering coefficient,
-tokenizer fertility, learning curve."""
+"""Invariant tests for the round-6 part-10 batch (now in
+registry/llm.py, ml.py, graph.py): LOO target encoding, span corruption,
+clustering coefficient, tokenizer fertility, learning curve."""
 
 from __future__ import annotations
 
@@ -8,9 +8,8 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext25  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
-from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import _copurchase_edges
+from machine_telemetry_etl_ml_pipeline_spark.registry.graph import _copurchase_edges
 
 SF = "/root/testdata/sf0.001"
 

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-12 batch (registry_ext27):
-SPRT, winsorized mean, inter-arrival stats, preference pairs,
-blocked fuzzy linkage."""
+"""Invariant tests for the round-6 part-12 batch (now in
+registry/ext.py, llm.py, ml.py): SPRT, winsorized mean, inter-arrival
+stats, preference pairs, blocked fuzzy linkage."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext27  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

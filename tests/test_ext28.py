@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-13 batch (registry_ext28):
-Holt-Winters seasonal, item-item cosine, token-budget fill, interval
-arithmetic."""
+"""Invariant tests for the round-6 part-13 batch (now in
+registry/ext.py, llm.py, ml.py): Holt-Winters seasonal, item-item
+cosine, token-budget fill, interval arithmetic."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext28  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

@@ -2,7 +2,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext29  # noqa: F401  (extends REGISTRY)
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

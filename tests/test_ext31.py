@@ -1,5 +1,5 @@
 """Thirty-first extension batch: mergeable quantile sketch + FULL
-OUTER stream-stream interval join (registry_ext31.py).
+OUTER stream-stream interval join (now in registry/ext.py, stream.py).
 
 Properties pinned here (the DuckDB oracles check engine parity; these
 check the MATH):
@@ -18,7 +18,6 @@ import math
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext31  # noqa: F401  (extends REGISTRY)
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

@@ -1,12 +1,11 @@
 """Property / brute-force tests for the r9 statistical + packing
-additions (registry_ext32: ml_kfold_cv, ml_conformal_interval,
-llm_sequence_packing). The model-exact scoring entry is covered by
-tests/test_refmodels.py."""
+additions (now in registry/llm.py, ml.py: ml_kfold_cv,
+ml_conformal_interval, llm_sequence_packing). The model-exact scoring
+entry is covered by tests/test_refmodels.py."""
 
 import numpy as np
 import pytest
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext32  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

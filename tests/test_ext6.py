@@ -1,7 +1,8 @@
-"""Round-3 batch (registry_ext6): retrieval, graph, and maintenance
-operator properties that hold at any scale — the DuckDB-oracle gate
-(tools/check.py) is the exact-value signal; these assert the invariants
-that survive a testdata regeneration."""
+"""Round-3 batch (now in registry/ext.py, stream.py, llm.py, ml.py,
+graph.py): retrieval, graph, and maintenance operator properties that
+hold at any scale — the DuckDB-oracle gate (tools/check.py) is the
+exact-value signal; these assert the invariants that survive a testdata
+regeneration."""
 
 from __future__ import annotations
 

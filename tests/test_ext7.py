@@ -1,7 +1,8 @@
-"""Round-4 batch (registry_ext7): streaming top-k materialization and
-corpus-curation operator properties that hold at any scale — the
-DuckDB-oracle gate (tools/check.py) is the exact-value signal; these
-assert the invariants that survive a testdata regeneration."""
+"""Round-4 batch (now in registry/ext.py, stream.py, llm.py, ml.py):
+streaming top-k materialization and corpus-curation operator properties
+that hold at any scale — the DuckDB-oracle gate (tools/check.py) is the
+exact-value signal; these assert the invariants that survive a testdata
+regeneration."""
 
 from __future__ import annotations
 

@@ -1,13 +1,12 @@
-"""Invariant tests for the round-5 corpus-curation batch
-(registry_ext8): properties the DuckDB oracle gate can't express —
-membership stability under re-partitioning, quota bounds, shard
-completeness, norm non-negativity, Zipf monotonicity."""
+"""Invariant tests for the round-5 corpus-curation batch (now in
+registry/ext.py, llm.py): properties the DuckDB oracle gate can't
+express — membership stability under re-partitioning, quota bounds,
+shard completeness, norm non-negativity, Zipf monotonicity."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext8  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

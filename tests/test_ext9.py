@@ -1,8 +1,9 @@
-"""Invariant tests for the round-5 batch-2/3 entries (registry_ext9):
-properties the DuckDB oracle gate can't express — pipe/ANSI plan
-equivalence, collation-aware grouping without data rewrite, ACF
-bounds, brute-force triangle/BFS cross-checks, equi-depth balance,
-and GD/KMeans determinism under re-partitioning."""
+"""Invariant tests for the round-5 batch-2/3 entries (now in
+registry/ext.py, llm.py, ml.py, graph.py): properties the DuckDB oracle
+gate can't express — pipe/ANSI plan equivalence, collation-aware
+grouping without data rewrite, ACF bounds, brute-force triangle/BFS
+cross-checks, equi-depth balance, and GD/KMeans determinism under re-
+partitioning."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import math
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext9  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -24,7 +24,7 @@ def test_pipe_syntax_matches_ansi_form(spark):
     """The |> pipeline must produce exactly the rows of its nested ANSI
     equivalent — pipe stages are syntax, not new semantics."""
     pipe = {tuple(r) for r in _run(spark, "ext_sql_pipe_syntax").collect()}
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext2 import _views
+    from machine_telemetry_etl_ml_pipeline_spark.registry.ext import _views
 
     _views(spark, SF, "lineitem")
     ansi = {
@@ -127,7 +127,7 @@ def test_logreg_gd_deterministic_under_repartition(spark):
 def test_bfs_distances_match_bruteforce(spark):
     """Re-run BFS with a Python adjacency walk on the collected edge
     list — the 8-round distributed frontier expansion must agree."""
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import _copurchase_edges
+    from machine_telemetry_etl_ml_pipeline_spark.registry.graph import _copurchase_edges
 
     out = {r.distance: r.n_nodes for r in _run(spark, "graph_bfs_distances").collect()}
     edges = [(r.u, r.v) for r in _copurchase_edges(spark, SF).collect()]
@@ -223,7 +223,7 @@ def test_copurchase_edges_match_self_join_shape(spark):
     from pyspark.sql import functions as F
 
     from machine_telemetry_etl_ml_pipeline_spark.registry import _t
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import _copurchase_edges
+    from machine_telemetry_etl_ml_pipeline_spark.registry.graph import _copurchase_edges
 
     SF = "/root/testdata/sf0.001"
     got = {(r.u, r.v) for r in _copurchase_edges(spark, SF).collect()}

@@ -350,7 +350,7 @@ def test_adaptive_base_literal_params_match_expression(spark):
         norm,
     )
     from machine_telemetry_etl_ml_pipeline_spark.registry import _t
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext30 import (
+    from machine_telemetry_etl_ml_pipeline_spark.registry.llm import (
         _TARGET_BUCKET,
         _adaptive_base,
     )

@@ -221,7 +221,7 @@ EDGES = st.lists(
 def test_triangle_count_matches_bruteforce_on_random_graphs(spark, raw):
     """count_triangles vs adjacency-set brute force over arbitrary
     small graphs — self-loops dropped, edges canonicalized u < v."""
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import count_triangles
+    from machine_telemetry_etl_ml_pipeline_spark.registry.graph import count_triangles
 
     edges = {(min(a, b), max(a, b)) for a, b in raw if a != b}
     if not edges:
@@ -257,7 +257,7 @@ LABELED = st.lists(
 def test_gini_best_split_matches_bruteforce(spark, rows):
     """_gini_best_split vs an exhaustive threshold sweep in Python —
     same 1e-9 rounding, same (gini, threshold) argmin tiebreak."""
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext10 import _gini_best_split
+    from machine_telemetry_etl_ml_pipeline_spark.registry.ml import _gini_best_split
 
     df = spark.createDataFrame(rows, "q long, y long")
     got = _gini_best_split(df).collect()[0]
@@ -283,7 +283,7 @@ def test_gini_best_split_matches_bruteforce(spark, rows):
 def test_bfs_histogram_matches_python_walk(spark, raw, cap):
     """bfs_distance_histogram vs a Python BFS from the smallest
     endpoint, including the -1 bucket for nodes beyond the cap."""
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import (
+    from machine_telemetry_etl_ml_pipeline_spark.registry.graph import (
         bfs_distance_histogram,
     )
 

@@ -1,5 +1,5 @@
 """Exactness anchors for the reference-model extraction + scoring
-(ml/refmodels.py, registry_ext32.py). Every check here validates the
+(ml/refmodels.py, registry/ml.py). Every check here validates the
 extraction against REDUNDANT data stored inside the blobs themselves,
 so none depends on this repo's reading of the scoring algorithms."""
 
@@ -142,7 +142,6 @@ def test_scoring_grid_is_deterministic_and_sane():
 
 
 def test_spark_path_matches_driver_scoring_bitwise(spark):
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext32  # noqa: F401
     from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
     q = REGISTRY["ml_model_exact_scoring"]

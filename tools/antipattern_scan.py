@@ -4,7 +4,7 @@ Every round the judge greps the package for driver-side / slow-path
 shapes — `.collect()`, `.crossJoin(`, `.toPandas()`, row-at-a-time
 `F.udf`, raw `.rdd` access, `mapPartitions` — and re-verifies that
 each site is bounded by construction (1-row parameter panels, ≤20-row
-rebuilt frames, convergence probes, the documented registry_udf.py
+rebuilt frames, convergence probes, the documented registry/udf.py
 slow-path demo). The counts have been stable for rounds (r9 == r10:
 25 collect / 84 crossJoin / 6 row-UDF / 2 toPandas); what matters is
 that NEW sites don't slip in unjustified.

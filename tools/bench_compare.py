@@ -11,9 +11,9 @@ eager-collect cost). This tool mechanizes the first pass:
 - classifies each query as within the drift band (median +- band
   width) or ABOVE/BELOW it,
 - prints the outliers sorted by excess-over-drift, i.e. exactly the
-  list that needs per-query attribution (an isolated A/B via the
-  tools/ab_*.py harness pattern, or a plan diff via
-  tools/plan_audit.py).
+  list that needs per-query attribution (an isolated A/B via
+  tools/remeasure.py with module:function variants, or a plan diff
+  via tools/plan_audit.py).
 
 Accepts the raw bench.py output, the driver's BENCH_r{N}.json wrapper
 ({"parsed": {...}}), and — since r11 — a TRUNCATED driver wrapper

@@ -94,13 +94,13 @@ SKIPS = {
     ),
     "llm_semdedup_prune": (
         "skip-by-design",
-        "Frozen quadratic original (registry_ext10), labeled weak-by-design and "
+        "Frozen quadratic original (registry/llm.py), labeled weak-by-design and "
         "off the headline; the scaled replacement llm_semdedup_prune_scaled "
         "holds a direct 100x PASS row.",
     ),
     "llm_embedding_neardup": (
         "skip-by-design",
-        "Frozen quadratic original (registry_ext3); the adaptive replacement "
+        "Frozen quadratic original (registry/llm.py); the adaptive replacement "
         "llm_embedding_neardup_scaled carries the scale path.",
     ),
     "llm_dedup_components": (

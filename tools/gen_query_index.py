@@ -43,8 +43,8 @@ def main() -> None:
     for i, n in enumerate(sorted(names), 1):
         q = REGISTRY[n]
         fn = q.fn
-        mod = fn.__module__.rsplit(".", 1)[-1]
-        where = f"`{mod}.py:{fn.__code__.co_firstlineno}`"
+        path = fn.__module__.split(".", 1)[1].replace(".", "/")
+        where = f"`{path}.py:{fn.__code__.co_firstlineno}`"
         kind = "exact" if q.oracle is not None else "rows-only"
         summary = first_sentence(fn.__doc__).replace("|", "\\|")
         lines.append(f"| {i} | `{n}` | {kind} | {where} | {summary} |")

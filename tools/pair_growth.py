@@ -66,8 +66,6 @@ def main() -> None:
     from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
     from machine_telemetry_etl_ml_pipeline_spark.session import get_spark
 
-    import machine_telemetry_etl_ml_pipeline_spark.registry_ext30  # noqa: F401
-
     spark = get_spark("pair_growth")
     spark.sparkContext.setLogLevel("ERROR")
 
