@@ -12,18 +12,32 @@ Differences by design (SURVEY §3):
   columns (no SERIAL ids — see ref_surrogate_ids for the parity note);
 - ``execute_query`` is spark.sql over the registered views: the
   read-vs-write dispatch heuristic (db.py:55-75) disappears because
-  the DataFrame/writer split makes it structural.
+  the DataFrame/writer split makes it structural;
+- reads supply the schema the engine writes each table with (the
+  reference's fixed DDL, db.py:77-126), so opening a table launches no
+  Spark job to read a parquet footer; the file listing still runs per
+  read, so commits by other writers stay visible. A missing table
+  (Spark's PATH_NOT_FOUND, so URI roots work too) reads as an empty
+  frame of the same schema.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import ingest as _ingest
 from .plans import telemetry as plans
-from .schemas import PREDICTIONS, USER_QUERY_LOG
+from .schemas import PREDICTIONS, TELEMETRY_STORED, USER_QUERY_LOG
 from .session import get_spark, tune_session
+
+# Each table's schema as the engine writes it.
+_STORED = {
+    "telemetry": TELEMETRY_STORED,
+    "user_query_log": USER_QUERY_LOG,
+    "predictions": PREDICTIONS,
+}
 
 
 class TelemetryEngine:
@@ -49,16 +63,12 @@ class TelemetryEngine:
             df.createOrReplaceTempView(name)
 
     def _read_or_empty(self, name: str) -> DataFrame:
-        import os
-
-        path = self._paths[name]
-        if os.path.exists(path):
-            return self.spark.read.parquet(path)
-        schema = {
-            "telemetry": _ingest.TELEMETRY,
-            "user_query_log": USER_QUERY_LOG,
-            "predictions": PREDICTIONS,
-        }[name]
+        schema = _STORED[name]
+        try:
+            return self.spark.read.schema(schema).parquet(self._paths[name])
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
         return self.spark.createDataFrame([], schema)
 
     def telemetry(self) -> DataFrame:

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    DateType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -50,6 +51,10 @@ TELEMETRY = StructType(
         StructField("ts_epoch", LongType()),
     ]
 )
+
+# The telemetry table as stored: ``ingest.write_telemetry`` adds the
+# ``event_date`` partition column, which partition discovery appends last.
+TELEMETRY_STORED = StructType(TELEMETRY.fields + [StructField("event_date", DateType())])
 
 # CamelCase CSV header -> canonical column
 # (reference mapping project/database_and_model_tools.py:27-35)
