@@ -18,10 +18,14 @@ Differences by design (SURVEY §3):
   Spark job to read a parquet footer; the file listing still runs per
   read, so commits by other writers stay visible. A missing table
   (Spark's PATH_NOT_FOUND, so URI roots work too) reads as an empty
-  frame of the same schema.
+  frame of the same schema;
+- range reads prune ``event_date`` partitions, so they open the date
+  directories of the window, not every date stored.
 """
 
 from __future__ import annotations
+
+from datetime import datetime, timedelta, timezone
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -116,7 +120,16 @@ class TelemetryEngine:
         return plans.get_latest_telemetry(self.telemetry(), machine_id, limit)
 
     def get_telemetry_range(self, machine_id: str, start_epoch: int, end_epoch: int) -> DataFrame:
-        return plans.get_telemetry_range(self.telemetry(), machine_id, start_epoch, end_epoch)
+        """The exact ``timestamp_epoch`` window, plus an ``event_date``
+        partition filter. The writer derives ``event_date`` in its own
+        session time zone, which is within a day of the UTC date (UTC-12
+        to UTC+14), so the filter spans the UTC dates widened by one day
+        each side."""
+        day = timedelta(days=1)
+        lo = datetime.fromtimestamp(start_epoch, timezone.utc).date() - day
+        hi = datetime.fromtimestamp(end_epoch, timezone.utc).date() + day
+        window = self.telemetry().filter(F.col("event_date").between(lo, hi))
+        return plans.get_telemetry_range(window, machine_id, start_epoch, end_epoch)
 
     def get_machine_list(self) -> DataFrame:
         return plans.get_machine_list(self.telemetry())

@@ -15,6 +15,15 @@ Scale notes (100 TB posture):
   (per-partition top-k + driver merge, no global sort). The reference
   instead pulls the whole dedup'd set client-side and sorts in Python
   (/root/reference/project/db.py:247-250) — that pattern dies at scale.
+- ``sort_bounded``: a global ORDER BY over a result bounded by key
+  cardinality (one key's time window, one row per key or per group)
+  meets on one reducer and sorts there. ``orderBy`` would plan a range
+  exchange, whose partition bounds come from a sampling job that runs
+  the exchange's child once more: for a filtered fact scan, the scan
+  twice. Only the bounded output funnels to one task; the scan, the
+  aggregate or the window below it stays parallel, and the caller
+  collects those rows to the driver anyway. An unbounded sort keeps
+  ``orderBy``'s parallel range sort.
 """
 
 from __future__ import annotations
@@ -77,11 +86,22 @@ def latest_n(
     return df.filter(filter_expr).orderBy(*order).limit(n)
 
 
+def sort_bounded(df: DataFrame, *order) -> DataFrame:
+    """Global ORDER BY for a result whose size is bounded by key
+    cardinality: one key's rows, or one row per key or group. It plans
+    as one ``Exchange SinglePartition`` plus a local sort (which
+    spills), with no range-sampling job over the child. Every row of
+    ``df`` lands in one task, so never use it on an unbounded result."""
+    return df.repartition(1).sortWithinPartitions(*order)
+
+
 def range_scan(df: DataFrame, filter_expr, col: str, lo, hi, ascending: bool = True) -> DataFrame:
     """filter + BETWEEN -> ordered scan
-    (reference get_telemetry_range, project/db.py:196-202)."""
+    (reference get_telemetry_range, project/db.py:196-202). Bounded by
+    the rows one filter key holds in [lo, hi], so it sorts on one
+    reducer (sort_bounded)."""
     out = df.filter(filter_expr).filter(F.col(col).between(lo, hi))
-    return out.orderBy(F.col(col).asc() if ascending else F.col(col).desc())
+    return sort_bounded(out, F.col(col).asc() if ascending else F.col(col).desc())
 
 
 def top_k_by(df: DataFrame, metric: str, k: int = 5, ascending: bool = False,
@@ -98,8 +118,9 @@ def top_k_by(df: DataFrame, metric: str, k: int = 5, ascending: bool = False,
 
 
 def distinct_values(df: DataFrame, col: str) -> DataFrame:
-    """Dimension listing (reference get_machine_list, project/db.py:204-207)."""
-    return df.select(col).distinct().orderBy(col)
+    """Dimension listing (reference get_machine_list, project/db.py:204-207).
+    One row per distinct value, sorted on one reducer (sort_bounded)."""
+    return sort_bounded(df.select(col).distinct(), col)
 
 
 _MICRO = 1000000  # fixed-point scale for exact AVG: 6dp > the 4dp output
@@ -167,13 +188,15 @@ def grouped_stats(
     """GROUP BY comparison aggregate with ordered output
     (reference get_machine_comparison_stats, project/db.py:368-387).
     Hash aggregate: Spark does partial (map-side) + final automatically;
-    the fixed-point AVG numerator is partial-aggregable the same way."""
+    the fixed-point AVG numerator is partial-aggregable the same way.
+    The ordered output holds one row per group and sorts on one
+    reducer (sort_bounded)."""
     aggs = [F.count(F.lit(1)).alias("n")]
     aggs += [exact_avg(c, round_to).alias(f"avg_{c}") for c in avg_cols]
     aggs += [F.round(F.max(c), round_to).alias(f"max_{c}") for c in max_cols]
     out = df.groupBy(key).agg(*aggs)
     if order_by is not None:
-        out = out.orderBy(F.col(order_by).desc(), F.col(key).asc())
+        out = sort_bounded(out, F.col(order_by).desc(), F.col(key).asc())
     return out
 
 

@@ -19,6 +19,7 @@ from ..operators.core import (
     latest_n,
     latest_per_key,
     range_scan,
+    sort_bounded,
     stats,
     top_k_by,
 )
@@ -122,14 +123,15 @@ def get_lowest_fuel_machines(df, limit=5):
 def get_machines_by_status(df: DataFrame, status_filter: str) -> DataFrame:
     """ILIKE %filter% over latest-per-machine rows (reference
     project/db.py:307-336). The reference re-checks the filter
-    client-side (db.py:347-362) — semantically redundant, folded here."""
+    client-side (db.py:347-362) — semantically redundant, folded here.
+    At most one row per machine, so it sorts on one reducer."""
     dedup = latest_per_key(
         df.filter(F.col("machineid").isNotNull()).select(_DEDUP_COLS),
         "machineid",
         "timestamp_epoch",
         tiebreak="enginetemperature",
     )
-    return dedup.filter(F.col("status").ilike(f"%{status_filter}%")).orderBy("machineid")
+    return sort_bounded(dedup.filter(F.col("status").ilike(f"%{status_filter}%")), "machineid")
 
 
 def get_machine_comparison_stats(df: DataFrame) -> DataFrame:

@@ -68,6 +68,24 @@ def test_distinct_values_sorted(spark):
     assert [r.k for r in distinct_values(df, "k").collect()] == ["a", "b"]
 
 
+def test_bounded_sorts_are_total_over_shuffled_partitions(spark):
+    """The sorted operators return one total order, not per-partition
+    runs, when their input arrives in 8 shuffled partitions."""
+    rows = [(f"k{i % 23:02d}", (i * 7919) % 400, float(i % 11)) for i in range(400)]
+    df = _df(spark, rows).repartition(8)
+    assert df.rdd.getNumPartitions() == 8
+    rng = [r.t for r in range_scan(df, F.col("t") >= 0, "t", 10, 390).collect()]
+    assert rng == list(range(10, 391))
+    desc = [r.t for r in range_scan(df, F.lit(True), "t", 10, 390, ascending=False).collect()]
+    assert desc == rng[::-1]
+    keys = [r.k for r in distinct_values(df, "k").collect()]
+    assert keys == sorted({k for k, _, _ in rows})
+    got = [(r.avg_v, r.k) for r in grouped_stats(df, "k", avg_cols=["v"], order_by="avg_v").collect()]
+    assert len(got) == 23
+    assert got == sorted(got, key=lambda g: (-g[0], g[1]))
+    assert len({a for a, _ in got}) < len(got)  # ties on avg_v order by key
+
+
 def test_stats_and_grouped_stats(spark):
     df = _df(spark, [("a", 1, 1.0), ("a", 2, 3.0), ("b", 3, 5.0)])
     s = stats(df, ["v"]).head()

@@ -97,15 +97,17 @@ def test_facade_insert_and_sql(engine):
     assert len(got) == 1 and got[0].enginetemperature == 90.5
 
 
-# Jobs each served read kind launches on the fixture, collected: one
-# fewer than a read that infers the parquet schema (a footer job).
+# Jobs each served read kind launches on the fixture, collected. No
+# read infers the parquet schema (a footer job), and no sorted read
+# runs a range-sampling job: bounded results sort on one reducer.
 _READ_JOB_BUDGET = {
     "latest": 1,
-    "range": 3,
+    "range": 2,
+    "machine_list": 3,
     "highest_temp": 2,
     "lowest_humidity": 2,
-    "by_status": 4,
-    "comparison": 4,
+    "by_status": 3,
+    "comparison": 3,
     "stats": 2,
 }
 

@@ -374,3 +374,65 @@ def test_pagerank_edge_join_is_shuffle_hash(spark, queries):
         queries["graph_pagerank"](spark, SF)
     joined = "\n===\n".join(plans)
     assert "ShuffledHashJoin" in joined, joined
+
+
+@pytest.fixture(scope="module")
+def served(spark, telemetry_csv, tmp_path_factory):
+    """The engine facade over the ingested fixture, and its sorted
+    reads as plan builders."""
+    from machine_telemetry_etl_ml_pipeline_spark.engine import TelemetryEngine
+
+    eng = TelemetryEngine(str(tmp_path_factory.mktemp("served_root")), spark=spark)
+    eng.ingest_csv(telemetry_csv)
+    start = 1756684800  # 9/1/2025 0:00 UTC
+    return {
+        "range": lambda: eng.get_telemetry_range("M002", start, start + 30 * 3600),
+        "by_status": lambda: eng.get_machines_by_status("maint"),
+        "comparison": eng.get_machine_comparison_stats,
+        "machine_list": eng.get_machine_list,
+    }
+
+
+def _node(line: str) -> str:
+    """The operator name on one line of a plan tree."""
+    body = line.lstrip(" :+-")
+    if body.startswith("*("):
+        body = body.split(") ", 1)[1]
+    return body.split(" ", 1)[0].split("(", 1)[0]
+
+
+# The first two operators under each sorted read's SinglePartition
+# exchange (Projects skipped): the key filter over the scan, the status
+# filter over the latest-per-machine window, the final aggregate over
+# its hash exchange.
+_UNDER_SINGLE = {
+    "range": ["Filter", "FileScan"],
+    "by_status": ["Filter", "Window"],
+    "comparison": ["HashAggregate", "Exchange"],
+    "machine_list": ["HashAggregate", "Exchange"],
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_UNDER_SINGLE))
+def test_served_sort_has_no_range_sampling(spark, served, kind):
+    """A sorted served read is bounded by key cardinality, so its ORDER
+    BY meets on one reducer: no range exchange (whose sampling job runs
+    the child twice). The one SinglePartition exchange sits over the
+    key filter, the aggregate or the window, never over a bare scan."""
+    plan = plan_of(served[kind]())
+    assert "rangepartitioning" not in plan.lower()
+    lines = plan.splitlines()
+    at = [i for i, line in enumerate(lines) if "Exchange SinglePartition" in line]
+    assert len(at) == 1, plan
+    below = [line for line in lines[at[0] + 1:] if _node(line) != "Project"]
+    assert [_node(line) for line in below[:2]] == _UNDER_SINGLE[kind], plan
+    if kind == "range":
+        assert "(machineid#" in below[0] and "= M002)" in below[0], below[0]
+
+
+def test_served_range_prunes_event_date(spark, served):
+    """The range read prunes event_date partitions to its window
+    (9/1 0:00 to 9/2 6:00 UTC), widened by one day each side."""
+    plan = plan_of(served["range"]())
+    pruned = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert ">= 2025-08-31" in pruned and "<= 2025-09-03" in pruned, pruned
