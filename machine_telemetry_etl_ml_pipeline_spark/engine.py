@@ -20,7 +20,13 @@ Differences by design (SURVEY §3):
   (Spark's PATH_NOT_FOUND, so URI roots work too) reads as an empty
   frame of the same schema;
 - range reads prune ``event_date`` partitions, so they open the date
-  directories of the window, not every date stored.
+  directories of the window, not every date stored;
+- the ``get_*`` reads run on a clone of the caller's session with AQE
+  off, so each collected read is one Spark job, not one per shuffle
+  exchange; the join-free served plans gain nothing from AQE (SCALE.md
+  "Served reads run without AQE"). Ingest, ``insert_telemetry``, the
+  log appends, ``init_db``/``execute_query`` and
+  ``verify_database_setup`` keep the caller's session and its AQE.
 """
 
 from __future__ import annotations
@@ -50,6 +56,8 @@ class TelemetryEngine:
 
     def __init__(self, root: str, spark: SparkSession | None = None):
         self.spark = tune_session(spark or get_spark("telemetry-engine"))
+        self._serving = tune_session(self.spark.newSession())
+        self._serving.conf.set("spark.sql.adaptive.enabled", "false")
         self.root = root.rstrip("/")
         self._paths = {
             "telemetry": f"{self.root}/telemetry",
@@ -66,17 +74,19 @@ class TelemetryEngine:
             df = self._read_or_empty(name)
             df.createOrReplaceTempView(name)
 
-    def _read_or_empty(self, name: str) -> DataFrame:
+    def _read_or_empty(self, name: str, spark: SparkSession | None = None) -> DataFrame:
+        spark = spark or self.spark
         schema = _STORED[name]
         try:
-            return self.spark.read.schema(schema).parquet(self._paths[name])
+            return spark.read.schema(schema).parquet(self._paths[name])
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
-        return self.spark.createDataFrame([], schema)
+        return spark.createDataFrame([], schema)
 
     def telemetry(self) -> DataFrame:
-        return self._read_or_empty("telemetry")
+        """The telemetry table on the serving session (AQE off)."""
+        return self._read_or_empty("telemetry", self._serving)
 
     # --- ingest (reference DataIngestor, database_and_model_tools.py) ----
 

@@ -9,8 +9,11 @@ Scale notes (100 TB posture):
 - ``latest_per_key``: one shuffle on the key, per-partition sort,
   row_number filter. Spark plans this as a single Window over a
   hash-partitioned sort — the shuffle is unavoidable for exact
-  semantics; AQE handles skewed keys. For a single payload column,
-  ``max_by`` (no sort, partial-aggregable) is the cheaper path.
+  semantics. A hot key is bounded by the partial ``WindowGroupLimit``
+  below the shuffle, which keeps one row per key per map task (SCALE.md
+  "Latest-per-key"); AQE's skew handling covers joins and rebalances
+  only, not this exchange. For a single payload column, ``max_by`` (no
+  sort, partial-aggregable) is the cheaper path.
 - ``top_k_by``: orderBy().limit() folds to TakeOrderedAndProject
   (per-partition top-k + driver merge, no global sort). The reference
   instead pulls the whole dedup'd set client-side and sorts in Python
@@ -162,11 +165,10 @@ def exact_avg(col: str, round_to: int = 4):
     return units / F.lit(float(10**round_to))
 
 
-def stats(df: DataFrame, metrics: Sequence[str], round_to: int = 4) -> DataFrame:
-    """Ungrouped scalar aggregate: COUNT(*) + MIN/MAX/AVG per metric
-    (reference get_telemetry_stats, project/db.py:209-233). AVG rides
-    the exact fixed-point path (exact_avg); MIN/MAX pass a single
-    stored double through and need no armor."""
+def stats_columns(metrics: Sequence[str], round_to: int = 4) -> list:
+    """The aggregate columns of ``stats``: COUNT(*) + MIN/MAX/AVG per
+    metric, for a caller that adds its own aggregates to the same
+    single pass."""
     aggs = [F.count(F.lit(1)).alias("n")]
     for m in metrics:
         aggs += [
@@ -174,7 +176,15 @@ def stats(df: DataFrame, metrics: Sequence[str], round_to: int = 4) -> DataFrame
             F.round(F.max(m), round_to).alias(f"max_{m}"),
             exact_avg(m, round_to).alias(f"avg_{m}"),
         ]
-    return df.agg(*aggs)
+    return aggs
+
+
+def stats(df: DataFrame, metrics: Sequence[str], round_to: int = 4) -> DataFrame:
+    """Ungrouped scalar aggregate: COUNT(*) + MIN/MAX/AVG per metric
+    (reference get_telemetry_stats, project/db.py:209-233). AVG rides
+    the exact fixed-point path (exact_avg); MIN/MAX pass a single
+    stored double through and need no armor."""
+    return df.agg(*stats_columns(metrics, round_to))
 
 
 def grouped_stats(

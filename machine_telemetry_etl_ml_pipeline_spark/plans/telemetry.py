@@ -21,6 +21,7 @@ from ..operators.core import (
     range_scan,
     sort_bounded,
     stats,
+    stats_columns,
     top_k_by,
 )
 
@@ -52,14 +53,13 @@ def get_machine_list(df: DataFrame) -> DataFrame:
 
 
 def get_telemetry_stats(df: DataFrame, machine_id: str | None = None) -> DataFrame:
-    """reference project/db.py:209-233; unfiltered branch adds
-    COUNT(DISTINCT machineid) (db.py:230)."""
+    """reference project/db.py:209-233; the unfiltered branch adds
+    COUNT(DISTINCT machineid) to the same aggregate, one scan, as the
+    reference's single SELECT does (db.py:230)."""
     metrics = ["enginetemperature", "humidity", "vibrationlevel"]
     if machine_id is not None:
         return stats(df.filter(F.col("machineid") == machine_id), metrics)
-    base = stats(df, metrics)
-    n_machines = df.agg(F.countDistinct("machineid").alias("n_machines"))
-    return base.crossJoin(n_machines)
+    return df.agg(*stats_columns(metrics), F.countDistinct("machineid").alias("n_machines"))
 
 
 def latest_per_machine(df: DataFrame) -> DataFrame:

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import functools
 import itertools
 
 import pytest
 
 from machine_telemetry_etl_ml_pipeline_spark.engine import TelemetryEngine
+from machine_telemetry_etl_ml_pipeline_spark.plans import telemetry as plans
 
 _GROUPS = itertools.count()
 
@@ -21,25 +23,41 @@ def _jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _row_reads(eng):
-    """Every row-returning get_* read, as builders with fixture-shaped
-    arguments (building one may itself launch jobs)."""
-    start = 1756684800  # 9/1/2025 0:00 UTC, the fixture's first hour
-    return {
-        "latest": lambda: eng.get_latest_telemetry("M002", 1),
-        "range": lambda: eng.get_telemetry_range("M002", start, start + 30 * 3600),
-        "machine_list": eng.get_machine_list,
-        "highest_temp": eng.get_highest_temperature_machines,
-        "highest_humidity": eng.get_highest_humidity_machines,
-        "highest_vibration": eng.get_highest_vibration_machines,
-        "highest_fuel": eng.get_highest_fuel_machines,
-        "lowest_temp": eng.get_lowest_temperature_machines,
-        "lowest_humidity": eng.get_lowest_humidity_machines,
-        "lowest_vibration": eng.get_lowest_vibration_machines,
-        "lowest_fuel": eng.get_lowest_fuel_machines,
-        "by_status": lambda: eng.get_machines_by_status("maint"),
-        "comparison": eng.get_machine_comparison_stats,
-    }
+_START = 1756684800  # 9/1/2025 0:00 UTC, the fixture's first hour
+
+# Every row-returning get_* read: the engine method's name, which is
+# also its plans.telemetry builder's, and fixture-shaped arguments.
+_READS = {
+    "latest": ("get_latest_telemetry", ("M002", 1)),
+    "range": ("get_telemetry_range", ("M002", _START, _START + 30 * 3600)),
+    "machine_list": ("get_machine_list", ()),
+    "highest_temp": ("get_highest_temperature_machines", ()),
+    "highest_humidity": ("get_highest_humidity_machines", ()),
+    "highest_vibration": ("get_highest_vibration_machines", ()),
+    "highest_fuel": ("get_highest_fuel_machines", ()),
+    "lowest_temp": ("get_lowest_temperature_machines", ()),
+    "lowest_humidity": ("get_lowest_humidity_machines", ()),
+    "lowest_vibration": ("get_lowest_vibration_machines", ()),
+    "lowest_fuel": ("get_lowest_fuel_machines", ()),
+    "by_status": ("get_machines_by_status", ("maint",)),
+    "comparison": ("get_machine_comparison_stats", ()),
+}
+# ... and both branches of the stats read.
+_ALL_READS = dict(
+    _READS,
+    stats=("get_telemetry_stats", ("M002",)),
+    stats_all=("get_telemetry_stats", ()),
+)
+
+
+def _row_reads(eng, reads=_READS):
+    """The reads as builders on ``eng`` (building one may itself launch
+    jobs)."""
+    return {k: functools.partial(getattr(eng, name), *args) for k, (name, args) in reads.items()}
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -98,26 +116,63 @@ def test_facade_insert_and_sql(engine):
 
 
 # Jobs each served read kind launches on the fixture, collected. No
-# read infers the parquet schema (a footer job), and no sorted read
-# runs a range-sampling job: bounded results sort on one reducer.
-_READ_JOB_BUDGET = {
-    "latest": 1,
-    "range": 2,
-    "machine_list": 3,
-    "highest_temp": 2,
-    "lowest_humidity": 2,
-    "by_status": 3,
-    "comparison": 3,
-    "stats": 2,
-}
+# read infers the parquet schema (a footer job), no sorted read runs a
+# range-sampling job, and the serving session runs without AQE, so no
+# shuffle exchange becomes a query stage of its own: one job per read.
+_READ_JOB_BUDGET = dict.fromkeys(
+    ["latest", "range", "machine_list", "highest_temp", "lowest_humidity", "by_status", "comparison", "stats", "stats_all"],
+    1,
+)
 
 
 def test_facade_job_budget(engine, spark):
     assert _jobs(spark, engine.telemetry) == 0
     assert _jobs(spark, engine.init_db) == 0
-    reads = dict(_row_reads(engine), stats=lambda: engine.get_telemetry_stats("M002"))
+    reads = _row_reads(engine, _ALL_READS)
     got = {k: _jobs(spark, lambda: reads[k]().collect()) for k in _READ_JOB_BUDGET}
     assert not {k for k, n in got.items() if n > _READ_JOB_BUDGET[k]}, got
+
+
+def test_serving_session_split(spark, tmp_path):
+    """The get_* reads plan on a clone of the caller's session with AQE
+    off; the caller's session keeps AQE, and so does arbitrary SQL."""
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    for key in ("spark.sql.session.timeZone", "spark.sql.shuffle.partitions"):
+        assert eng._serving.conf.get(key) == spark.conf.get(key), key
+    for kind, read in _row_reads(eng, _ALL_READS).items():
+        assert "AdaptiveSparkPlan" not in _executed_plan(read()), kind
+    grouped = eng.execute_query("SELECT machineid, count(*) AS n FROM telemetry GROUP BY machineid")
+    assert "AdaptiveSparkPlan" in _executed_plan(grouped)
+
+
+def test_serving_session_matches_caller_session(spark, telemetry_csv, tmp_path):
+    """Every row-returning read and both stats branches collect the same
+    rows on the serving session as the same plans over the caller's AQE
+    session, before and after an insert."""
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    eng.ingest_csv(telemetry_csv)
+
+    def mismatches():
+        caller = eng._read_or_empty("telemetry")
+        return {
+            kind
+            for kind, (name, args) in _ALL_READS.items()
+            if getattr(eng, name)(*args).collect() != getattr(plans, name)(caller, *args).collect()
+        }
+
+    assert mismatches() == set()
+    # M002's newest reading: it moves latest, status, stats and the rankings
+    eng.insert_telemetry(
+        {
+            "machineid": "M002",
+            "timestamp": "9/3/2025 1:00",
+            "enginetemperature": 99.5,
+            "humidity": 5.0,
+            "status": "Maintenance",
+        }
+    )
+    assert mismatches() == set()
 
 
 def test_stored_schema_round_trip(spark, telemetry_csv, tmp_path):

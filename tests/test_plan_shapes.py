@@ -401,8 +401,12 @@ def _node(line: str) -> str:
     return body.split(" ", 1)[0].split("(", 1)[0]
 
 
+# Operators the shape walk passes over: projections, and the columnar
+# transition between a filter and its scan.
+_SKIPPED = {"Project", "ColumnarToRow"}
+
 # The first two operators under each sorted read's SinglePartition
-# exchange (Projects skipped): the key filter over the scan, the status
+# exchange (_SKIPPED passed over): the key filter over the scan, the status
 # filter over the latest-per-machine window, the final aggregate over
 # its hash exchange.
 _UNDER_SINGLE = {
@@ -424,7 +428,7 @@ def test_served_sort_has_no_range_sampling(spark, served, kind):
     lines = plan.splitlines()
     at = [i for i, line in enumerate(lines) if "Exchange SinglePartition" in line]
     assert len(at) == 1, plan
-    below = [line for line in lines[at[0] + 1:] if _node(line) != "Project"]
+    below = [line for line in lines[at[0] + 1:] if _node(line) not in _SKIPPED]
     assert [_node(line) for line in below[:2]] == _UNDER_SINGLE[kind], plan
     if kind == "range":
         assert "(machineid#" in below[0] and "= M002)" in below[0], below[0]
