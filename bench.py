@@ -152,8 +152,9 @@ def main() -> None:
         # global sweep frees blocks it does not own, so it is safe
         # exactly because run_once is called strictly one-at-a-time
         # with no streaming query active; a concurrent-rep or async-
-        # sink bench variant must switch to ckpt.retire_live (which
-        # frees only the ids the just-finished entries noted). Without this sweep a
+        # sink bench variant must instead retire each finished frame's
+        # own blocks with ckpt.retire_ids(spark, ckpt.owned_ids(df)),
+        # read before the write. Without this sweep a
         # 48-query x 3-rep suite accumulates hundreds of orphaned
         # block-manager entries whose GC/bookkeeping pressure shows up
         # as the uniform ~25% drift documented in SCALE.md

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.ckpt import checkpoint_rotate, note_live, retire_ids
+from ..operators.ckpt import checkpoint_rotate, retire_ids
 
 
 def connected_components(
@@ -189,15 +189,12 @@ def connected_components(
             break
     if stats is not None:
         stats["iterations"] = rounds
-        stats["live_checkpoint_ids"] = list(round_ids)
     # the returned plan reads only the FINAL label checkpoint — the
     # zero-round `labels` derives from `nodes` alone and the looped
     # one from the last round's checkpoint, so sym's blocks can go
-    # unconditionally (round_ids stay: they back the returned frame —
-    # recorded via note_live/stats for the caller to retire after
-    # materializing).
+    # unconditionally (round_ids stay: they back the returned frame
+    # until the caller has materialized it; ckpt.owned_ids).
     retire_ids(spark, sym_ids)
-    note_live(round_ids)
     return labels.select(F.col("u").alias(id_col), F.col("label").alias("component"))
 
 

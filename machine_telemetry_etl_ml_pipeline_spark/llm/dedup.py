@@ -197,10 +197,11 @@ def lsh_candidate_pairs(
     at construction so the (expensive) shingle + minhash pipeline
     runs ONCE instead of once per join side (the r1-r12 lazy shape
     planned it twice; ReuseExchange never fired in the broadcast
-    regime). The checkpoint ids are noted via ckpt.note_live: a
-    long-running driver must call ckpt.retire_live after materializing
-    the result (bench.py sweeps with unpersist_all), and callers
-    needing lazy composition should band the signatures themselves.
+    regime). The returned frame owns that checkpoint: a long-running
+    driver frees it with ckpt.retire_ids(spark, ckpt.owned_ids(result))
+    after materializing the result (bench.py sweeps with
+    unpersist_all), and callers needing lazy composition should band
+    the signatures themselves.
 
     r14 shape (VERDICT r13 item 6): pairs are emitted per band via
     one equi-join per band key COLUMN (no band explode), and a pair
@@ -223,15 +224,14 @@ def lsh_candidate_pairs(
     mh_cols = [c for c in signatures.columns if c.startswith("mh")]
     bands = [mh_cols[i : i + rows_per_band] for i in range(0, len(mh_cols), rows_per_band)]
     band_keys = [F.md5(F.concat_ws("|", *cols)) for cols in bands]
-    from ..operators.ckpt import checkpoint_rotate, note_live
+    from ..operators.ckpt import checkpoint_rotate
 
-    keyed, ids = checkpoint_rotate(
+    keyed, _ = checkpoint_rotate(
         signatures.select(
             F.col(id_col),
             *[bk.alias(f"bk{i}") for i, bk in enumerate(band_keys)],
         )
     )
-    note_live(ids)
     parts = []
     for i in range(len(bands)):
         left = keyed.alias("l")

@@ -15,9 +15,8 @@ model/scaler pairs (SURVEY §2 M1-M6):
 - M4 anomaly detection (pyod IForest, path
   database_and_model_tools.py:154-157): no MLlib isolation forest ->
   KMeans distance score with a quantile threshold (pure Spark,
-  distributed); optional exact-parity scoring of a broadcast sklearn
-  model via pandas_udf when sklearn is importable (import-gated —
-  not in this container).
+  distributed); `reference_model_scores` replays the reference's own
+  fitted IForest blob for model-exact scores.
 
 Persistence: pipeline.write().save(path) / PipelineModel.load — the
 distributed analog of the reference's joblib dump/load.
@@ -185,48 +184,6 @@ def reference_model_scores(df: DataFrame) -> DataFrame:
             yield pdf
 
     return df.mapInPandas(score, out_schema)
-
-
-def sklearn_iforest_scores(df: DataFrame, features: list[str] | None = None) -> DataFrame:
-    """Refit-parity path for an IForest via a broadcast sklearn model
-    and an Arrow-batched pandas_udf; gated on sklearn availability
-    (absent in this container). Since r9, `reference_model_scores`
-    scores the reference's ACTUAL fitted blobs with no sklearn at all
-    — prefer it; this stays as the refit path for environments that
-    want a model trained on their own sample."""
-    try:
-        from sklearn.ensemble import IsolationForest  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env without sklearn
-        raise NotImplementedError(
-            "sklearn not available; use anomaly_pipeline/anomaly_scores "
-            "(KMeans distance) or install scikit-learn for IForest parity"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType
-
-    features = features or FEATURE_ORDER
-    # Fit sample: a seeded distributed sample capped by BYTES, not a
-    # limit() (limit funnels the head of the first partitions through
-    # one task and biases the fit toward early files; sample() scans
-    # evenly and keeps the Arrow transfer bounded regardless of row
-    # width). 8 bytes/double x n_features -> rows for a ~64 MiB draw.
-    target_rows = max(10_000, (64 << 20) // (8 * len(features)))
-    n = df.count()
-    frac = min(1.0, target_rows / max(n, 1))
-    sample = df.select(features).sample(fraction=frac, seed=42).toPandas()
-    model = IsolationForest(n_estimators=100, random_state=42).fit(sample)
-    spark = df.sparkSession
-    b_model = spark.sparkContext.broadcast(model)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DoubleType())
-    def score(*cols: pd.Series) -> pd.Series:
-        x = pd.concat(cols, axis=1)
-        return pd.Series(-b_model.value.score_samples(x))
-
-    return df.withColumn("anomaly_score", score(*[F.col(c) for c in features]))
 
 
 def smoke_test_scaler(model: PipelineModel, spark) -> list[float]:

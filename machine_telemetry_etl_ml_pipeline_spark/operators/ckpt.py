@@ -22,52 +22,58 @@ re-used (lineage is truncated; verified in tests/test_ckpt.py) —
 which is exactly the strictly-superseded contract the iterative
 operators already maintain.
 
-Safety note: id attribution snapshots the persistent-RDD id set
-around the checkpoint call, so concurrent queries checkpointing on
-the same SparkContext could interleave — and for lineage-truncated
-local checkpoints a mis-attributed unpersist is an unrecoverable
-query failure, not a slowdown. All callers here run their rounds
-sequentially on one driver thread (the loop IS the algorithm), and
-`checkpoint_rotate` ENFORCES that: a second thread entering while
-another holds the attribution window raises RuntimeError instead of
-silently corrupting a neighbor's blocks. A multi-tenant deployment
-would key the registry by job group instead.
+Ownership: a checkpointed frame carries its own block id. Eager and
+lazy `localCheckpoint` both return a frame whose plan is a single
+`LogicalRDD` over the persisted RDD, so `owned_ids(df)` reads the ids
+a frame depends on straight off its analyzed plan: the `LogicalRDD`
+leaves whose RDD is persisted. Nothing is inferred from the
+context-global persistent set, so concurrent queries on one
+SparkContext cannot cross-attribute each other's blocks, and no lock
+serializes them. In Spark 4.1 a lazy checkpoint registers its RDD
+when the frame is BUILT, not at its first action — the reason a
+before/after diff of the global set around that action attributes
+nothing. A returned frame's blocks stay persisted until its consumer
+has materialized it; a long-running driver then frees them with
+`retire_ids(spark, owned_ids(df))`, and the harnesses sweep with
+`unpersist_all`.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import plancap
-
-_ATTRIBUTION_LOCK = threading.Lock()
 
 # Reliable-checkpoint escape hatch (VERDICT r13 item 7, guide §5):
 # localCheckpoint blocks are executor-local and UNREPLICATED — on a
 # real cluster an executor loss kills every query whose lineage was
 # truncated onto that executor. Setting this env var to a
 # fault-tolerant directory (HDFS/object store) switches every
-# checkpoint_rotate call to reliable Dataset.checkpoint() against it;
-# the local default (unset) keeps localCheckpoint, whose in-memory
-# blocks are the right tradeoff for a single-node bench. Reliable
-# checkpoints live in the FS, not the block manager, so rotation/
-# retirement is a no-op for them; file cleanup is Spark's
+# checkpoint_rotate and lazy_checkpoint call to reliable
+# Dataset.checkpoint() against it; the local default (unset) keeps
+# localCheckpoint, whose in-memory blocks are the right tradeoff for a
+# single-node bench. Reliable checkpoints live in the FS, not the
+# block manager, so they own no ids and retirement is a no-op for
+# them; file cleanup is Spark's
 # spark.cleaner.referenceTracking.cleanCheckpoints (or dir TTL).
 _CKPT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
-_CKPT_DIR_SET_FOR: set = set()  # SparkContext ids already configured
+_CKPT_DIR_FOR: dict = {}  # SparkContext id -> checkpoint dir it was given
 
 
-def _reliable_dir() -> "str | None":
-    return os.environ.get(_CKPT_DIR_ENV) or None
-
-# Checkpoint ids that back a RETURNED lazy frame (the iterative
-# operators' final round). bench.py sweeps the whole block manager
-# between queries; any other long-running driver calls retire_live()
-# after materializing the frames it consumed.
-_LIVE_IDS: list = []
+def _reliable(df: DataFrame) -> bool:
+    """True when checkpoints go to SPARK_GRAFT_CHECKPOINT_DIR; points
+    the frame's SparkContext at that directory first whenever it names
+    a different one than the context was last given."""
+    ckpt_dir = os.environ.get(_CKPT_DIR_ENV)
+    if not ckpt_dir:
+        return False
+    sc = df.sparkSession.sparkContext
+    if _CKPT_DIR_FOR.get(id(sc)) != ckpt_dir:
+        sc.setCheckpointDir(ckpt_dir)
+        _CKPT_DIR_FOR[id(sc)] = ckpt_dir
+    return True
 
 
 def _jsc(spark: SparkSession):
@@ -81,64 +87,43 @@ def _jsc(spark: SparkSession):
         return None
 
 
-def _persistent_ids(spark: SparkSession) -> set:
-    jsc = _jsc(spark)
+def owned_ids(df: DataFrame) -> list:
+    """The persisted RDD ids `df` reads: the `LogicalRDD` leaves of its
+    analyzed plan whose RDD is in the context's persistent set, in
+    plan order without repeats (a self-join reads one id twice).
+    `leaf.rdd()` is the JVM plan node's RDD handle, read for its id
+    only: no rows reach Python."""
+    jsc = _jsc(df.sparkSession)
     if jsc is None:
-        return set()
-    return set(jsc.getPersistentRDDs().keySet().toArray())
+        return []
+    persistent = jsc.getPersistentRDDs()
+    ids: list = []
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() != "LogicalRDD":
+            continue
+        rid = leaf.rdd().id()
+        if rid not in ids and persistent.containsKey(rid):
+            ids.append(rid)
+    return ids
 
 
 def checkpoint_rotate(
     df: DataFrame, retire: "list | tuple" = ()
 ) -> "tuple[DataFrame, list]":
-    """Eagerly localCheckpoint `df`, then unpersist the checkpoint ids
-    in `retire` (ids from a previous call's return). Returns
-    (checkpointed_df, new_ids) — thread the ids through the loop and
-    retire each round's ids when the next round's checkpoint lands.
-    """
-    spark = df.sparkSession
-    # Id attribution diffs the context-GLOBAL persistent-RDD set, so a
-    # concurrent checkpoint on the same SparkContext would be
-    # attributed to this caller and later wrongly unpersisted. Fail
-    # loudly instead: the iterative operators are single-driver-thread
-    # by design (the loop is the algorithm).
-    if not _ATTRIBUTION_LOCK.acquire(blocking=False):
-        raise RuntimeError(
-            "checkpoint_rotate: concurrent call on one SparkContext — "
-            "id attribution would cross-attribute checkpoint blocks "
-            "(see operators/ckpt.py safety note); serialize callers "
-            "or key attribution by job group"
-        )
-    try:
-        ckpt_dir = _reliable_dir()
-        if ckpt_dir is not None:
-            sc = spark.sparkContext
-            ctx_id = id(sc)
-            if ctx_id not in _CKPT_DIR_SET_FOR:
-                sc.setCheckpointDir(ckpt_dir)
-                _CKPT_DIR_SET_FOR.add(ctx_id)
-            out = df.checkpoint(eager=True)
-            plancap.note(df)
-            # reliable checkpoints hold no block-manager ids; retiring
-            # the superseded ones stays correct (they may be local ids
-            # from before the env flip mid-process)
-            retire_ids(spark, retire)
-            return out, []
-        before = _persistent_ids(spark)
+    """Eagerly checkpoint `df`, then unpersist the checkpoint ids in
+    `retire` (ids from a previous call's return). Returns
+    (checkpointed_df, owned_ids(checkpointed_df)) — thread the ids
+    through the loop and retire each round's ids when the next round's
+    checkpoint lands."""
+    if _reliable(df):
+        out = df.checkpoint(eager=True)
+    else:
         out = df.localCheckpoint(eager=True)
-        plancap.note(df)  # finalized construction-time plan (no-op unless auditing)
-        jsc = _jsc(spark)
-        if jsc is None:
-            return out, []
-        jmap = jsc.getPersistentRDDs()
-        new_ids = [i for i in jmap.keySet().toArray() if i not in before]
-        for rid in retire:
-            r = jmap.get(rid)
-            if r is not None:
-                r.unpersist(False)
-        return out, new_ids
-    finally:
-        _ATTRIBUTION_LOCK.release()
+    plancap.note(df)  # finalized construction-time plan (no-op unless auditing)
+    retire_ids(df.sparkSession, retire)
+    return out, owned_ids(out)
 
 
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
@@ -147,15 +132,10 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     action — so an iterative loop whose per-round 1-row stats collect
     already scans the round's frame gets the checkpoint materialized
     in the SAME job (1 job/round instead of a stats job + an eager
-    checkpoint job; VERDICT r13 item 3). Pair with `attributed()`
-    around that first action to learn the block ids for rotation.
-    Honors the reliable-checkpoint escape hatch like checkpoint_rotate."""
-    ckpt_dir = _reliable_dir()
-    if ckpt_dir is not None:
-        sc = df.sparkSession.sparkContext
-        if id(sc) not in _CKPT_DIR_SET_FOR:
-            sc.setCheckpointDir(ckpt_dir)
-            _CKPT_DIR_SET_FOR.add(id(sc))
+    checkpoint job; VERDICT r13 item 3). The frame owns its id from
+    construction on (`owned_ids`). Honors the reliable-checkpoint
+    escape hatch like checkpoint_rotate."""
+    if _reliable(df):
         out = df.checkpoint(eager=False)
     else:
         out = df.localCheckpoint(eager=False)
@@ -163,30 +143,18 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     return out
 
 
-def attributed(spark: SparkSession, action):
-    """Run `action` — the FIRST action over frames built from
-    lazy_checkpoint — under the attribution lock, diffing the
-    persistent-RDD id set around it. Returns (action result, new ids).
-    Same single-driver-thread contract as checkpoint_rotate: a
-    concurrent caller raises instead of cross-attributing blocks."""
-    if not _ATTRIBUTION_LOCK.acquire(blocking=False):
-        raise RuntimeError(
-            "attributed: concurrent call on one SparkContext — id "
-            "attribution would cross-attribute checkpoint blocks "
-            "(see operators/ckpt.py safety note); serialize callers"
-        )
-    try:
-        before = _persistent_ids(spark)
-        res = action()
-        new_ids = [i for i in _persistent_ids(spark) if i not in before]
-        return res, new_ids
-    finally:
-        _ATTRIBUTION_LOCK.release()
+def attributed(df: DataFrame, action):
+    """Run `action` — the FIRST action over a frame built from
+    lazy_checkpoint, which materializes its blocks — and return
+    (action result, owned_ids(df)): the ids to retire once the next
+    round's frame has superseded `df`."""
+    return action(), owned_ids(df)
 
 
 def retire_ids(spark: SparkSession, ids) -> None:
-    """Unpersist specific checkpoint ids (end-of-loop cleanup for a
-    frame the returned plan does not reference)."""
+    """Unpersist specific checkpoint ids (a superseded round, or a
+    returned frame's `owned_ids` once its consumer has materialized
+    it)."""
     jsc = _jsc(spark)
     if jsc is None:
         return
@@ -197,26 +165,6 @@ def retire_ids(spark: SparkSession, ids) -> None:
             r.unpersist(False)
 
 
-def note_live(ids) -> None:
-    """Record checkpoint ids that back a frame being RETURNED to the
-    caller (the iterative operators' final round). The ids must stay
-    persisted until the caller materializes the frame — truncated
-    lineage cannot be recomputed — after which `retire_live` (or a
-    global `unpersist_all` sweep) frees them."""
-    _LIVE_IDS.extend(ids)
-
-
-def retire_live(spark: SparkSession) -> int:
-    """Retire every id noted via `note_live`. Call after the consumer
-    has fully materialized (collected/written) the frames it was
-    handed; returns the number retired. Long-running non-bench drivers
-    use this instead of the sledgehammer `unpersist_all`."""
-    ids = list(_LIVE_IDS)
-    _LIVE_IDS.clear()
-    retire_ids(spark, ids)
-    return len(ids)
-
-
 def unpersist_all(spark: SparkSession) -> int:
     """Free every persisted/checkpointed RDD on the context. Harness
     hygiene between independent queries (bench, long-running drivers):
@@ -224,7 +172,6 @@ def unpersist_all(spark: SparkSession) -> int:
     mid-flight anywhere on this context, since this frees blocks it
     does not own (a live lineage-truncated checkpoint dies for good).
     Returns the number retired."""
-    _LIVE_IDS.clear()  # everything is being swept anyway
     try:
         # drop SQL-cache-manager entries too: persist()-barrier entries
         # (e.g. graph_label_propagation's round caches) register both

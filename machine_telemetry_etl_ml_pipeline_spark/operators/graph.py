@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import plancap
-from .ckpt import checkpoint_rotate, note_live, retire_ids
+from .ckpt import checkpoint_rotate, retire_ids
 
 
 def pagerank(
@@ -166,10 +166,7 @@ def pagerank(
             ),
             retire=rank_ids,
         )
-    # the returned plan reads only the FINAL rank checkpoint — record
-    # it for the caller to retire after materializing
+    # the returned plan reads only the FINAL rank checkpoint, which
+    # stays live until the caller has materialized it (ckpt.owned_ids)
     retire_ids(nodes.sparkSession, e_ids + node_ids)
-    note_live(rank_ids)
-    if stats is not None:
-        stats["live_checkpoint_ids"] = list(rank_ids)
     return ranks

@@ -19,20 +19,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def join_facts_dims(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, Sequence[str] | str]],
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Equi-join a fact table against a chain of dimension tables,
-    broadcasting each dim (hash-join, no shuffle of the fact side)."""
-    out = fact
-    for dim, on in dims:
-        d = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, on=on, how="inner")
-    return out
-
-
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     """EXISTS / IN — ships only the join keys of the right side."""
     return left.join(right, on=on, how="left_semi")

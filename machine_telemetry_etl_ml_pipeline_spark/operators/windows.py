@@ -63,11 +63,6 @@ def tumbling(df: DataFrame, ts_col: str, duration: str) -> DataFrame:
     return df.withColumn("__w", F.window(ts_col, duration))
 
 
-def sliding_buckets(df: DataFrame, ts_col: str, duration: str, slide: str) -> DataFrame:
-    """Sliding window: window() emits one row per overlapping bucket."""
-    return df.withColumn("__w", F.window(ts_col, duration, slide))
-
-
 def sessionized(
     df: DataFrame,
     key: str,

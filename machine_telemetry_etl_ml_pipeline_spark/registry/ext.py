@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from ..llm.prep import md5_bucket
 from ..operators import plancap
 from ..operators.bucketing import salted_agg, save_bucketed
-from ..operators.ckpt import note_live
 from ..operators.joins import anti_join, asof_join, semi_join
 from ..operators.windows import lag_lead, ranked, running, sessionized
 from ..sources.catalog import load_table
@@ -4579,7 +4578,7 @@ def ext_equiheight_histogram(spark, sf_dir):
     # while the materialized rollup is domain-bounded (the qty x
     # retail-price grid). Outputs identical at all three SFs; local
     # A/B 1.937 -> 1.802 s min (5 interleaved reps).
-    from ..operators.ckpt import attributed, lazy_checkpoint
+    from ..operators.ckpt import lazy_checkpoint
 
     rollup = lazy_checkpoint(
         base.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
@@ -4623,8 +4622,7 @@ def ext_equiheight_histogram(spark, sf_dir):
         )
     aggs.append(F.min("n").alias("n"))
     stats_df = cum.agg(*aggs)
-    (row,), _ck_ids = attributed(spark, lambda: stats_df.collect())
-    note_live(_ck_ids)  # rollup blocks back the returned plan
+    (row,) = stats_df.collect()  # also materializes the rollup's blocks
     plancap.note(stats_df)  # construction-time plan (no-op unless auditing)
     n = int(row["n"])
     bs = []

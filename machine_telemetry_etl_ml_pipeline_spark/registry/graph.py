@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import plancap
-from ..operators.ckpt import checkpoint_rotate, lazy_checkpoint, note_live, retire_ids
+from ..operators.ckpt import checkpoint_rotate, lazy_checkpoint, owned_ids, retire_ids
 from . import _t, register
 
 
@@ -217,11 +217,11 @@ def graph_triangle_count(spark, sf_dir):
     pair-generation build per branch (measured 1.3x on the entry).
     The lazy plan is returned — the r7 eager collect-and-rebuild
     cost 20% in the isolated A/B (SCALE.md §Triangle-count eager-collect
-    A/B: eager 2.94s vs lazy 2.45s min-of-3 at sf0.1), so the checkpoint's blocks are
-    instead recorded via note_live for the consumer to retire after
-    materializing (bench's between-query sweep covers them too)."""
-    e, ids = checkpoint_rotate(_copurchase_edges(spark, sf_dir))
-    note_live(ids)
+    A/B: eager 2.94s vs lazy 2.45s min-of-3 at sf0.1), so the returned
+    frame owns the checkpoint's blocks (ckpt.owned_ids) until the
+    consumer has materialized it (bench's between-query sweep covers
+    them too)."""
+    e, _ = checkpoint_rotate(_copurchase_edges(spark, sf_dir))
     return count_triangles(e)
 
 
@@ -299,7 +299,7 @@ def bfs_distance_histogram(edges, cap: int = 8):
     # them — checkpoint the directed list once, derive both from the
     # cached blocks, then retire it (sym + the seed supersede it)
     edges, e_ids = checkpoint_rotate(edges)
-    sym, sym_ids = checkpoint_rotate(
+    sym, _ = checkpoint_rotate(
         edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     dist, dist_ids = checkpoint_rotate(
@@ -335,10 +335,9 @@ def bfs_distance_histogram(edges, cap: int = 8):
         frontier = new.select("node")
     # the returned plan reads only sym + the FINAL dist checkpoint;
     # the last frontier's blocks are no longer reachable. sym/dist
-    # must outlive the return — record them for the caller to retire
-    # once the frame is materialized.
+    # must outlive the return: the returned frame owns them
+    # (ckpt.owned_ids) until the caller has materialized it.
     retire_ids(edges.sparkSession, new_ids)
-    note_live(sym_ids + dist_ids)
     endpoints = sym.select(F.col("u").alias("node")).distinct()
     return (
         endpoints.join(dist, "node", "left")
@@ -409,14 +408,17 @@ def graph_label_propagation(spark, sf_dir):
     # sf0.001/sf0.01: 4-job shape min 1.797 s vs fused 1.725 s (and
     # an intermediate 2-job variant was a wash at 1.794) — the win is
     # three saved scheduling round-trips; at 100 TB the materialized
-    # bytes are identical and the blocks still retire on the
-    # consumer's sweep (note_live contract, as graph_triangle_count).
+    # bytes are identical. A lazy checkpoint owns its block id from
+    # construction on, so `spent` collects the ids of edges, sym and
+    # both intermediate rounds for retirement once the final eager
+    # checkpoint has landed.
     edges = lazy_checkpoint(
         _copurchase_edges(spark, sf_dir).select("u", "v")
     )
     sym = lazy_checkpoint(
         edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
+    spent = owned_ids(edges) + owned_ids(sym)
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -434,13 +436,12 @@ def graph_label_propagation(spark, sf_dir):
         if i < 2:  # cap lineage between rounds (node-sized table); the
             # last round flows straight into the community rollup.
             labels = lazy_checkpoint(labels)
+            spent += owned_ids(labels)
     # ONE eager job: materializes edges + sym + both intermediate
-    # label rounds + the final round. The returned rollup reads only
-    # the node-sized final checkpoint; every block id that appeared in
-    # this job is recorded for the caller to retire after
-    # materializing (bench's between-query sweep covers them too).
-    labels, all_ids = checkpoint_rotate(labels)
-    note_live(all_ids)
+    # label rounds + the final round, then retires the first four.
+    # The returned rollup reads only the node-sized final checkpoint,
+    # which it owns until the caller has materialized it.
+    labels, _ = checkpoint_rotate(labels, retire=spent)
     return labels.groupBy("lbl").agg(
         F.count(F.lit(1)).alias("size"),
         F.min("node").alias("min_node"),
@@ -631,10 +632,11 @@ def graph_k_core(spark, sf_dir):
     # checkpoint blocks as a side effect of the SAME job; the r13
     # shape paid a separate eager-checkpoint job (one extra read+write
     # pass over e per round, plus a scheduling round-trip).
-    # `attributed` diffs the persistent-RDD set around the collect so
-    # rotation keeps the exact retire-the-superseded discipline; the
-    # previous round's blocks retire only after the new round's blocks
-    # are live (the semi-join that produced them has already run).
+    # `attributed` returns the round frame's own block id with the
+    # collect's rows, so rotation keeps the exact retire-the-superseded
+    # discipline; the previous round's blocks retire only after the
+    # new round's blocks are live (the semi-join that produced them
+    # has already run).
     # deg stays deliberately unmaterialized: the stats collect and the
     # survivor semi-joins re-derive it from the checkpoint — measured
     # cheaper than a per-round deg checkpoint or persist
@@ -654,7 +656,7 @@ def graph_k_core(spark, sf_dir):
         st_df = deg.agg(
             F.count("*").alias("n_nodes"), F.sum("c").alias("cnt2")
         )
-        st_rows, new_ids = attributed(spark, lambda: st_df.collect())
+        st_rows, new_ids = attributed(e, lambda: st_df.collect())
         st = st_rows[0]
         plancap.note(st_df)  # construction-time plan (no-op unless auditing)
         retire_ids(spark, prev_ids)
@@ -799,9 +801,8 @@ def graph_weighted_sssp(spark, sf_dir):
         )
     # the histogram below reads only the FINAL distance checkpoint —
     # the symmetric edge list's last relaxation join already ran; the
-    # final dist blocks back the returned frame (note_live)
+    # final dist blocks back the returned frame (ckpt.owned_ids)
     retire_ids(spark, sym_ids)
-    note_live(dist_ids)
     return (
         dist.groupBy(F.expr("CAST(d DIV 500 AS BIGINT)").alias("dist_band"))
         .agg(

@@ -42,7 +42,7 @@ from ..llm.similarity import (
     random_hyperplanes,
 )
 from ..llm.textstats import words_col
-from ..operators.ckpt import checkpoint_rotate, note_live, retire_ids
+from ..operators.ckpt import checkpoint_rotate, retire_ids
 from . import _t, register
 from .ext import _HEX1, _hex_bucket_sql
 
@@ -2665,7 +2665,6 @@ def llm_mmr_rerank(spark, sf_dir):
         # next step's anti-join still reads it
         sel, sel_ids = checkpoint_rotate(sel.unionAll(nxt), retire=sel_ids)
     retire_ids(spark, _cand_ids)  # last anti-join is done
-    note_live(sel_ids)  # final greedy panel backs the returned frame
     return sel.select(
         F.col("rank").cast("long").alias("rank"),
         "vec_id",
@@ -3474,7 +3473,7 @@ def _adaptive_base(spark, sf_dir):
     docstring): the self-join in _adaptive_pairs otherwise duplicates
     the whole scan+bucket subtree per side."""
     from ..operators import plancap
-    from ..operators.ckpt import checkpoint_rotate, note_live
+    from ..operators.ckpt import checkpoint_rotate
 
     e = _t(spark, sf_dir, "embeddings")
     params_df = e.agg(
@@ -3500,8 +3499,7 @@ def _adaptive_base(spark, sf_dir):
         _as_double(F.col("embedding")).alias("v"),
         adaptive_sign_bucket(F.col("embedding"), F.lit(bits)).alias("bucket"),
     ).withColumn("nrm", norm(F.col("v")))
-    base, ids = checkpoint_rotate(base)
-    note_live(ids)
+    base, _ = checkpoint_rotate(base)
     params = spark.range(1).select(
         F.lit(bits).cast("int").alias("bits"),
         F.lit(n_total).cast("long").alias("n_total"),

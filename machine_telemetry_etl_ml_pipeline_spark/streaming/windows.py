@@ -35,17 +35,6 @@ EVENTS_STREAM_SCHEMA = StructType(
 )
 
 
-def use_rocksdb_state_store(spark: SparkSession) -> None:
-    """Opt into the RocksDB state store provider (runtime-settable).
-    The default HDFS-backed store keeps all state on the JVM heap —
-    fine for tests; at 100 TB/day stream volume, keyed state (sessions,
-    dedup horizons) must spill, which is exactly what RocksDB provides."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-
 def file_stream(spark: SparkSession, dir_path: str, schema: StructType | None = None) -> DataFrame:
     """File-source stream over a parquet directory (new files become
     micro-batches — the continuous twin of the batch catalog read)."""
@@ -65,17 +54,6 @@ def tumbling_counts(stream: DataFrame, duration: str = "1 hour", watermark: str 
         .groupBy(F.window("ts", duration).alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "n", "sum_value")
-    )
-
-
-def sliding_counts(
-    stream: DataFrame, duration: str = "1 hour", slide: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
     )
 
 

@@ -1,6 +1,8 @@
 """Checkpoint-rotation hygiene (operators/ckpt.py).
 
-Pins the three facts the iterative operators rely on:
+Pins the facts the iterative operators rely on:
+- a checkpointed frame owns its block ids, eager or lazy, from the
+  moment it is built (`owned_ids` reads them off the plan),
 - rotating retires the superseded checkpoint's blocks (the leak
   measured in the module docstring cannot regress silently),
 - the frame checkpointed LAST stays fully usable after its
@@ -18,6 +20,8 @@ from pyspark.sql import functions as F
 
 from machine_telemetry_etl_ml_pipeline_spark.operators.ckpt import (
     checkpoint_rotate,
+    lazy_checkpoint,
+    owned_ids,
     retire_ids,
     unpersist_all,
 )
@@ -40,6 +44,26 @@ def test_rotate_retires_superseded_blocks(spark):
     assert c2.count() == 5
     assert c2.agg(F.sum("count")).collect()[0][0] == 10_000
     unpersist_all(spark)
+
+
+def test_frames_own_their_checkpoint_ids(spark):
+    unpersist_all(spark)
+    eager, eager_ids = checkpoint_rotate(spark.range(100).select("id"))
+    assert eager_ids == owned_ids(eager) == _persistent(spark)
+    assert len(eager_ids) == 1
+    # a lazy checkpoint registers its RDD when the frame is built, so
+    # it owns its id before any action has run
+    lazy = lazy_checkpoint(spark.range(50).select(F.col("id").alias("k")))
+    (lazy_id,) = owned_ids(lazy)
+    assert set(_persistent(spark)) == {*eager_ids, lazy_id}
+    # a frame reads each id once, however often the plan repeats it
+    both = eager.join(lazy, eager.id == lazy.k).crossJoin(lazy.select(F.col("k").alias("k2")))
+    assert owned_ids(both) == [*eager_ids, lazy_id]
+    assert both.count() == 50 * 50
+    # an RDD-backed frame that was never persisted owns nothing
+    assert owned_ids(spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "x long")) == []
+    retire_ids(spark, owned_ids(both))
+    assert _persistent(spark) == []
 
 
 def test_retired_frame_is_dead(spark):
@@ -139,5 +163,30 @@ def test_reliable_checkpoint_escape_hatch(spark, tmp_path, monkeypatch):
     # chained rotation with an empty retire list stays a no-op
     out2, ids2 = checkpoint_rotate(out.groupBy("k").count(), retire=ids)
     assert ids2 == [] and out2.count() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
+    unpersist_all(spark)
+
+
+def test_second_checkpoint_dir_is_honored(spark, tmp_path, monkeypatch):
+    """Pointing SPARK_GRAFT_CHECKPOINT_DIR at a new directory mid-process
+    moves the next checkpoints there, for both checkpoint entry points."""
+    import os as _os
+
+    def files_under(d):
+        return [f for _, _, fs in _os.walk(d) for f in fs]
+
+    unpersist_all(spark)
+    df = spark.range(1_000).select("id", (F.col("id") % 3).alias("k"))
+    first, second = str(tmp_path / "first"), str(tmp_path / "second")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", first)
+    assert checkpoint_rotate(df)[0].count() == 1_000
+    assert files_under(first)
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", second)
+    n_first = len(files_under(first))
+    assert checkpoint_rotate(df.groupBy("k").count())[0].count() == 3
+    assert files_under(second), "checkpoint ignored the second directory"
+    lazy = lazy_checkpoint(df.where(F.col("k") == 1))
+    assert lazy.count() == 333
+    assert len(files_under(first)) == n_first
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
     unpersist_all(spark)
