@@ -172,14 +172,9 @@ def main() -> None:
     # inflating rep 1 of the counted interleave. The old methodology
     # (one cheap-query warm-up only) kept those costs inside min-of-3,
     # which made catalog-sensitive entries flap across driver rounds
-    # (VERDICT r12 "What's wrong" item 2). Disable with
-    # SPARK_GRAFT_BENCH_WARMUP=0 to reproduce the old protocol.
-    if os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0":
-        for name in HEADLINE:
-            run_once(name)
-    else:
-        # legacy: JVM/codegen warm-up on a cheap query only
-        run_once("ref_filter_range")
+    # (VERDICT r12 "What's wrong" item 2).
+    for name in HEADLINE:
+        run_once(name)
 
     # best-of-N per query: single runs swing ±20-100% with JIT warmup
     # and ambient machine load (measured r5: first rep of a query can
@@ -252,11 +247,7 @@ def main() -> None:
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
         "master": spark.sparkContext.master,
         "sf_dir": sf_dir,
-        "warmup": (
-            "per-entry"
-            if os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
-            else "legacy-single"
-        ),
+        "warmup": "per-entry",
         "compare_to_prev": compare,
     }
     # In-tree twin of the driver artifact (VERDICT r10 item 4): the

@@ -44,8 +44,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import plancap
-
 # Reliable-checkpoint escape hatch (VERDICT r13 item 7, guide §5):
 # localCheckpoint blocks are executor-local and UNREPLICATED — on a
 # real cluster an executor loss kills every query whose lineage was
@@ -121,7 +119,6 @@ def checkpoint_rotate(
         out = df.checkpoint(eager=True)
     else:
         out = df.localCheckpoint(eager=True)
-    plancap.note(df)  # finalized construction-time plan (no-op unless auditing)
     retire_ids(df.sparkSession, retire)
     return out, owned_ids(out)
 
@@ -136,11 +133,8 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     construction on (`owned_ids`). Honors the reliable-checkpoint
     escape hatch like checkpoint_rotate."""
     if _reliable(df):
-        out = df.checkpoint(eager=False)
-    else:
-        out = df.localCheckpoint(eager=False)
-    plancap.note(df)
-    return out
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
 
 def attributed(df: DataFrame, action):

@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import plancap
 from .ckpt import checkpoint_rotate, retire_ids
 
 
@@ -49,12 +48,7 @@ def pagerank(
 
     raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     if small_graph_threshold > 0:
-        # limit+collect instead of take(): same CollectLimit execution,
-        # but on THIS handle so the plan audit can capture the edge
-        # build that runs inside it
-        taken_df = raw.limit(small_graph_threshold + 1)
-        taken = taken_df.collect()
-        plancap.note(taken_df)
+        taken = raw.take(small_graph_threshold + 1)
     else:
         taken = []
 
@@ -98,13 +92,10 @@ def pagerank(
                 )
             )
             prow = probe_df.collect()[0]
-            plancap.note(probe_df)
             n_nodes = int(prow["n"])
             members = set(prow["members"])
         else:
-            n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
-            n_nodes = n_df.collect()[0][0]
-            plancap.note(n_df)
+            n_nodes = nodes.agg(F.count(F.lit(1)).alias("n")).collect()[0][0]
             members = set()
         teleport = (1.0 - damping) / n_nodes
         rank = {u: 1.0 / n_nodes for u in members}
@@ -132,9 +123,7 @@ def pagerank(
 
     if stats is not None:
         stats["strategy"] = "distributed"
-    n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
-    n_nodes = n_df.collect()[0][0]
-    plancap.note(n_df)  # construction-time plan (no-op unless auditing)
+    n_nodes = nodes.agg(F.count(F.lit(1)).alias("n")).collect()[0][0]
     teleport = (1.0 - damping) / n_nodes
     # checkpoint the raw edge list before the degree join references
     # it twice (build + probe side), then retire it once the joined

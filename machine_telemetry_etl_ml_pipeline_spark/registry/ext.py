@@ -23,7 +23,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..llm.prep import md5_bucket
-from ..operators import plancap
 from ..operators.bucketing import salted_agg, save_bucketed
 from ..operators.joins import anti_join, asof_join, semi_join
 from ..operators.windows import lag_lead, ranked, running, sessionized
@@ -4621,9 +4620,7 @@ def ext_equiheight_histogram(spark, sf_dir):
             ).alias(f"hi{p}")
         )
     aggs.append(F.min("n").alias("n"))
-    stats_df = cum.agg(*aggs)
-    (row,) = stats_df.collect()  # also materializes the rollup's blocks
-    plancap.note(stats_df)  # construction-time plan (no-op unless auditing)
+    (row,) = cum.agg(*aggs).collect()  # also materializes the rollup's blocks
     n = int(row["n"])
     bs = []
     for p in range(1, 10):

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators import plancap
 from ..operators.ckpt import checkpoint_rotate, lazy_checkpoint, owned_ids, retire_ids
 from . import _t, register
 
@@ -658,7 +657,6 @@ def graph_k_core(spark, sf_dir):
         )
         st_rows, new_ids = attributed(e, lambda: st_df.collect())
         st = st_rows[0]
-        plancap.note(st_df)  # construction-time plan (no-op unless auditing)
         retire_ids(spark, prev_ids)
         prev_ids = new_ids
         rows.append((i, int(st["n_nodes"]), int(st["cnt2"] or 0) // 2))

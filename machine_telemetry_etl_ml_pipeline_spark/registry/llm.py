@@ -3472,19 +3472,16 @@ def _adaptive_base(spark, sf_dir):
     localCheckpointed per the r13 multiplicity fix (module
     docstring): the self-join in _adaptive_pairs otherwise duplicates
     the whole scan+bucket subtree per side."""
-    from ..operators import plancap
     from ..operators.ckpt import checkpoint_rotate
 
     e = _t(spark, sf_dir, "embeddings")
-    params_df = e.agg(
+    row = e.agg(
         F.count(F.lit(1)).alias("n"), F.sum("vec_id").cast("long").alias("sum_ids")
     ).select(
         adaptive_bits_expr(F.col("n"), _TARGET_BUCKET).alias("bits"),
         F.col("n").cast("long").alias("n_total"),
         "sum_ids",
-    )
-    row = params_df.collect()[0]  # bounded 1-row collect
-    plancap.note(params_df)
+    ).collect()[0]  # bounded 1-row collect
     if not row["n_total"]:
         # empty source table: log2(0) makes bits/sum_ids NULL and the
         # int() casts below would raise a bare TypeError (ADVICE r13).

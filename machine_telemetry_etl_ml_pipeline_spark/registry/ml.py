@@ -20,7 +20,6 @@ from ..llm.prep import md5_bucket
 from ..llm.similarity import _as_double, dot, norm
 from ..llm.textstats import words_col
 from ..ml import refmodels
-from ..operators import plancap
 from . import _t, register
 from .ext import _CENTS, _DEC
 from .llm import _HEXPOS
@@ -626,15 +625,13 @@ def ml_logistic_regression_gd(spark, sf_dir):
     Python doubles — the same IEEE ops the old 1-row Spark projection
     applied."""
     li = _t(spark, sf_dir, "lineitem")
-    st_df = li.agg(
+    st = li.agg(
         F.round(F.avg("l_quantity"), 9).alias("m1"),
         F.round(F.stddev_pop("l_quantity"), 9).alias("s1"),
         F.round(F.avg("l_discount"), 9).alias("m2"),
         F.round(F.stddev_pop("l_discount"), 9).alias("s2"),
         F.count("*").cast("double").alias("n"),
-    )
-    st = st_df.collect()[0]
-    plancap.note(st_df)  # construction-time plan (no-op unless auditing)
+    ).collect()[0]
     n = float(st["n"])
     d = li.select(
         F.when(F.col("l_returnflag") == "R", 1.0).otherwise(0.0).alias("y"),
@@ -642,24 +639,20 @@ def ml_logistic_regression_gd(spark, sf_dir):
         ((F.col("l_discount") - F.lit(float(st["m2"]))) / F.lit(float(st["s2"]))).alias("x2"),
     )
     # step 1: sigmoid(0) = 0.5 exactly
-    g_df = d.agg(
+    g = d.agg(
         F.round(F.sum(F.lit(0.5) - F.col("y")) / F.lit(n), 9).alias("g0"),
         F.round(F.sum((F.lit(0.5) - F.col("y")) * F.col("x1")) / F.lit(n), 9).alias("ga"),
         F.round(F.sum((F.lit(0.5) - F.col("y")) * F.col("x2")) / F.lit(n), 9).alias("gb"),
-    )
-    g = g_df.collect()[0]
-    plancap.note(g_df)
+    ).collect()[0]
     w0, wa, wb = -0.5 * g["g0"], -0.5 * g["ga"], -0.5 * g["gb"]
     for _ in range(2):
         z = F.lit(w0) + F.lit(wa) * F.col("x1") + F.lit(wb) * F.col("x2")
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        g_df = d.agg(
+        g = d.agg(
             F.round(F.sum(p - F.col("y")) / F.lit(n), 9).alias("g0"),
             F.round(F.sum((p - F.col("y")) * F.col("x1")) / F.lit(n), 9).alias("ga"),
             F.round(F.sum((p - F.col("y")) * F.col("x2")) / F.lit(n), 9).alias("gb"),
-        )
-        g = g_df.collect()[0]
-        plancap.note(g_df)
+        ).collect()[0]
         w0, wa, wb = w0 - 0.5 * g["g0"], wa - 0.5 * g["ga"], wb - 0.5 * g["gb"]
     z = F.lit(w0) + F.lit(wa) * F.col("x1") + F.lit(wb) * F.col("x2")
     pred_y = F.when(F.round(z, 9) > 0, 1.0).otherwise(0.0)
@@ -2311,13 +2304,11 @@ def ml_gbt_stumps(spark, sf_dir):
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
     )
     c_dec = F.col("cents").cast(_DEC)
-    pvq_df = y.groupBy("q").agg(
+    rows = y.groupBy("q").agg(
         F.count(F.lit(1)).cast("long").alias("nv"),
         F.sum(c_dec).alias("s1"),
         F.sum(c_dec * c_dec).alias("s2"),
-    )
-    rows = pvq_df.collect()  # bounded: |distinct l_quantity| = 50
-    plancap.note(pvq_df)  # construction-time plan (no-op unless auditing)
+    ).collect()  # bounded: |distinct l_quantity| = 50
     stats = sorted((int(r["q"]), int(r["nv"]), int(r["s1"])) for r in rows)
     s2m = {int(r["q"]): int(r["s2"]) for r in rows}
     n = sum(nv for _, nv, _ in stats)
@@ -3927,13 +3918,11 @@ def ml_gmm_em_1d(spark, sf_dir):
     (extends the SQL-native iterative-ML family)."""
     cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
     orders = _t(spark, sf_dir, "orders")
-    st_df = orders.select(cents.alias("p")).agg(
+    st = orders.select(cents.alias("p")).agg(
         F.round(F.avg("p"), 9).alias("m"),
         F.round(F.stddev_pop("p"), 9).alias("s"),
         F.count("*").cast("double").alias("n"),
-    )
-    st = st_df.collect()[0]
-    plancap.note(st_df)  # construction-time plan (no-op unless auditing)
+    ).collect()[0]
     m, s, n = float(st["m"]), float(st["s"]), float(st["n"])
     d = orders.select(((cents - F.lit(m)) / F.lit(s)).alias("x"))
     wgt, mu1, v1, mu2, v2 = 0.5, -1.0, 1.0, 1.0, 1.0
@@ -3950,7 +3939,7 @@ def ml_gmm_em_1d(spark, sf_dir):
             / F.sqrt(F.lit(v2))
         )
         r = (p1 / (p1 + p2)).alias("r")
-        agg = d.select(r, x.alias("x")).agg(
+        row = d.select(r, x.alias("x")).agg(
             F.round(F.sum("r") / F.lit(n), 9).alias("wgt"),
             F.round(F.sum(F.col("r") * F.col("x")) / F.sum("r"), 9).alias("mu1"),
             F.round(
@@ -3969,9 +3958,7 @@ def ml_gmm_em_1d(spark, sf_dir):
                 * (F.sum((1 - F.col("r")) * F.col("x")) / F.sum(F.lit(1) - F.col("r"))),
                 9,
             ).alias("v2"),
-        )
-        row = agg.collect()[0]
-        plancap.note(agg)
+        ).collect()[0]
         wgt, mu1, v1, mu2, v2 = (
             float(row["wgt"]),
             float(row["mu1"]),
@@ -4269,9 +4256,7 @@ def ml_random_forest_vote(spark, sf_dir):
             .cast("long")
             .alias(f"pos{t}")
         )
-    pvw_df = hashed.groupBy("q").agg(*aggs)
-    rows = sorted(pvw_df.collect(), key=lambda r: r["q"])
-    plancap.note(pvw_df)  # construction-time plan (no-op unless auditing)
+    rows = sorted(hashed.groupBy("q").agg(*aggs).collect(), key=lambda r: r["q"])
     model = []  # per tree: (threshold, left_pred, right_pred)
     for t in range(_N_TREES):
         nt = sum(r[f"n{t}"] for r in rows)

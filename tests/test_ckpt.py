@@ -111,35 +111,23 @@ def test_unpersist_all_clears_cache_manager_entries(spark):
     assert _persistent(spark) == []
 
 
-def test_plancap_records_finalized_construction_plans(spark):
-    from machine_telemetry_etl_ml_pipeline_spark.operators import plancap
+def test_executed_plans_are_finalized(spark):
+    from tools.plan_audit import executed_plans
 
     unpersist_all(spark)
     df = spark.range(10_000).select("id", (F.col("id") % 5).alias("k"))
-    with plancap.capture() as plans:
+
+    def build():
         c1, ids1 = checkpoint_rotate(df.groupBy("k").count())
-        st_df = c1.agg(F.sum("count").alias("s"))
-        st_df.collect()
-        plancap.note(st_df)
+        c1.agg(F.sum("count").alias("s")).collect()
+        retire_ids(spark, ids1)
+
+    plans = executed_plans(spark, build)
     assert len(plans) == 2
-    # finalized executed plans, not provisional adaptive placeholders
-    assert all("isFinalPlan=true" in p or "*(" in p for p in plans)
-    retire_ids(spark, ids1)
+    # finalized executed plans with codegen markers, not provisional
+    # adaptive placeholders
+    assert all("*(" in p for p in plans), plans
     unpersist_all(spark)
-
-
-def test_plancap_noop_outside_capture(spark):
-    from machine_telemetry_etl_ml_pipeline_spark.operators import plancap
-
-    df = spark.range(10).agg(F.count("*").alias("n"))
-    df.collect()
-    plancap.note(df)  # must not raise and must record nowhere
-    with plancap.capture() as outer:
-        with plancap.capture() as inner:
-            plancap.note(df)
-        plancap.note(df)
-        assert len(inner) == 1  # nesting restores the previous sink
-        assert len(outer) == 1
 
 
 def test_reliable_checkpoint_escape_hatch(spark, tmp_path, monkeypatch):

@@ -366,14 +366,23 @@ def test_pagerank_edge_join_is_shuffle_hash(spark, queries):
     built per partition), never a broadcast of either fact-sized
     side: the planner's size estimate had been broadcasting the
     whole lineitem projection (driver-OOM shape at scale). The edge
-    build executes inside the entry's construction probe, so capture
-    it via the plan-audit notes."""
-    from machine_telemetry_etl_ml_pipeline_spark.operators import plancap
+    build executes inside the entry's construction-time take, so read
+    it from the executions the build ran."""
+    from tools.plan_audit import executed_plans
 
-    with plancap.capture() as plans:
-        queries["graph_pagerank"](spark, SF)
+    plans = executed_plans(spark, lambda: queries["graph_pagerank"](spark, SF))
     joined = "\n===\n".join(plans)
     assert "ShuffledHashJoin" in joined, joined
+
+
+def test_construction_time_take_is_audited(spark, queries):
+    """`llm_dedup_components` runs a bounded take while it builds its
+    frame; the audit must see that execution's shuffles even though no
+    code marks the site."""
+    from tools.plan_audit import executed_plans
+
+    plans = executed_plans(spark, lambda: queries["llm_dedup_components"](spark, SF))
+    assert any("Exchange" in p for p in plans), plans
 
 
 @pytest.fixture(scope="module")

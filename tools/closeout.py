@@ -11,14 +11,13 @@ Runs, in order, stopping on the first failure:
    local replication);
 3. the pytest suite;
 4. physical-plan audit with `--write` — regenerates PLANS.md's table
-   in place (and stamps the audited HEAD) so the checked-in plan
-   snapshot postdates every engine change this round;
+   in place (and stamps the hash of the audited engine code) so the
+   checked-in plan snapshot matches every engine change this round;
 5. the bench at sf0.1 — which also writes `BENCH_local.json`, the
    in-tree twin of the driver artifact (truncation armor,
    VERDICT r10 item 4);
-6. the PLANS.md freshness check (`tools/plans_fresh.py`, r12: fails
-   if any engine commit postdates the stamped audit — commit engine
-   code BEFORE running closeout, and commit PLANS.md last).
+6. the PLANS.md freshness check (`tools/plans_fresh.py`: fails if
+   the engine code differs from the code the stamped audit ran on).
 
 Steps 4-5 want an otherwise-idle machine (bench timings feed the
 round ledger); run closeout alone.

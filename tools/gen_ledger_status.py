@@ -3,7 +3,7 @@ oracle ledger (VERDICT r11 item 1: the ledger must end with a terminal
 disposition for every entry, not a dangling "recorded below").
 
 Sources, in precedence order (later tiers win; conflicts within the
-final state are surfaced, mirroring collect_ledger's conflict rule):
+final state are surfaced):
 
   1. r11 chunked full-registry logs   /tmp/ledger100/chunk_*.log
   2. r11 mop-up logs                  /tmp/ledger100/mop*.log

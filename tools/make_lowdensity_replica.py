@@ -184,8 +184,8 @@ def build(spark, src: str, out: str, copies: int) -> int:
         f"post-prune cross-copy candidate pairs = {cross_after} (expected 0); "
         "replica is NOT factorable — do not adjudicate against it"
     )
-    # machine-readable manifest so downstream tools (adjudicate_closure)
-    # read the build's offset/copies instead of trusting flag defaults
+    # machine-readable manifest so downstream tools read the build's
+    # offset/copies instead of trusting flag defaults
     import json
 
     with open(os.path.join(out, "MANIFEST.json"), "w") as fh:

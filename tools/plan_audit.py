@@ -1,35 +1,82 @@
 """Physical-plan audit over the bench headline queries.
 
-For each query: construct the frame under `operators/plancap.capture()`
-(recording the finalized executed plan of every construction-time
-action — per-round checkpoint rotations and bounded stats collects in
-the iterative entries), collect the residual frame, then summarize the
-scale-relevant plan properties over ALL of those plans — exchanges
+For each query: run one unaudited build and collect (bench.py's
+per-entry warm-up, so one-time setup such as a bucketed table's
+`saveAsTable` is not audited), then build and collect again under
+`executed_plans`, which reads the final physical plan of every SQL
+execution the call ran out of Spark's own SQL execution store. The
+last plan is the residual collect; the ones before it are the
+construction-time actions — checkpoints, bounded stats collects,
+takes — wherever in the package they run. Each row sums the
+scale-relevant plan properties over all of them: exchanges
 (shuffles), broadcast vs sort-merge joins, filter pushdown,
 whole-stage-codegen spans, scan column pruning. This is the work a
-timed run actually performs; before the capture hook (r7) the
-iterative entries' construction-time plans were invisible to the tool
-and PLANS.md carried hand-verified starred rows. Output is a markdown
-table (PLANS.md is its checked-in snapshot): the audit trail that the
-declarative plans actually compile to the physical shapes SCALE.md
-claims.
+timed run actually performs. Output is a markdown table (PLANS.md is
+its checked-in snapshot): the audit trail that the declarative plans
+actually compile to the physical shapes SCALE.md claims.
 
     python tools/plan_audit.py [--sf /root/testdata/sf0.01] [--write]
 
 `--write` splices the regenerated table into PLANS.md in place
-(header and notes prose are preserved) — the standing close-out step
-(VERDICT r10 item 1): regenerate whenever engine code changed so the
-checked-in plan snapshot always postdates the last operator change.
+(header and notes prose are preserved) and stamps it with
+`package_hash()`, which `tools/plans_fresh.py` recomputes.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+# Spark's default UI explain mode (FORMATTED) prints `* HashAggregate (7)`
+# instead of the `*(1)` codegen markers `audit()` counts.
+_EXPLAIN_MODE = "spark.sql.ui.explainMode"
+_WAIT_MS = 60_000
+
+
+def executed_plans(spark, fn) -> list[str]:
+    """Run `fn()` and return the final physical plan of every SQL
+    execution it started, in execution-id order. Spark records each
+    execution's plan in the session's SQL status store (present with
+    the UI disabled); AQE replaces it with the final plan before the
+    execution ends. Execution ids are allocated per SparkContext, so
+    nothing else may run SQL on it concurrently."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    prev_mode = spark.conf.get(_EXPLAIN_MODE)
+    spark.conf.set(_EXPLAIN_MODE, "simple")
+    try:
+        bus.waitUntilEmpty(_WAIT_MS)
+        n = store.executionsCount()
+        first = store.executionsList(n - 1, 1).head().executionId() + 1 if n else 0
+        fn()
+        bus.waitUntilEmpty(_WAIT_MS)
+    finally:
+        spark.conf.set(_EXPLAIN_MODE, prev_mode)
+    plans = []
+    while (ex := store.execution(first + len(plans))).isDefined():
+        plans.append(ex.get().physicalPlanDescription())
+    return plans
+
+
+def package_hash(root: str = REPO) -> str:
+    """sha256 over the relative path and bytes of every `*.py` of the
+    package plus `__spark_entry__.py`, walked in sorted path order: the
+    engine code a PLANS.md table was generated from."""
+    paths = [os.path.join(root, "__spark_entry__.py")]
+    for d, _, files in os.walk(os.path.join(root, "machine_telemetry_etl_ml_pipeline_spark")):
+        paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    h = hashlib.sha256()
+    for path in sorted(paths, key=lambda p: os.path.relpath(p, root)):
+        h.update(os.path.relpath(path, root).encode() + b"\0")
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
 
 
 def audit(plan: str) -> dict:
@@ -53,29 +100,15 @@ def splice_plans_md(table_lines: list[str]) -> str:
     """Replace the markdown table block in PLANS.md (first `| query |`
     header line through the last contiguous `|` row) with
     `table_lines`, preserving the prose above and below."""
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    path = os.path.join(REPO, "PLANS.md")
     lines = open(path).read().splitlines()
     start = next(i for i, l in enumerate(lines) if l.startswith("| query |"))
     end = start
     while end < len(lines) and lines[end].startswith("|"):
         end += 1
     out = lines[:start] + table_lines + lines[end:]
-    # machine-readable freshness stamp (VERDICT r11 item 2): records
-    # the HEAD the audit ran at, so tools/plans_fresh.py can fail any
-    # state where engine commits postdate the last committed audit.
-    import subprocess
-
-    head = subprocess.check_output(
-        ["git", "rev-parse", "HEAD"], cwd=os.path.dirname(path), text=True
-    ).strip()
-    dirty_pkg = subprocess.check_output(
-        ["git", "status", "--porcelain", "--",
-         "machine_telemetry_etl_ml_pipeline_spark", "__spark_entry__.py"],
-        cwd=os.path.dirname(path), text=True,
-    ).strip()
-    stamp = f"<!-- plan-audit-stamp: head={head} pkg-dirty={1 if dirty_pkg else 0} -->"
     out = [l for l in out if not l.startswith("<!-- plan-audit-stamp:")]
-    out.append(stamp)
+    out.append(f"<!-- plan-audit-stamp: package-sha256={package_hash()} -->")
     with open(path, "w") as fh:
         fh.write("\n".join(out) + "\n")
     return path
@@ -101,18 +134,13 @@ def main() -> None:
     ]
     for line in table:
         print(line, flush=True)
-    from machine_telemetry_etl_ml_pipeline_spark.operators import plancap
     from machine_telemetry_etl_ml_pipeline_spark.operators.ckpt import unpersist_all
 
     for name in bench.HEADLINE:
-        with plancap.capture() as constr_plans:
-            df = qs[name](spark, args.sf)
-            # collect, not a noop write: the write executes a CLONED
-            # QueryExecution, leaving this handle's adaptive plan
-            # un-finalized (no codegen markers, provisional join strategy)
-            df.collect()
-        plans = list(constr_plans)
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        qs[name](spark, args.sf).collect()  # unaudited warm-up
+        unpersist_all(spark)
+        # the last execution is this collect: the residual plan
+        plans = executed_plans(spark, lambda: qs[name](spark, args.sf).collect())
         parts = [audit(p) for p in plans]
         a = {
             k: (any(p[k] for p in parts) if isinstance(parts[0][k], bool)
