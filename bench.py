@@ -141,10 +141,28 @@ def main() -> None:
 
     from machine_telemetry_etl_ml_pipeline_spark.operators.ckpt import unpersist_all
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    # Spark jobs of each entry's latest run, by phase: the build (plan
+    # construction, including its construction-time checkpoints and
+    # collects) and the noop sink. Counted by job group, so the only
+    # tagging inside the timed window is the switch between the two.
+    jobs: dict[str, dict[str, int]] = {}
+
     def run_once(name: str) -> float:
+        groups = {phase: f"{name}:{phase}" for phase in ("build", "sink")}
+        seen = {p: set(tracker.getJobIdsForGroup(g)) for p, g in groups.items()}
+        sc.setJobGroup(groups["build"], groups["build"])
         t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        df = qs[name](spark, sf_dir)
+        sc.setJobGroup(groups["sink"], groups["sink"])
+        df.write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty(60_000)
+        jobs[name] = {p: len(set(tracker.getJobIdsForGroup(g)) - seen[p]) for p, g in groups.items()}
         # OUTSIDE the timed window: free the query's surviving
         # localCheckpoint blocks (iterative entries leak their final
         # round's checkpoint by construction — the returned plan needs
@@ -249,6 +267,8 @@ def main() -> None:
         "sf_dir": sf_dir,
         "warmup": "per-entry",
         "compare_to_prev": compare,
+        # Spark jobs per entry in the last counted rep, build vs sink.
+        "jobs": jobs,
     }
     # In-tree twin of the driver artifact (VERDICT r10 item 4): the
     # driver's BENCH_r10.json kept only the tail of stdout and lost

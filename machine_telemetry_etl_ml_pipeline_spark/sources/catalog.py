@@ -5,12 +5,27 @@ reference's Postgres heap tables + 6 btree indexes
 (/root/reference/project/db.py:128-135): Catalyst pushes predicates and
 projections into the scan, which at 100 TB is the difference between
 reading a column chunk and reading the table.
+
+Tables open with Spark's own inferred schema, inferred once per file:
+a bare `spark.read.parquet(path)` runs a one-task Spark job per call to
+read the footer. `_SCHEMAS` memoizes `spark.read.parquet(path).schema`
+under the file's Hadoop FileStatus — qualified path, length and
+modification time, a driver-side filesystem call that runs no job —
+plus the session confs that change the parquet-to-Catalyst type
+mapping (`_TYPE_CONFS`), and later reads pass it with
+`spark.read.schema(s)`. A rewritten file changes its length or mtime
+and is inferred again; the memo's value is a function of its key alone,
+so it is safe to share across sessions and threads. Only single files
+are memoized: a directory's schema depends on its listing, so
+directory-backed paths keep plain inference.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import TESTDATA_TABLES
 
@@ -21,6 +36,39 @@ from ..schemas import TESTDATA_TABLES
 # Spark has no nanosecond timestamp type) is still handled by the
 # bigint branch below.
 _EVENT_TS_COLS = {"events": ["ts"]}
+
+# Session confs that change which Catalyst type a parquet column infers as.
+_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` that infers a single file's schema
+    once per file status and type-mapping conf (module docstring). A
+    directory or a missing path reads, and fails, as without the memo."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    try:
+        st = fs.getFileStatus(jpath)
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        st = None
+    if st is None or not st.isFile():
+        return spark.read.parquet(path)
+    key = (st.getPath().toString(), st.getLen(), st.getModificationTime())
+    key += tuple(spark.conf.get(c) for c in _TYPE_CONFS)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(
@@ -42,7 +90,7 @@ def load_table(
         # harmless on the current micros layout; required to read a
         # legacy TIMESTAMP(NANOS) file at all
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for c in ts_cols:
         if dict(df.dtypes).get(c) == "bigint":
             # Legacy raw-nanos layout: bound the RAW int64 column (the

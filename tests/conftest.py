@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -15,6 +16,25 @@ def spark():
     s = get_spark("tests", master="local[8]", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)``: the Spark jobs launched while ``fn()`` runs,
+    counted by job group."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(fn) -> int:
+        group = f"test-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

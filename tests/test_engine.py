@@ -1,27 +1,11 @@
 from __future__ import annotations
 
 import functools
-import itertools
 
 import pytest
 
 from machine_telemetry_etl_ml_pipeline_spark.engine import TelemetryEngine
 from machine_telemetry_etl_ml_pipeline_spark.plans import telemetry as plans
-
-_GROUPS = itertools.count()
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs launched while ``fn()`` runs, counted by job group."""
-    sc = spark.sparkContext
-    group = f"test-engine-{next(_GROUPS)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
 
 _START = 1756684800  # 9/1/2025 0:00 UTC, the fixture's first hour
 
@@ -125,11 +109,11 @@ _READ_JOB_BUDGET = dict.fromkeys(
 )
 
 
-def test_facade_job_budget(engine, spark):
-    assert _jobs(spark, engine.telemetry) == 0
-    assert _jobs(spark, engine.init_db) == 0
+def test_facade_job_budget(engine, count_jobs):
+    assert count_jobs(engine.telemetry) == 0
+    assert count_jobs(engine.init_db) == 0
     reads = _row_reads(engine, _ALL_READS)
-    got = {k: _jobs(spark, lambda: reads[k]().collect()) for k in _READ_JOB_BUDGET}
+    got = {k: count_jobs(lambda: reads[k]().collect()) for k in _READ_JOB_BUDGET}
     assert not {k for k, n in got.items() if n > _READ_JOB_BUDGET[k]}, got
 
 
