@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY  # noqa: E402
-from machine_telemetry_etl_ml_pipeline_spark.session import tune_session  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -24,7 +23,6 @@ def entry(spark: SparkSession) -> DataFrame:
     over events (the reference's signature DISTINCT ON idiom,
     /root/reference/project/db.py:237-246) — scan -> shuffle -> window
     -> filter, the engine's spine."""
-    tune_session(spark)
     return REGISTRY["ref_latest_per_key"].fn(spark, "/root/testdata/sf0.001")
 
 

@@ -18,6 +18,7 @@ value hash):
 
 from __future__ import annotations
 
+import functools
 import importlib
 import pkgutil
 from collections.abc import Callable
@@ -40,16 +41,30 @@ REGISTRY: dict[str, Query] = {}
 
 
 def register(name: str, oracle: str | None):
+    """Register ``fn`` as entry ``name``. ``Query.fn`` tunes the caller's
+    session (`session.tune_session`) and then runs ``fn``: dispatch is
+    the one place an entry's conf is set. Returns ``fn`` itself."""
+
     def deco(fn):
-        REGISTRY[name] = Query(fn=fn, oracle=oracle)
+        @functools.wraps(fn)
+        def dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(tune_session(spark), sf_dir)
+
+        REGISTRY[name] = Query(fn=dispatch, oracle=oracle)
         return fn
 
     return deco
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str, ts_range=None) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name, ts_range=ts_range)
+_t = load_table
+
+
+def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register testdata tables as temp views for the spark.sql entries
+    (EP2: the SQL-string lifecycle the reference delegates to Postgres,
+    SURVEY §3)."""
+    for n in names:
+        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
 def _epoch(col: str = "ts"):

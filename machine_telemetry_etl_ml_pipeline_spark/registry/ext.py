@@ -26,8 +26,7 @@ from ..llm.prep import md5_bucket
 from ..operators.bucketing import salted_agg, save_bucketed
 from ..operators.joins import anti_join, asof_join, semi_join
 from ..operators.windows import lag_lead, ranked, running, sessionized
-from ..sources.catalog import load_table
-from . import _epoch, _t, register
+from . import _epoch, _t, _views, register
 
 
 # --- joins ---------------------------------------------------------------
@@ -693,14 +692,6 @@ def ext_session_windows(spark, sf_dir):
     )
 
 
-def _views(spark, sf_dir, *names):
-    """Register testdata tables as temp views for spark.sql entry
-    (EP2: the SQL-string lifecycle the reference delegates to Postgres,
-    SURVEY §3)."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 # --- pivot / unpivot --------------------------------------------------------
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -1297,10 +1288,7 @@ def ext_month_boundaries(spark, sf_dir):
 )
 def ext_in_subquery(spark, sf_dir):
     """IN-subquery predicate (planned as a left-semi join)."""
-    from ..sources.catalog import load_table
-
-    for n in ("orders", "customer"):
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
+    _views(spark, sf_dir, "orders", "customer")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey FROM orders

@@ -23,8 +23,6 @@ from ..operators.core import (
     stats,
     top_k_by,
 )
-from ..session import tune_session
-from ..sources.catalog import load_table
 from . import _epoch, _t, register
 
 
@@ -419,11 +417,10 @@ _TABLES_FOR_COUNT = (
 def ref_table_counts(spark, sf_dir):
     """Per-table row-count verification (reference verify_database_setup,
     database_and_model_tools.py:117-125)."""
-    tune_session(spark)
     out = None
     for t in _TABLES_FOR_COUNT:
         c = (
-            load_table(spark, sf_dir, t)
+            _t(spark, sf_dir, t)
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.lit(t).alias("tbl"), "n")
         )

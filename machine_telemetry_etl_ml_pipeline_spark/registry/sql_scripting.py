@@ -1,20 +1,11 @@
 """``ext_*`` entries for Spark SQL scripting and session state: session
 variables (DECLARE / SET VAR), EXECUTE IMMEDIATE, and compound
 BEGIN ... END scripts with loops.
-
-These entries run SQL text against temp views registered through
-``_t``, so the views see the tuned session; the ``_views`` in ``ext``
-loads the tables without tuning and is a different helper.
 """
 
 from __future__ import annotations
 
-from . import _t, register
-
-
-def _views(spark, sf_dir, *names):
-    for n in names:
-        _t(spark, sf_dir, n).createOrReplaceTempView(n)
+from . import _views, register
 
 
 @register(
@@ -114,7 +105,6 @@ def ext_sql_scripting(spark, sf_dir):
     i.e. n >= 0.75*max with no float division). Oracle: the fused
     static query — scripting changes control flow, not semantics."""
     _views(spark, sf_dir, "events")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     return spark.sql(
         """
         BEGIN
@@ -171,7 +161,6 @@ def ext_sql_scripting_loop(spark, sf_dir):
     Lloyd loops — at 100 TB you cache the cents projection across
     iterations."""
     _views(spark, sf_dir, "events")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     return spark.sql(
         """
         BEGIN

@@ -31,10 +31,8 @@ def stream_tumbling_counts(spark, sf_dir):
     semantics equal the batch semantics over the same input."""
     import uuid
 
-    from ..session import tune_session
     from ..streaming.windows import events_testdata_stream
 
-    tune_session(spark)
     stream = events_testdata_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -96,10 +94,8 @@ def stream_session_counts(spark, sf_dir):
     Spark's state-store merge was right, the oracle was wrong)."""
     import uuid
 
-    from ..session import tune_session
     from ..streaming.windows import events_testdata_stream
 
-    tune_session(spark)
     stream = events_testdata_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -162,10 +158,8 @@ def stream_stateful_user_stats(spark, sf_dir):
     as one micro-batch, so the drained update-mode output equals the
     batch aggregate — which is the oracle (exact integer-cents sums
     make the comparison bit-stable)."""
-    from ..session import tune_session
     from ..streaming.stateful import running_user_stats
 
-    tune_session(spark)
     stream = _event_stream(spark, sf_dir)
     out = running_user_stats(stream.select("user_id", "value"))
     import uuid
@@ -200,9 +194,6 @@ def stream_sliding_counts(spark, sf_dir):
     """Structured Streaming sliding window (1h / 30m slide) through an
     availableNow memory sink; oracle = the batch bucket-enumeration SQL
     (each event contributes to exactly 2 overlapping windows)."""
-    from ..session import tune_session
-
-    tune_session(spark)
     stream = _event_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -245,9 +236,6 @@ def stream_static_join(spark, sf_dir):
     """Stream-static broadcast join (dimension enrichment on a live
     stream); oracle is the equivalent batch mapping — every streamed
     row must arrive exactly once with its joined attribute."""
-    from ..session import tune_session
-
-    tune_session(spark)
     stream = _event_stream(spark, sf_dir)
     dim = spark.createDataFrame(
         [("click", 0), ("error", 1), ("purchase", 2), ("signup", 3), ("view", 4)],
@@ -268,9 +256,6 @@ def stream_dedup_within_watermark(spark, sf_dir):
     exactly-unique source the output equals the input relation
     (oracle), and state stays bounded by the watermark horizon —
     the property a replayed/at-least-once source needs."""
-    from ..session import tune_session
-
-    tune_session(spark)
     stream = _event_stream(spark, sf_dir)
     dedup = (
         stream.withWatermark("ts", "2 hours")
@@ -301,10 +286,8 @@ def stream_foreach_batch_sink(spark, sf_dir):
     rows."""
     import tempfile
 
-    from ..session import tune_session
     from ..streaming.windows import events_testdata_stream, foreach_batch_append
 
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="stream_fb_out_")
     stream = (
         events_testdata_stream(spark, sf_dir)
@@ -347,10 +330,7 @@ def stream_stream_join(spark, sf_dir):
     the relational answer."""
     import uuid
 
-    from ..session import tune_session
     from ..streaming.windows import events_testdata_stream
-
-    tune_session(spark)
 
     def side(event_type, alias):
         return (
@@ -418,9 +398,6 @@ def stream_update_mode_upsert(spark, sf_dir):
 
     from pyspark.sql.window import Window
 
-    from ..session import tune_session
-
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="stream_upd_")
     src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
     e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
@@ -497,9 +474,6 @@ def stream_topk_update_mode(spark, sf_dir):
 
     from pyspark.sql.window import Window
 
-    from ..session import tune_session
-
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="stream_topk_")
     src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
     e = _t(spark, sf_dir, "events")
@@ -580,10 +554,7 @@ def stream_stream_join_outer(spark, sf_dir):
     clicks differ)."""
     import uuid
 
-    from ..session import tune_session
     from ..streaming.windows import events_testdata_stream
-
-    tune_session(spark)
 
     def side(event_type, alias):
         return (
@@ -647,9 +618,6 @@ def stream_checkpoint_resume(spark, sf_dir):
 
     from pyspark.sql.window import Window
 
-    from ..session import tune_session
-
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="stream_resume_")
     stage, src, sink, ckpt = (
         f"{work}/stage",
@@ -739,10 +707,8 @@ def stream_chained_window_agg(spark, sf_dir):
     raw stream at 100 TB/day."""
     import uuid
 
-    from ..session import tune_session
     from ..streaming.windows import events_testdata_stream
 
-    tune_session(spark)
     stream = events_testdata_stream(spark, sf_dir)
     hourly = (
         stream.withWatermark("ts", "2 hours")
@@ -803,10 +769,8 @@ def stream_foreach_batch_idempotent(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ..session import tune_session
     from ..streaming.windows import events_testdata_stream
 
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="stream_fb_idem_")
     try:
         table = f"{work}/t"
@@ -993,10 +957,8 @@ def stream_session_dynamic_gap(spark, sf_dir):
     dynamic_gap_sessions)."""
     import uuid
 
-    from ..session import tune_session
     from ..streaming.windows import dynamic_gap_sessions, events_testdata_stream
 
-    tune_session(spark)
     agg = dynamic_gap_sessions(events_testdata_stream(spark, sf_dir))
     name = f"stream_dyn_sessions_{uuid.uuid4().hex[:8]}"
     q = (
@@ -1067,13 +1029,11 @@ def stream_stream_join_full_outer(spark, sf_dir):
     O(events within the 2h + 30min horizon), not O(history)."""
     import uuid
 
-    from ..session import tune_session
     from ..streaming.windows import (
         events_testdata_stream,
         full_outer_click_purchase_join,
     )
 
-    tune_session(spark)
     joined = full_outer_click_purchase_join(
         events_testdata_stream(spark, sf_dir)
     )

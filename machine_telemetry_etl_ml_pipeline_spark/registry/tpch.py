@@ -11,8 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from . import _t, register
-from .ext import _views
+from . import _t, _views, register
 
 
 # --- TPC-H classic shapes ------------------------------------------------------

@@ -1,9 +1,19 @@
-"""SparkSession factory.
+"""SparkSession factory and the one table of SQL confs.
 
 The reference holds one psycopg2 singleton connection
 (/root/reference/project/db.py:15-19) and delegates all planning to
 Postgres. Here the analogous shared resource is one SparkSession with
 Catalyst/AQE doing the planning.
+
+`_sql_conf()` is the session's SQL conf, applied at three boundaries
+and nowhere else:
+- `get_spark` passes it to the builder, so `newSession()` clones
+  inherit it;
+- `registry.register` tunes the caller's session once per entry
+  dispatch, before the entry body runs;
+- `TelemetryEngine` tunes its session and its serving clone.
+Table reads (`sources/catalog.load_table`) and entry bodies never set
+conf.
 
 Scale posture (100 TB target, tested on local[32]):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting and
@@ -13,6 +23,8 @@ Scale posture (100 TB target, tested on local[32]):
   coalescing with a high initial value).
 - UTC session timezone so epoch/timestamp semantics match the oracle.
 - Arrow enabled for the pandas_udf paths (ML scoring, multimodal).
+- legacy TIMESTAMP(NANOS) parquet reads as raw int64, which the
+  catalog converts; SQL scripting on for the BEGIN ... END entries.
 """
 
 from __future__ import annotations
@@ -40,41 +52,38 @@ def _shuffle_partitions(cpus: int) -> int:
     return int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
 
 
+def _sql_conf() -> dict[str, str]:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(_shuffle_partitions(cpus)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.scripting.enabled": "true",
+    }
+
+
 def get_spark(
-    app_name: str = "machine-telemetry-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+    app_name: str = "machine-telemetry-spark", master: str | None = None
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or _shuffle_partitions(cpus)
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .master(master or f"local[{cpus}]")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(map=_sql_conf())
+        .getOrCreate()
     )
-    return builder.getOrCreate()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conf to an externally provided session
-    (the driver passes its own SparkSession to ``entry``/``queries``)."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    for k, v in [
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.shuffle.partitions", str(_shuffle_partitions(cpus))),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ]:
+    """Apply `_sql_conf()` to a session the caller provides (the driver
+    passes its own SparkSession to ``entry``/``queries``)."""
+    for k, v in _sql_conf().items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -1,4 +1,4 @@
-from .catalog import load_table, load_tables, register_views
+from .catalog import load_table
 from .csv import read_telemetry_csv
 
-__all__ = ["load_table", "load_tables", "register_views", "read_telemetry_csv"]
+__all__ = ["load_table", "read_telemetry_csv"]

@@ -18,6 +18,11 @@ and is inferred again; the memo's value is a function of its key alone,
 so it is safe to share across sessions and threads. Only single files
 are memoized: a directory's schema depends on its listing, so
 directory-backed paths keep plain inference.
+
+Reads set no conf. A legacy layout that stored events.ts as
+TIMESTAMP(NANOS) reads only under `spark.sql.legacy.parquet.nanosAsLong`,
+which the tuned session carries (`session._sql_conf`): every registry
+entry runs on one, because dispatch tunes it.
 """
 
 from __future__ import annotations
@@ -26,8 +31,6 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from ..schemas import TESTDATA_TABLES
 
 # Event-time columns that ts_range bounds apply to. Current testdata
 # stores these as parquet TIMESTAMP(MICROS, ntz) and the predicate
@@ -85,13 +88,8 @@ def load_table(
     reference's `timestamp_epoch BETWEEN lo AND hi`: every row whose
     truncated epoch-second falls in [lo, hi] is kept, i.e.
     lo <= ts < hi+1."""
-    ts_cols = _EVENT_TS_COLS.get(name, [])
-    if ts_cols:
-        # harmless on the current micros layout; required to read a
-        # legacy TIMESTAMP(NANOS) file at all
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    for c in ts_cols:
+    for c in _EVENT_TS_COLS.get(name, []):
         if dict(df.dtypes).get(c) == "bigint":
             # Legacy raw-nanos layout: bound the RAW int64 column (the
             # converted column is an expression and cannot push), then
@@ -117,13 +115,3 @@ def load_table(
             hi = F.timestamp_seconds(F.lit(int(hi_s) + 1)).cast(col_type)
             df = df.filter((F.col(c) >= lo) & (F.col(c) < hi))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql entry."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -13,9 +13,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from machine_telemetry_etl_ml_pipeline_spark.session import get_spark
 
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("tests", master="local[8]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def shuffle_partitions(spark, monkeypatch):
+    """``shuffle_partitions(n)``: every registry entry dispatched after
+    the call plans with ``n`` shuffle partitions. Dispatch re-tunes the
+    session from SPARK_GRAFT_SHUFFLE_PARTITIONS, so a ``spark.conf.set``
+    in a test would not hold. Teardown restores the env and the
+    session."""
+    from machine_telemetry_etl_ml_pipeline_spark.session import tune_session
+
+    yield lambda n: monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(n))
+    monkeypatch.undo()
+    tune_session(spark)
 
 
 @pytest.fixture(scope="session")

@@ -13,18 +13,37 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from machine_telemetry_etl_ml_pipeline_spark.schemas import TESTDATA_TABLES
+from machine_telemetry_etl_ml_pipeline_spark.session import tune_session
 from machine_telemetry_etl_ml_pipeline_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_warm_read_launches_no_job(spark, count_jobs):
-    # events first: its load_table sets nanosAsLong, a key conf, and a
-    # table read under the other value is inferred again after the flip
-    for t in sorted(TESTDATA_TABLES, key=lambda t: t != "events"):
+    for t in TESTDATA_TABLES:
         load_table(spark, SF, t)
     got = {t: count_jobs(lambda: load_table(spark, SF, t)) for t in TESTDATA_TABLES}
     assert got == dict.fromkeys(TESTDATA_TABLES, 0)
+
+
+def test_fresh_copy_reads_warm_after_one_cold_pass(spark, count_jobs, tmp_path):
+    """Each file infers once: no read changes a type-mapping conf and
+    with it the memo key of the tables read before it."""
+    for t in TESTDATA_TABLES:
+        shutil.copy(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+    s = tune_session(spark.newSession())
+    for t in TESTDATA_TABLES:
+        load_table(s, str(tmp_path), t)
+    got = {t: count_jobs(lambda: load_table(s, str(tmp_path), t)) for t in TESTDATA_TABLES}
+    assert got == dict.fromkeys(TESTDATA_TABLES, 0)
+
+
+def test_reads_set_no_conf(spark):
+    s = tune_session(spark.newSession())
+    before = s.conf.getAll
+    for t in TESTDATA_TABLES:
+        load_table(s, SF, t)
+    assert s.conf.getAll == before
 
 
 def test_first_read_of_a_fresh_copy_infers(spark, count_jobs, tmp_path):

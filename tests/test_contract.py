@@ -2,19 +2,24 @@
 entry exactly once (an entry lost or overwritten in a module move, or
 a typo, would silently drop it from the driver's verification order),
 oracles must be a subset of queries, every oracle must mention only
-pre-registered tables, and importing the checkpoint operators must not
-import the registry."""
+pre-registered tables, importing the checkpoint operators must not
+import the registry, and dispatching an entry tunes the caller's
+session."""
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 import subprocess
 import sys
 
+import pytest
+
 import __spark_entry__ as ent
 from machine_telemetry_etl_ml_pipeline_spark.ml import refmodels
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
+from machine_telemetry_etl_ml_pipeline_spark.session import _sql_conf
 
 TABLES = set(
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -102,3 +107,21 @@ def test_oracles_reference_known_tables_only():
             and r.lower() not in {"generate_series", "unnest", "values", "range"}
         }
         assert not unknown, f"{name}: oracle references unknown tables {unknown}"
+
+
+def test_every_entry_dispatches_through_the_tuning_wrapper():
+    assert all(inspect.unwrap(q.fn) is not q.fn for q in REGISTRY.values())
+
+
+# None of these four sets conf or calls `_t` in its body, so dispatch
+# is the only thing that can tune the session they plan on.
+@pytest.mark.parametrize(
+    "name", ["tpch_q4", "ext_in_subquery", "ext_sql_tvf", "ref_ddl_create_table"]
+)
+def test_dispatch_tunes_a_detuned_session(spark, name):
+    s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    ent.queries()[name](s, "/root/testdata/sf0.001")
+    for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"):
+        assert s.conf.get(k) == _sql_conf()[k]

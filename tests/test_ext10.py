@@ -155,7 +155,7 @@ def test_incremental_join_view_merge_equals_full(spark):
     assert merged == full
 
 
-def test_pca_power_iteration_properties(spark):
+def test_pca_power_iteration_properties(spark, shuffle_partitions):
     """The 3-step estimate must be a valid Rayleigh quotient: positive,
     at most the true top eigenvalue (numpy recompute), unit-norm
     iterate, and identical under re-partitioning."""
@@ -170,13 +170,10 @@ def test_pca_power_iteration_properties(spark):
     assert row.n_dims == 16
     for c in (row.c1, row.c2, row.c3):
         assert 0 <= c <= 1
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
-        again = _run(spark, "ml_pca_power_iteration").collect()[0]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert tuple(row) == tuple(again)
+    shuffle_partitions(3)
+    df = _run(spark, "ml_pca_power_iteration")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert tuple(row) == tuple(df.collect()[0])
 
 
 def test_confusion_matrix_cells_tile_and_match_sklearn_formulas(spark):

@@ -29,7 +29,7 @@ def test_quota_sample_bounds_and_budget(spark):
     assert sampled >= 0.15 * total
 
 
-def test_quota_sample_membership_is_partition_invariant(spark):
+def test_quota_sample_membership_is_partition_invariant(spark, shuffle_partitions):
     """The sampled id-sum digest must be identical however the corpus
     is partitioned — the reproducibility property hash sampling buys
     over RNG sampling."""
@@ -37,15 +37,10 @@ def test_quota_sample_membership_is_partition_invariant(spark):
         (r.source): r.sum_sampled_ids
         for r in _run(spark, "llm_quota_sample_by_source").collect()
     }
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
-        b = {
-            (r.source): r.sum_sampled_ids
-            for r in _run(spark, "llm_quota_sample_by_source").collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    shuffle_partitions(3)
+    df = _run(spark, "llm_quota_sample_by_source")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    b = {(r.source): r.sum_sampled_ids for r in df.collect()}
     assert a == b
 
 

@@ -107,17 +107,15 @@ def test_triangle_count_matches_bruteforce(spark):
     assert (out.n_nodes, out.n_edges, out.n_triangles) == (len(nodes), len(edges), n_tri)
 
 
-def test_logreg_gd_deterministic_under_repartition(spark):
+def test_logreg_gd_deterministic_under_repartition(spark, shuffle_partitions):
     """The rounded-gradient trajectory must make the fitted weights
     identical however the input is partitioned — the determinism the
     1e-9 rounding buys over raw float sums."""
     a = _run(spark, "ml_logistic_regression_gd").collect()[0]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
-        b = _run(spark, "ml_logistic_regression_gd").collect()[0]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    shuffle_partitions(3)
+    df = _run(spark, "ml_logistic_regression_gd")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    b = df.collect()[0]
     assert tuple(a) == tuple(b)
     assert 0 <= a.n_correct <= a.n_rows
     for wv in (a.w_intercept, a.w_qty, a.w_disc):
@@ -173,14 +171,12 @@ def test_equiheight_histogram_buckets_are_balanced(spark):
         assert lo.max_cents <= hi.min_cents
 
 
-def test_kmeans_lloyd_deterministic_and_complete(spark):
+def test_kmeans_lloyd_deterministic_and_complete(spark, shuffle_partitions):
     a = sorted(tuple(r) for r in _run(spark, "ml_kmeans_lloyd").collect())
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
-        b = sorted(tuple(r) for r in _run(spark, "ml_kmeans_lloyd").collect())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    shuffle_partitions(3)
+    df = _run(spark, "ml_kmeans_lloyd")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    b = sorted(tuple(r) for r in df.collect())
     assert a == b
     assert [r[0] for r in a] == [0, 1, 2, 3]
     assert sum(r[1] for r in a) == 500  # every vector assigned exactly once

@@ -20,7 +20,8 @@ from machine_telemetry_etl_ml_pipeline_spark.operators.ckpt import unpersist_all
 SF = "/root/testdata/sf0.001"
 
 # Jobs of one warm build, measured identically in 3 fresh processes on
-# the tests' session (local[8], 8 shuffle partitions); entries not
+# the tests' session (local[8]; dispatch tunes it to
+# `session.tune_session`'s shuffle-partition count); entries not
 # listed build with 0 jobs. Lower a budget when an entry sheds a job.
 _BUILD_JOB_BUDGET = dict.fromkeys(HEADLINE, 0) | {
     "llm_lsh_candidate_pairs": 2,

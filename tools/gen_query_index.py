@@ -8,6 +8,7 @@ sentence. The machine-generated companion to COVERAGE.md's prose
 
 from __future__ import annotations
 
+import inspect
 import os
 import sys
 
@@ -42,7 +43,7 @@ def main() -> None:
     ]
     for i, n in enumerate(sorted(names), 1):
         q = REGISTRY[n]
-        fn = q.fn
+        fn = inspect.unwrap(q.fn)  # the entry body, not the dispatch wrapper
         path = fn.__module__.split(".", 1)[1].replace(".", "/")
         where = f"`{path}.py:{fn.__code__.co_firstlineno}`"
         kind = "exact" if q.oracle is not None else "rows-only"
