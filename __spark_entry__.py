@@ -35,6 +35,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # (tests/test_contract.py); ml_model_exact_scoring registers only where
 # the reference model blobs exist.
 QUERY_ORDER = (
+    "stream_foreach_batch_sink", "stream_stream_join", "stream_session_counts",
+    "stream_sliding_counts", "stream_static_join", "stream_dedup_within_watermark",
+    "stream_tumbling_counts", "stream_update_mode_upsert",
+    "stream_stateful_user_stats", "stream_topk_update_mode",
+    "stream_stream_join_outer", "stream_checkpoint_resume",
+    "stream_chained_window_agg", "stream_foreach_batch_idempotent",
+    "stream_python_datasource", "stream_session_dynamic_gap",
+    "stream_stream_join_full_outer",
     "llm_segment_dedup", "ext_salted_join", "llm_lsh_candidate_pairs",
     "llm_minhash_jaccard_estimate", "llm_dedup_keep_best", "llm_dedup_cluster_sizes",
     "llm_semdedup_prune_scaled", "llm_embedding_neardup_scaled", "graph_triangle_count",
@@ -44,7 +52,7 @@ QUERY_ORDER = (
     "llm_keyword_rake", "ml_gbt_stumps", "ml_mann_whitney_u", "graph_pagerank",
     "ml_naive_bayes_sql", "ext_intersect_all", "ext_except_all",
     "ext_collect_list_ordered", "ext_approx_top_k", "ext_window_time_range_frame",
-    "stream_foreach_batch_sink", "stream_stream_join", "llm_ann_bucket_counts",
+    "llm_ann_bucket_counts",
     "llm_fingerprint", "llm_scrub_text", "llm_repetition_stats", "tpch_q6", "tpch_q8",
     "tpch_q9", "tpch_q17", "ext_approx_count_distinct", "ext_bucketed_join_colocated",
     "ext_incremental_rollup", "ext_salted_agg", "tpch_q2", "tpch_q5", "tpch_q7",
@@ -55,8 +63,7 @@ QUERY_ORDER = (
     "llm_train_test_split", "ext_recursive_cte", "ext_variant_json", "ext_sql_udf",
     "udf_python_udtf", "ext_compact_small_files", "ext_dynamic_partition_overwrite",
     "ext_source_csv_corrupt", "ext_manifest_pruned_scan", "ext_source_orc",
-    "stream_session_counts", "stream_sliding_counts", "stream_static_join",
-    "stream_dedup_within_watermark", "ext_merge_upsert", "ext_funnel_conversion",
+    "ext_merge_upsert", "ext_funnel_conversion",
     "ext_cohort_retention", "ext_gap_islands", "ext_scd2_history",
     "ext_session_dynamic_gap", "llm_tfidf_topk_terms", "llm_winnowing_fingerprints",
     "ext_join_left_order_counts", "ext_join_semi", "ext_join_anti", "ext_join_theta",
@@ -74,14 +81,14 @@ QUERY_ORDER = (
     "ext_window_first_last", "ext_window_range_frame", "ext_array_functions",
     "ext_map_functions", "ext_regexp_functions", "ext_date_format", "ext_pivot",
     "ext_unpivot", "ext_grouping_sets", "ext_string_agg", "ext_corr_covar",
-    "ext_union_missing_cols", "ext_join_revenue_by_nation", "stream_tumbling_counts",
+    "ext_union_missing_cols", "ext_join_revenue_by_nation",
     "ml_kmeans_anomaly", "ml_gbt_regression_eval", "ml_gbt_classifier_eval",
     "ext_source_jsonl", "llm_embedding_truncate", "llm_inverted_index",
     "ext_data_profile", "ext_sample_stratified_exact", "ext_python_datasource",
     "ext_gap_fill_ffill", "ext_rolling_median", "ext_histogram",
     "ml_linear_regression_sql", "ext_fuzzy_levenshtein", "llm_multimodal_framesample",
     "ext_scd2_point_in_time_join", "ext_try_arithmetic", "llm_novel_ngram_ratio",
-    "ext_window_distinct_count", "ext_group_by_all", "stream_update_mode_upsert",
+    "ext_window_distinct_count", "ext_group_by_all",
     "ext_sql_unpivot_native", "ml_string_indexer", "llm_bm25_score",
     "llm_ann_ivf_recall", "udf_map_in_arrow", "llm_dedup_components",
     "llm_simhash_hamming_pairs", "ext_join_right", "ext_join_full_outer",
@@ -96,8 +103,8 @@ QUERY_ORDER = (
     "ref_zscore_standardize", "ext_asof_join", "ref_sink_batch_insert",
     "ref_sink_insert_defaults", "ref_sink_insert_json", "tpch_q1", "tpch_q3",
     "ref_ddl_create_table", "ref_surrogate_ids", "ext_distinct_subset", "ext_sample",
-    "ext_posexplode", "ext_month_boundaries", "stream_stateful_user_stats",
-    "ext_higher_order_funcs", "ext_sample_stratified", "stream_topk_update_mode",
+    "ext_posexplode", "ext_month_boundaries",
+    "ext_higher_order_funcs", "ext_sample_stratified",
     "llm_bigram_logprob", "llm_knn_label_accuracy", "ext_sql_tvf",
     "ext_parameterized_sql", "llm_length_bands_by_source", "ext_grouped_zscore",
     "llm_corpus_dashboard", "llm_oov_rate_by_source", "ext_dq_rule_report",
@@ -107,12 +114,12 @@ QUERY_ORDER = (
     "ext_running_distinct_users", "ext_json_nested_roundtrip", "ext_skew_metrics",
     "llm_boilerplate_prefix", "ext_mad_outliers", "ext_ewma_smoothing", "ext_crosstab",
     "ml_chi_square_assoc", "ml_fpgrowth_itemsets", "ml_als_recommend",
-    "stream_stream_join_outer", "llm_ngram_containment", "llm_char_entropy",
+    "llm_ngram_containment", "llm_char_entropy",
     "llm_source_temperature_mix", "ext_asof_join_forward", "ext_grouped_median",
     "ext_decimal_exact", "ext_bitwise_agg", "ext_null_semantics",
     "ext_lateral_view_sql", "llm_minhash_band_tuning", "ext_hll_sketch_merge",
     "ext_snapshot_time_travel", "llm_ann_filtered_topk", "ext_observation_metrics",
-    "stream_checkpoint_resume", "llm_vocab_coverage", "ext_source_xml",
+    "llm_vocab_coverage", "ext_source_xml",
     "ext_metadata_columns", "llm_bpe_merge_step", "llm_quota_sample_by_source",
     "ext_shard_balance_report", "llm_embedding_norm_stats", "llm_zipf_topk_terms",
     "ext_sql_pipe_syntax", "ext_collation_ci", "ext_autocorrelation",
@@ -125,16 +132,16 @@ QUERY_ORDER = (
     "ext_bloom_prefilter_join", "llm_weighted_sample", "llm_hashed_features",
     "ml_ks_drift", "ml_psi_drift_bins", "ml_ndcg_at_k", "ext_count_min_sketch",
     "ext_interval_merge", "ml_spearman_corr", "ml_lift_gains",
-    "stream_chained_window_agg", "ext_holt_linear", "ml_ab_ztest_conversion",
+    "ext_holt_linear", "ml_ab_ztest_conversion",
     "ml_welch_ttest", "ext_cusum_changepoint", "ext_source_text",
     "ext_session_variables", "ext_execute_immediate", "ext_sql_scripting",
-    "ext_sql_scripting_loop", "stream_foreach_batch_idempotent", "ext_aqe_skew_join",
+    "ext_sql_scripting_loop", "ext_aqe_skew_join",
     "ml_kaplan_meier", "ext_skyline_pareto", "ext_seasonal_dow_index",
     "ext_offset_clause", "ext_union_by_name", "ext_asof_join_nearest",
     "ext_mode_aggregate", "ml_quantile_pinball_eval", "ml_isotonic_regression",
     "ext_snapshot_diff_cdc", "llm_bpe_merge_iterate", "ml_ols_inference",
-    "ext_approx_top_k_sketch_merge", "stream_python_datasource",
-    "stream_session_dynamic_gap", "ext_map_higher_order", "ml_subsample_ci",
+    "ext_approx_top_k_sketch_merge",
+    "ext_map_higher_order", "ml_subsample_ci",
     "ext_asof_join_tolerance", "ml_gini_lorenz", "ml_text_classifier_e2e",
     "ml_markov_transition_matrix", "ml_mutual_information",
     "ext_sequence_pattern_vshape", "ext_resample_ohlc", "ext_interpolate_linear",
@@ -152,7 +159,7 @@ QUERY_ORDER = (
     "llm_preference_pairs", "ext_entity_blocking_fuzzy", "ext_holt_winters_seasonal",
     "ml_item_item_cosine", "llm_token_budget_fill", "ext_interval_arithmetic",
     "ext_variant_roundtrip", "ext_approx_quantile_sketch_merge",
-    "stream_stream_join_full_outer", "ml_model_exact_scoring", "ml_kfold_cv",
+    "ml_model_exact_scoring", "ml_kfold_cv",
     "ml_conformal_interval", "llm_sequence_packing", "ml_rolling_origin_backtest",
     "llm_multimodal_decode", "llm_chunk_dedup_stats", "llm_embedding_centroids",
     "llm_nearest_centroid_accuracy", "llm_vector_quantize", "udf_arrow_optimized",

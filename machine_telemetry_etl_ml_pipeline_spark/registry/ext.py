@@ -614,8 +614,8 @@ def ext_json_extract(spark, sf_dir):
     """,
 )
 def ext_tumbling_window(spark, sf_dir):
-    """Tumbling 1h aggregate — batch twin of
-    streaming/windows.tumbling_counts (same window() primitive)."""
+    """Tumbling 1h aggregate — batch twin of registry/stream.py
+    stream_tumbling_counts (same window() primitive and oracle)."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("__w"))

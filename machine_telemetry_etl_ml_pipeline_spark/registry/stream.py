@@ -4,13 +4,53 @@ Each entry runs a bounded stream over the testdata through event-time
 windows, watermarks, stateful operators, stream joins or a sink mode,
 runs it to completion, and returns the result as a batch frame, so the
 DuckDB oracle checks it against the same query in batch form.
+
+The operators and both drains live in streaming/windows.py: every
+entry opens the testdata with ``events_testdata_stream`` and drains
+through ``run_to_memory`` (naming the output mode its operators need)
+or ``foreach_batch_append``. An entry that writes files does so under
+one ``_scratch`` dir and returns ``_materialize``-d rows, so the dir
+is gone when the entry returns; those results are at most 50 rows.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
+from ..operators.core import latest_per_key
+from ..streaming.stateful import running_user_stats
+from ..streaming.windows import (
+    click_purchase_join,
+    dedup_within_watermark,
+    dynamic_gap_sessions,
+    events_testdata_stream,
+    foreach_batch_append,
+    run_to_memory,
+    session_counts,
+)
+from ..streaming.windows import stream_static_join as broadcast_enrich
 from . import _t, register
+
+
+@contextmanager
+def _scratch(prefix: str):
+    """A fresh temp dir for an entry's files, removed on exit."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _materialize(df):
+    """``df``'s rows as a local frame, so the result outlives the
+    files it was read from."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
 
 
 # --- streaming (oracle-checked through the memory sink) -----------------------
@@ -29,13 +69,9 @@ def stream_tumbling_counts(spark, sf_dir):
     availableNow memory sink and returned as a batch DataFrame — the
     ORACLE is the plain batch SQL, proving the streaming event-time
     semantics equal the batch semantics over the same input."""
-    import uuid
-
-    from ..streaming.windows import events_testdata_stream
-
-    stream = events_testdata_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", "2 hours")
+        events_testdata_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
@@ -44,16 +80,7 @@ def stream_tumbling_counts(spark, sf_dir):
             "sum_value",
         )
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 @register(
@@ -92,55 +119,10 @@ def stream_session_counts(spark, sf_dir):
     from the row the cumsum visits first (the 10x replica's 10
     duplicate-ts copies exposed this as 4 misassigned sessions —
     Spark's state-store merge was right, the oracle was wrong)."""
-    import uuid
-
-    from ..streaming.windows import events_testdata_stream
-
-    stream = events_testdata_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("session_start"),
-            "n_events",
-        )
-    )
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(session_counts(events_testdata_stream(spark, sf_dir)), "complete")
 
 
 # --- streaming: static join + stateful dedup (oracle-checked) ---------------
-
-
-def _event_stream(spark, sf_dir):
-    from ..streaming.windows import events_testdata_stream
-
-    return events_testdata_stream(spark, sf_dir)
-
-
-def _drain(df, prefix: str):
-    import uuid
-
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return df.sparkSession.table(name)
 
 
 @register(
@@ -158,22 +140,8 @@ def stream_stateful_user_stats(spark, sf_dir):
     as one micro-batch, so the drained update-mode output equals the
     batch aggregate — which is the oracle (exact integer-cents sums
     make the comparison bit-stable)."""
-    from ..streaming.stateful import running_user_stats
-
-    stream = _event_stream(spark, sf_dir)
-    out = running_user_stats(stream.select("user_id", "value"))
-    import uuid
-
-    name = f"stream_stateful_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    stream = events_testdata_stream(spark, sf_dir)
+    return run_to_memory(running_user_stats(stream.select("user_id", "value")), "update")
 
 
 @register(
@@ -194,9 +162,9 @@ def stream_sliding_counts(spark, sf_dir):
     """Structured Streaming sliding window (1h / 30m slide) through an
     availableNow memory sink; oracle = the batch bucket-enumeration SQL
     (each event contributes to exactly 2 overlapping windows)."""
-    stream = _event_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", "2 hours")
+        events_testdata_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
@@ -205,18 +173,7 @@ def stream_sliding_counts(spark, sf_dir):
             "sum_value",
         )
     )
-    import uuid
-
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 _TYPE_CODE_SQL = (
@@ -236,15 +193,12 @@ def stream_static_join(spark, sf_dir):
     """Stream-static broadcast join (dimension enrichment on a live
     stream); oracle is the equivalent batch mapping — every streamed
     row must arrive exactly once with its joined attribute."""
-    stream = _event_stream(spark, sf_dir)
     dim = spark.createDataFrame(
         [("click", 0), ("error", 1), ("purchase", 2), ("signup", 3), ("view", 4)],
         "event_type string, type_code int",
     )
-    joined = stream.join(F.broadcast(dim), "event_type").select(
-        "event_id", "user_id", "event_type", "type_code"
-    )
-    return _drain(joined, "stream_ssjoin")
+    joined = broadcast_enrich(events_testdata_stream(spark, sf_dir), dim, "event_type")
+    return run_to_memory(joined.select("event_id", "user_id", "event_type", "type_code"), "append")
 
 
 @register(
@@ -256,13 +210,8 @@ def stream_dedup_within_watermark(spark, sf_dir):
     exactly-unique source the output equals the input relation
     (oracle), and state stays bounded by the watermark horizon —
     the property a replayed/at-least-once source needs."""
-    stream = _event_stream(spark, sf_dir)
-    dedup = (
-        stream.withWatermark("ts", "2 hours")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "user_id", "value")
-    )
-    return _drain(dedup, "stream_dedup")
+    dedup = dedup_within_watermark(events_testdata_stream(spark, sf_dir), ["event_id"])
+    return run_to_memory(dedup.select("event_id", "user_id", "value"), "append")
 
 
 # --- streaming foreachBatch sink (oracle-checked digest round trip) ---------
@@ -284,24 +233,21 @@ def stream_foreach_batch_sink(spark, sf_dir):
     digest-checked against the batch view of the same source — proving
     the streaming ingest path writes exactly the batch-equivalent
     rows."""
-    import tempfile
-
-    from ..streaming.windows import events_testdata_stream, foreach_batch_append
-
-    work = tempfile.mkdtemp(prefix="stream_fb_out_")
     stream = (
         events_testdata_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
         .select("event_id", F.round(F.col("value") * 100).cast("long").alias("cents"))
     )
-    q = foreach_batch_append(stream, f"{work}/t", f"{work}/ckpt")
-    q.awaitTermination()
-    back = spark.read.parquet(f"{work}/t")
-    return back.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("event_id").alias("sum_event_id"),
-        F.sum("cents").alias("sum_cents"),
-    )
+    with _scratch("stream_fb_out_") as work:
+        foreach_batch_append(stream, f"{work}/t", f"{work}/ckpt")
+        back = spark.read.parquet(f"{work}/t")
+        return _materialize(
+            back.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("event_id").alias("sum_event_id"),
+                F.sum("cents").alias("sum_cents"),
+            )
+        )
 
 
 # --- stream-stream join ------------------------------------------------------
@@ -328,47 +274,9 @@ def stream_stream_join(spark, sf_dir):
     Drained with availableNow; the ORACLE is the equivalent batch
     interval self-join, proving the streaming state machine computes
     the relational answer."""
-    import uuid
-
-    from ..streaming.windows import events_testdata_stream
-
-    def side(event_type, alias):
-        return (
-            events_testdata_stream(spark, sf_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{alias}_user_id"),
-                F.col("event_id").alias(f"{alias}_event_id"),
-                F.col("ts").alias(f"{alias}_ts"),
-            )
-            .withWatermark(f"{alias}_ts", "2 hours")
-        )
-
-    clicks = side("click", "c")
-    purchases = side("purchase", "p")
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select(
-        F.col("c_user_id").alias("user_id"),
-        F.col("c_event_id").alias("click_id"),
-        F.col("p_event_id").alias("purchase_id"),
-        F.unix_timestamp("c_ts").cast("long").alias("click_epoch"),
-        F.unix_timestamp("p_ts").cast("long").alias("purchase_epoch"),
+    return run_to_memory(
+        click_purchase_join(events_testdata_stream(spark, sf_dir), "inner"), "append"
     )
-    name = f"stream_ss_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 # --- streaming update output mode (CDC upsert + compaction) --------------------
@@ -393,50 +301,22 @@ def stream_update_mode_upsert(spark, sf_dir):
     (the oracle), proving update-mode deltas lose nothing across
     batches. Integer-cents sums make the cross-batch comparison
     bit-stable."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql.window import Window
-
-    work = tempfile.mkdtemp(prefix="stream_upd_")
-    src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    e.select("event_id", "user_id", "value").repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    agg = stream.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        (
-            F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0
-        ).alias("sum_raw"),
-    )
-
-    def _upsert(batch, batch_id: int) -> None:
-        batch.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            sink
+    with _scratch("stream_upd_") as work:
+        src = f"{work}/src"
+        e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
+        e.select("event_id", "user_id", "value").repartition(4).write.parquet(src)
+        stream = (
+            spark.readStream.schema("event_id bigint, user_id bigint, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-
-    q = (
-        agg.writeStream.foreachBatch(_upsert)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName(f"upd_{uuid.uuid4().hex[:8]}")
-        .start()
-    )
-    q.awaitTermination()
-
-    cdc = spark.read.parquet(sink)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    return (
-        cdc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n", F.round("sum_raw", 4).alias("sum_value"))
-    )
+        agg = stream.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n"),
+            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("sum_raw"),
+        )
+        foreach_batch_append(agg, f"{work}/sink", f"{work}/ckpt", mode="update")
+        cdc = latest_per_key(spark.read.parquet(f"{work}/sink"), "user_id", "batch_id")
+        return _materialize(cdc.select("user_id", "n", F.round("sum_raw", 4).alias("sum_value")))
 
 
 # --- streaming update-mode top-k (pruned CDC) ---------------------------------
@@ -469,45 +349,22 @@ def stream_topk_update_mode(spark, sf_dir):
     FINAL count. Stale rows from earlier batches carry smaller counts
     and cannot displace true members. The oracle is the plain batch
     top-10 — exact equality, not approximation."""
-    import tempfile
-    import uuid
 
-    from pyspark.sql.window import Window
+    def top10(df):
+        return df.orderBy(F.desc("n"), F.asc("user_id")).limit(10)
 
-    work = tempfile.mkdtemp(prefix="stream_topk_")
-    src, sink, ckpt = f"{work}/src", f"{work}/sink", f"{work}/ckpt"
-    e = _t(spark, sf_dir, "events")
-    e.select("event_id", "user_id").repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-
-    def _prune_upsert(batch, batch_id: int) -> None:
-        top = batch.orderBy(F.desc("n"), F.asc("user_id")).limit(10)
-        top.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(sink)
-
-    q = (
-        agg.writeStream.foreachBatch(_prune_upsert)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName(f"topk_{uuid.uuid4().hex[:8]}")
-        .start()
-    )
-    q.awaitTermination()
-
-    cdc = spark.read.parquet(sink)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    latest = (
-        cdc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n")
-    )
-    return latest.orderBy(F.desc("n"), F.asc("user_id")).limit(10)
+    with _scratch("stream_topk_") as work:
+        src = f"{work}/src"
+        _t(spark, sf_dir, "events").select("event_id", "user_id").repartition(4).write.parquet(src)
+        stream = (
+            spark.readStream.schema("event_id bigint, user_id bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
+        foreach_batch_append(agg, f"{work}/sink", f"{work}/ckpt", mode="update", per_batch=top10)
+        cdc = latest_per_key(spark.read.parquet(f"{work}/sink"), "user_id", "batch_id")
+        return _materialize(top10(cdc.select("user_id", "n")))
 
 
 # --- watermarked left-outer stream-stream join ---------------------------------
@@ -552,45 +409,9 @@ def stream_stream_join_outer(spark, sf_dir):
     is correct streaming semantics, not data loss (verified row-level
     against the batch join at build time: only the terminal-window
     clicks differ)."""
-    import uuid
-
-    from ..streaming.windows import events_testdata_stream
-
-    def side(event_type, alias):
-        return (
-            events_testdata_stream(spark, sf_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{alias}_user_id"),
-                F.col("event_id").alias(f"{alias}_event_id"),
-                F.col("ts").alias(f"{alias}_ts"),
-            )
-            .withWatermark(f"{alias}_ts", "2 hours")
-        )
-
-    joined = side("click", "c").join(
-        side("purchase", "p"),
-        (F.col("c_user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        F.col("c_user_id").alias("user_id"),
-        F.col("c_event_id").alias("click_id"),
-        F.col("p_event_id").alias("purchase_id"),
-        F.unix_timestamp("c_ts").cast("long").alias("click_epoch"),
-        F.unix_timestamp("p_ts").cast("long").alias("purchase_epoch"),
+    return run_to_memory(
+        click_purchase_join(events_testdata_stream(spark, sf_dir), "left_outer"), "append"
     )
-    name = f"stream_ssoj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 # --- streaming checkpoint resume (exactly-once restart) ------------------------
@@ -612,65 +433,26 @@ def stream_checkpoint_resume(spark, sf_dir):
     aggregate over ALL the data (the oracle). This is the
     crash-recovery contract that makes foreachBatch upserts safe to
     re-run — checkpointed source offsets + last-write-wins sink."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from pyspark.sql.window import Window
-
-    work = tempfile.mkdtemp(prefix="stream_resume_")
-    stage, src, sink, ckpt = (
-        f"{work}/stage",
-        f"{work}/src",
-        f"{work}/sink",
-        f"{work}/ckpt",
-    )
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 40)
-    e.select("event_id", "user_id").repartition(4).write.parquet(stage)
-    files = sorted(
-        f for f in __import__("os").listdir(stage) if f.endswith(".parquet")
-    )
-    __import__("os").makedirs(src)
-
-    def _run_stream() -> None:
+    with _scratch("stream_resume_") as work:
+        stage, src = f"{work}/stage", f"{work}/src"
+        e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 40)
+        e.select("event_id", "user_id").repartition(4).write.parquet(stage)
+        files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
+        os.makedirs(src)
         stream = (
             spark.readStream.schema("event_id bigint, user_id bigint")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
         agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-
-        def _upsert(batch, batch_id: int) -> None:
-            batch.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(sink)
-
-        q = (
-            agg.writeStream.foreachBatch(_upsert)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .queryName(f"resume_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        q.awaitTermination()
-
-    # first run: half the files; second run: the rest land, same checkpoint
-    half = max(1, len(files) // 2)
-    for f in files[:half]:
-        shutil.copy(f"{stage}/{f}", f"{src}/{f}")
-    _run_stream()
-    for f in files[half:]:
-        shutil.copy(f"{stage}/{f}", f"{src}/{f}")
-    _run_stream()
-
-    cdc = spark.read.parquet(sink)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    return (
-        cdc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n")
-    )
+        # first run: half the files; second run: the rest land, same checkpoint
+        half = max(1, len(files) // 2)
+        for landed in (files[:half], files[half:]):
+            for f in landed:
+                shutil.copy(f"{stage}/{f}", f"{src}/{f}")
+            foreach_batch_append(agg, f"{work}/sink", f"{work}/ckpt", mode="update")
+        cdc = latest_per_key(spark.read.parquet(f"{work}/sink"), "user_id", "batch_id")
+        return _materialize(cdc.select("user_id", "n"))
 
 
 @register(
@@ -705,13 +487,9 @@ def stream_chained_window_agg(spark, sf_dir):
     state is |open hours| + |open days| per key-range, not raw rows;
     this is the standard rollup cascade that replaces a re-read of the
     raw stream at 100 TB/day."""
-    import uuid
-
-    from ..streaming.windows import events_testdata_stream
-
-    stream = events_testdata_stream(spark, sf_dir)
     hourly = (
-        stream.withWatermark("ts", "2 hours")
+        events_testdata_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -729,16 +507,7 @@ def stream_chained_window_agg(spark, sf_dir):
             "max_hourly",
         )
     )
-    name = f"stream_chain_{uuid.uuid4().hex[:8]}"
-    q = (
-        daily.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(daily, "append")
 
 
 # --- streaming: exactly-once idempotent foreachBatch sink -------------------
@@ -765,14 +534,7 @@ def stream_foreach_batch_idempotent(spark, sf_dir):
     shape: the sink writes partition-local files, no shuffle; the
     idempotence key (batchId) is planner-provided, so retries are
     exactly-once regardless of executor failures mid-batch."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.windows import events_testdata_stream
-
-    work = tempfile.mkdtemp(prefix="stream_fb_idem_")
-    try:
+    with _scratch("stream_fb_idem_") as work:
         table = f"{work}/t"
 
         def _write(batch, batch_id):
@@ -806,14 +568,12 @@ def stream_foreach_batch_idempotent(spark, sf_dir):
         _write(replay, last)
 
         back = spark.read.parquet(table)
-        out = back.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("cents").alias("sum_cents"),
+        return _materialize(
+            back.groupBy("event_type").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("cents").alias("sum_cents"),
+            )
         )
-        rows = out.collect()  # materialize before the scratch dir is removed
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --- Spark 4 Python STREAMING data source ------------------------------------
@@ -842,9 +602,6 @@ def stream_python_datasource(spark, sf_dir):
     is ext_python_datasource; together they close the custom-source
     matrix. Scale shape: offsets are per-source bookkeeping, rows
     stream through without a shuffle until the digest."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
@@ -873,8 +630,7 @@ def stream_python_datasource(spark, sf_dir):
             return _Reader()
 
     spark.dataSource.register(_Src)
-    work = tempfile.mkdtemp(prefix="pyds_stream_")
-    try:
+    with _scratch("pyds_stream_") as work:
         for _ in range(4):  # 3 data batches + 1 empty terminal batch
             q = (
                 spark.readStream.format("graft_rng_stream")
@@ -887,17 +643,15 @@ def stream_python_datasource(spark, sf_dir):
             )
             q.awaitTermination()
         back = spark.read.parquet(f"{work}/t")
-        out = back.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("sum_v"),
-            F.sum(
-                F.when(F.col("v") % 7 == 0, F.col("v") * F.col("v"))
-            ).alias("sum_sq_sevens"),
+        return _materialize(
+            back.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("v").alias("sum_v"),
+                F.sum(
+                    F.when(F.col("v") % 7 == 0, F.col("v") * F.col("v"))
+                ).alias("sum_sq_sevens"),
+            )
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --- streaming sessionization with a DYNAMIC per-event gap -------------------
@@ -955,21 +709,7 @@ def stream_session_dynamic_gap(spark, sf_dir):
     tests/test_streaming.py::test_dynamic_gap_watermark_eviction on
     the same shared aggregation (streaming/windows.py
     dynamic_gap_sessions)."""
-    import uuid
-
-    from ..streaming.windows import dynamic_gap_sessions, events_testdata_stream
-
-    agg = dynamic_gap_sessions(events_testdata_stream(spark, sf_dir))
-    name = f"stream_dyn_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(dynamic_gap_sessions(events_testdata_stream(spark, sf_dir)), "complete")
 
 
 # --- watermarked FULL OUTER stream-stream interval join ---------------------
@@ -1027,23 +767,6 @@ def stream_stream_join_full_outer(spark, sf_dir):
     streaming semantics, not loss. State is user_id-keyed and
     watermark-bounded on both sides, so executor state at 100 TB is
     O(events within the 2h + 30min horizon), not O(history)."""
-    import uuid
-
-    from ..streaming.windows import (
-        events_testdata_stream,
-        full_outer_click_purchase_join,
+    return run_to_memory(
+        click_purchase_join(events_testdata_stream(spark, sf_dir), "full_outer"), "append"
     )
-
-    joined = full_outer_click_purchase_join(
-        events_testdata_stream(spark, sf_dir)
-    )
-    name = f"stream_ssfoj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

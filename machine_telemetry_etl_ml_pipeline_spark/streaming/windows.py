@@ -1,16 +1,25 @@
-"""Structured Streaming layer (SURVEY §2B streaming rows): the
+"""Structured Streaming operators (SURVEY §2B streaming rows): the
 continuous analog of the reference's daily Airflow batch
 (/root/reference/dags/db_pipeline_dag.py:56 `@daily`) — watermarked
-event-time windows, stateful dedup, and stream-static joins over an
-events-shaped stream.
+event-time windows, stateful dedup, stream-static and stream-stream
+joins over an events-shaped stream, plus the two ways a bounded
+stream is drained into a batch result.
 
-Batch twins of the window aggregations live in registry/ext.py
-(ext_tumbling_window / ext_sliding_window / ext_session_windows) where
-they are oracle-checked; streaming state itself is rows-only by the
-driver contract (SURVEY §7 hard spot e).
+Every ``stream_*`` registry entry (registry/stream.py) reads the
+testdata through ``events_testdata_stream`` and drains through
+``run_to_memory`` or ``foreach_batch_append``; the operators here are
+the ones those entries call, so tests/test_streaming.py drives the
+shipped code. Batch twins of the window aggregations live in
+registry/ext.py (ext_tumbling_window / ext_sliding_window /
+ext_session_windows) where they are oracle-checked; streaming state
+itself is rows-only by the driver contract (SURVEY §7 hard spot e).
 """
 
 from __future__ import annotations
+
+import os
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +29,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -45,26 +55,46 @@ def file_stream(spark: SparkSession, dir_path: str, schema: StructType | None = 
     )
 
 
-def tumbling_counts(stream: DataFrame, duration: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window aggregate; late rows beyond the
-    watermark are dropped and state is evicted (bounded memory — the
-    property that matters on an unbounded 100 TB/day stream)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "n", "sum_value")
+def events_testdata_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream over the driver's events.parquet. The file source reads
+    a DIRECTORY: a single-file table streams ``sf_dir`` itself with a
+    ``pathGlobFilter`` that admits only events.parquet (the other
+    tables' files, and the part files of any table stored as a
+    directory, do not match it); a directory-layout table (e.g. the
+    10x scale replica) streams that directory. Nothing is written
+    anywhere. The stream schema mirrors the batch read (ts bound as
+    TIMESTAMP_NTZ to the parquet TIMESTAMP(MICROS, ntz) column, then
+    cast to TIMESTAMP because watermarks require an instant type — a
+    value-identical cast under the UTC session zone) so the streaming
+    result equals the batch oracle over the same input."""
+    schema = StructType(
+        [
+            f if f.name != "ts" else StructField("ts", TimestampNTZType())
+            for f in EVENTS_STREAM_SCHEMA
+        ]
     )
+    src = f"{sf_dir}/events.parquet"
+    reader = spark.readStream.schema(schema)
+    if os.path.isdir(src):
+        stream = reader.parquet(src)
+    else:
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def session_counts(stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Native session windows (state-store backed) — batch twin:
+    """Native session windows (state-store backed) per user — the
+    stream_session_counts aggregation; batch twin:
     registry.ext.ext_session_windows (gaps-and-islands)."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
+        .select(
+            "user_id",
+            F.unix_timestamp(F.col("w.start")).cast("long").alias("session_start"),
+            "n_events",
+        )
     )
 
 
@@ -101,17 +131,15 @@ def dedup_within_watermark(stream: DataFrame, keys: list[str], watermark: str = 
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def full_outer_click_purchase_join(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked FULL OUTER stream-stream interval join: clicks to
-    purchases within [c_ts, c_ts + 30min] per user. Shared by the
-    registry entry (registry.stream.stream_stream_join_full_outer, fed
-    by events_testdata_stream) and the late-data eviction proof
-    (tests/test_streaming.py, fed by a multi-drain file source), so
-    the proof exercises the shipped join shape. Each side's unmatched
-    rows emit their null row only when the watermark proves no match
-    can arrive: clicks once wm > c_ts + 30min, purchases once
+def click_purchase_join(events: DataFrame, how: str) -> DataFrame:
+    """Watermarked stream-stream interval join of clicks to purchases
+    by the same user within [c_ts, c_ts + 30min]; ``how`` is "inner",
+    "left_outer" or "full_outer"; each side is watermarked 2 hours.
+    Both sides filter ONE source. Shared by the three
+    stream_stream_join* registry entries and the late-data eviction
+    proof (tests/test_streaming.py). In the outer joins each side's
+    unmatched rows emit their null row only when the watermark proves
+    no match can arrive: clicks once wm > c_ts + 30min, purchases once
     wm > p_ts — the asymmetry IS the interval condition."""
 
     def side(event_type, alias):
@@ -119,14 +147,14 @@ def full_outer_click_purchase_join(
             F.col("user_id").alias(f"{alias}_user_id"),
             F.col("event_id").alias(f"{alias}_event_id"),
             F.col("ts").alias(f"{alias}_ts"),
-        ).withWatermark(f"{alias}_ts", watermark)
+        ).withWatermark(f"{alias}_ts", "2 hours")
 
     return side("click", "c").join(
         side("purchase", "p"),
         (F.col("c_user_id") == F.col("p_user_id"))
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "full_outer",
+        how,
     ).select(
         F.coalesce(F.col("c_user_id"), F.col("p_user_id")).alias("user_id"),
         F.col("c_event_id").alias("click_id"),
@@ -141,77 +169,53 @@ def stream_static_join(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     return stream.join(F.broadcast(dim), on=on, how="left")
 
 
-def run_to_memory(df: DataFrame, name: str) -> DataFrame:
-    """Drain all available input into an in-memory table (test sink);
-    returns the materialized result table."""
+def run_to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Drain all available input of ``df`` through a memory sink in
+    output ``mode`` ("append", "complete" or "update": the caller
+    knows which its operators need) and return the sink's rows as a
+    batch frame. The sink's temp view is dropped before returning: the
+    returned frame holds the sink itself, so its rows live exactly as
+    long as the frame does."""
+    name = f"mem_{uuid.uuid4().hex}"
     q = (
         df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append" if not _has_aggregation(df) else "complete")
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return df.sparkSession.table(name)
+    spark = df.sparkSession
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
-def _has_aggregation(df: DataFrame) -> bool:
-    return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
-
-
-def foreach_batch_append(df: DataFrame, table_path: str, checkpoint: str):
-    """Continuous sink into the same partitioned table the batch path
-    writes — the streaming replacement for the reference's daily
-    execute_values load."""
+def foreach_batch_append(
+    df: DataFrame,
+    table_path: str,
+    checkpoint: str,
+    mode: str = "append",
+    per_batch: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """Drain ``df`` (availableNow) into the parquet table at
+    ``table_path``: each micro-batch, optionally reduced by
+    ``per_batch``, is appended with its ``batch_id`` — the streaming
+    replacement for the reference's daily execute_values load. With
+    ``mode="update"`` an aggregate emits only its changed rows each
+    batch, so the table is a CDC log whose last-write-wins compaction
+    per key (max batch_id) is the current state."""
 
     def _write(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("append").parquet(table_path)
+        if per_batch is not None:
+            batch = per_batch(batch)
+        batch.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(table_path)
 
-    return (
+    q = (
         df.writeStream.foreachBatch(_write)
+        .outputMode(mode)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-
-
-def events_testdata_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream over the driver's events.parquet: the file source needs a
-    DIRECTORY, so the single testdata file is exposed through a
-    symlinked temp dir. The stream schema mirrors the batch read
-    (ts bound as TIMESTAMP_NTZ to the parquet TIMESTAMP(MICROS, ntz)
-    column, then cast to TIMESTAMP because watermarks require an
-    instant type — a value-identical cast under the UTC session zone)
-    so the streaming result equals the batch oracle over the same
-    input. Shared by every stream_* registry entry."""
-    import os
-    import tempfile
-
-    from pyspark.sql.types import TimestampNTZType
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampNTZType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-    src = f"{sf_dir}/events.parquet"
-    if os.path.isdir(src):
-        # directory layout (e.g. the 10x scale replica): part files live
-        # inside — stream the directory itself; a symlinked SUBdirectory
-        # would be silently skipped by the file-source listing (plain
-        # nested dirs are not recursed without recursiveFileLookup),
-        # which read as 0 rows in the r5 replica probe
-        d = src
-    else:
-        d = tempfile.mkdtemp(prefix="stream_src_")
-        os.symlink(src, f"{d}/events.parquet")
-    return (
-        spark.readStream.schema(schema)
-        .parquet(d)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    q.awaitTermination()

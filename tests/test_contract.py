@@ -1,7 +1,8 @@
 """Driver-contract guards: the query order must name every registry
 entry exactly once (an entry lost or overwritten in a module move, or
 a typo, would silently drop it from the driver's verification order),
-oracles must be a subset of queries, every oracle must mention only
+the generated QUERIES.md must list every name in that order, oracles
+must be a subset of queries, every oracle must mention only
 pre-registered tables, importing the checkpoint operators must not
 import the registry, and dispatching an entry tunes the caller's
 session."""
@@ -36,6 +37,17 @@ def test_query_order_names_every_entry():
     gated = set() if refmodels.available() else {"ml_model_exact_scoring"}
     assert not gated & set(REGISTRY)
     assert set(ent.QUERY_ORDER) == set(REGISTRY) | gated
+
+
+def test_query_index_lists_every_query_order_name():
+    """QUERIES.md is generated from QUERY_ORDER, so an entry that does
+    not register in this process keeps its row and the count."""
+    from tools import gen_query_index
+
+    lines = gen_query_index.build_lines()
+    names = [m.group(1) for m in map(gen_query_index.ROW.match, lines) if m]
+    assert sorted(names) == sorted(ent.QUERY_ORDER)
+    assert lines[2].startswith(f"{len(ent.QUERY_ORDER)} registered entries")
 
 
 def test_ckpt_import_does_not_load_registry():

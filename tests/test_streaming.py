@@ -6,14 +6,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 from machine_telemetry_etl_ml_pipeline_spark.sources.catalog import load_table
 from machine_telemetry_etl_ml_pipeline_spark.streaming.windows import (
+    click_purchase_join,
     dedup_within_watermark,
     file_stream,
     run_to_memory,
     session_counts,
     stream_static_join,
-    tumbling_counts,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -30,22 +31,20 @@ def events_dir(spark, tmp_path_factory):
     return d
 
 
-def test_tumbling_matches_batch(spark, events_dir):
-    stream = file_stream(spark, events_dir)
-    out = run_to_memory(tumbling_counts(stream, "1 hour"), "t_tumbling")
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    got = {(r.window_start, r.n) for r in out.collect()}
-    want = {(r[0].start, r.n) for r in batch.collect()}
-    assert got == want  # streaming result == batch result over same input
+def _rows(spark, name):
+    return sorted(REGISTRY[name].fn(spark, SF).collect())
+
+
+def test_tumbling_matches_batch(spark):
+    """The shipped stream_tumbling_counts entry equals its batch twin
+    ext_tumbling_window row for row over the same input."""
+    got = _rows(spark, "stream_tumbling_counts")
+    assert got and got == _rows(spark, "ext_tumbling_window")
 
 
 def test_session_counts_runs(spark, events_dir):
     stream = file_stream(spark, events_dir)
-    out = run_to_memory(session_counts(stream, gap="30 minutes"), "t_sessions")
+    out = run_to_memory(session_counts(stream, gap="30 minutes"), "complete")
     assert out.count() > 0
     assert out.filter("n_events < 1").count() == 0
 
@@ -56,7 +55,7 @@ def test_dedup_within_watermark(spark, events_dir, tmp_path):
     shutil.copytree(events_dir, dup, dirs_exist_ok=True)
     spark.read.parquet(events_dir).write.mode("append").parquet(dup)
     stream = file_stream(spark, dup)
-    out = run_to_memory(dedup_within_watermark(stream, ["event_id"]), "t_dedup")
+    out = run_to_memory(dedup_within_watermark(stream, ["event_id"]), "append")
     n_unique = spark.read.parquet(events_dir).select("event_id").distinct().count()
     assert out.count() == n_unique
 
@@ -67,7 +66,7 @@ def test_stream_static_join(spark, events_dir):
         "event_type string, type_code int",
     )
     stream = file_stream(spark, events_dir)
-    out = run_to_memory(stream_static_join(stream, dim, "event_type"), "t_ssjoin")
+    out = run_to_memory(stream_static_join(stream, dim, "event_type"), "append")
     assert out.filter("type_code IS NULL").count() == 0
     assert out.count() == spark.read.parquet(events_dir).count()
 
@@ -76,10 +75,6 @@ def test_stateful_running_stats_across_batches(spark, events_dir, tmp_path):
     """applyInPandasWithState must ACCUMULATE across micro-batches:
     feed the same events twice as two files -> final per-user counts
     are exactly double the single-pass counts."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
     from machine_telemetry_etl_ml_pipeline_spark.streaming.stateful import running_user_stats
 
     two = str(tmp_path / "two_batches")
@@ -93,20 +88,10 @@ def test_stateful_running_stats_across_batches(spark, events_dir, tmp_path):
         .parquet(two)
         .select("user_id", "value")
     )
-    name = f"t_stateful_{uuid.uuid4().hex[:8]}"
-    q = (
-        running_user_stats(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # update mode emits once per (user, batch); the final emission has
     # the accumulated totals
     final = (
-        spark.table(name)
+        run_to_memory(running_user_stats(stream), "update")
         .groupBy("user_id")
         .agg(F.max("n").alias("n_final"))
     )
@@ -187,6 +172,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     finally:
         q.stop()
     rows = {str(r.window_start): r.n for r in spark.table(name).collect()}
+    spark.catalog.dropTempView(name)
     # finalized: the 08:00 window (2 on-time events). The late 07:10
     # event must NOT have created a 07:00 window.
     assert "2026-01-01 07:00:00" not in rows, rows
@@ -197,8 +183,6 @@ def test_transform_with_state_gated_or_works(spark, events_dir):
     """transformWithStateInPandas twin: runs where protobuf exists,
     raises the documented NotImplementedError where it doesn't (this
     container) — either way the wiring is exercised."""
-    import uuid
-
     from machine_telemetry_etl_ml_pipeline_spark.streaming.stateful import (
         running_user_stats_tws,
     )
@@ -209,23 +193,14 @@ def test_transform_with_state_gated_or_works(spark, events_dir):
     except NotImplementedError as e:
         assert "protobuf" in str(e)
         return
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     batch = spark.read.parquet(events_dir).groupBy("user_id").count()
-    got = spark.table(name).groupBy("user_id").agg(F.max("n").alias("n"))
+    got = run_to_memory(out, "update").groupBy("user_id").agg(F.max("n").alias("n"))
     joined = got.join(batch, "user_id")
     assert joined.filter("n != count").count() == 0
 
 
-def test_rocksdb_state_store_matches_default_provider(spark, events_dir):
-    """Run the same watermarked tumbling aggregation under the RocksDB
+def test_rocksdb_state_store_matches_default_provider(spark):
+    """Run the stream_tumbling_counts entry under the RocksDB
     state-store provider and the default HDFS-backed one: identical
     results. RocksDB is the state backend that holds at 100 TB —
     state lives off-heap/on-disk with incremental checkpoint uploads,
@@ -234,25 +209,15 @@ def test_rocksdb_state_store_matches_default_provider(spark, events_dir):
     key = "spark.sql.streaming.stateStore.providerClass"
     rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     old = spark.conf.get(key, None)
-
-    def agg_counts(tag):
-        stream = file_stream(spark, events_dir)
-        return {
-            (r.window_start, r.n)
-            for r in run_to_memory(
-                tumbling_counts(stream, "1 hour"), f"t_rocks_{tag}"
-            ).collect()
-        }
-
     try:
         spark.conf.set(key, rocks)
-        with_rocks = agg_counts("rdb")
+        with_rocks = _rows(spark, "stream_tumbling_counts")
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-    default = agg_counts("dflt")
+    default = _rows(spark, "stream_tumbling_counts")
     assert with_rocks == default and len(with_rocks) > 0
 
 
@@ -331,7 +296,7 @@ def test_dynamic_gap_watermark_eviction(spark, tmp_path):
 def test_full_outer_join_watermark_eviction(spark, tmp_path):
     """Late-data eviction proof for the FULL OUTER stream-stream
     interval join (the stream_stream_join_full_outer shape, via the
-    shared full_outer_click_purchase_join builder) — the per-side
+    shared click_purchase_join builder) — the per-side
     eviction rules under genuinely LATE data, which the availableNow
     oracle drain can't exercise. Three checkpointed append drains:
 
@@ -359,10 +324,7 @@ def test_full_outer_join_watermark_eviction(spark, tmp_path):
     """
     from datetime import datetime, timedelta, timezone
 
-    from machine_telemetry_etl_ml_pipeline_spark.streaming.windows import (
-        EVENTS_STREAM_SCHEMA,
-        full_outer_click_purchase_join,
-    )
+    from machine_telemetry_etl_ml_pipeline_spark.streaming.windows import EVENTS_STREAM_SCHEMA
 
     base = datetime(2025, 1, 1, 10, 0, 0, tzinfo=timezone.utc)
 
@@ -393,7 +355,7 @@ def test_full_outer_join_watermark_eviction(spark, tmp_path):
         ).write.parquet(f"{src}/b{i}")
         stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(f"{src}/*")
         q = (
-            full_outer_click_purchase_join(stream)
+            click_purchase_join(stream, "full_outer")
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
@@ -416,3 +378,25 @@ def test_full_outer_join_watermark_eviction(spark, tmp_path):
     }
     # late eid7 dropped; u5's click and u7's purchase stay open
     assert got == want
+
+
+def test_stream_entries_leave_no_views_streams_or_dirs(spark):
+    """Building and collecting stream entries leaves nothing behind: no
+    memory-sink temp view (each holds its rows in driver memory), no
+    active query and no ``stream_*`` scratch dir under the temp dir."""
+    import os
+    import tempfile
+
+    tmp = tempfile.gettempdir()
+
+    def state():
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return views, {d for d in os.listdir(tmp) if d.startswith("stream_")}
+
+    views0, dirs0 = state()
+    for name in ("stream_tumbling_counts", "stream_update_mode_upsert", "stream_stream_join"):
+        REGISTRY[name].fn(spark, SF).collect()
+    views, dirs = state()
+    assert views - views0 == set()
+    assert spark.streams.active == []
+    assert dirs - dirs0 == set()
