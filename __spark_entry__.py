@@ -35,6 +35,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # (tests/test_contract.py); ml_model_exact_scoring registers only where
 # the reference model blobs exist.
 QUERY_ORDER = (
+    "ext_compact_small_files", "ext_dynamic_partition_overwrite",
+    "ext_source_csv_corrupt", "ext_manifest_pruned_scan", "ext_source_orc",
+    "ext_merge_upsert", "ext_source_jsonl", "ref_sink_batch_insert",
+    "ref_sink_insert_defaults", "ref_sink_insert_json", "ref_ddl_create_table",
+    "ext_snapshot_time_travel", "ext_source_xml", "ext_metadata_columns",
+    "ext_source_binaryfile", "ext_merge_schema_evolution", "ext_source_text",
+    "ext_dynamic_partition_pruning", "ext_variant_roundtrip",
     "stream_foreach_batch_sink", "stream_stream_join", "stream_session_counts",
     "stream_sliding_counts", "stream_static_join", "stream_dedup_within_watermark",
     "stream_tumbling_counts", "stream_update_mode_upsert",
@@ -61,9 +68,8 @@ QUERY_ORDER = (
     "llm_source_mix", "llm_quality_filter_by_lang", "llm_decontaminate",
     "llm_unigram_logprob", "llm_dedup_keep_first", "llm_chunk_documents",
     "llm_train_test_split", "ext_recursive_cte", "ext_variant_json", "ext_sql_udf",
-    "udf_python_udtf", "ext_compact_small_files", "ext_dynamic_partition_overwrite",
-    "ext_source_csv_corrupt", "ext_manifest_pruned_scan", "ext_source_orc",
-    "ext_merge_upsert", "ext_funnel_conversion",
+    "udf_python_udtf",
+    "ext_funnel_conversion",
     "ext_cohort_retention", "ext_gap_islands", "ext_scd2_history",
     "ext_session_dynamic_gap", "llm_tfidf_topk_terms", "llm_winnowing_fingerprints",
     "ext_join_left_order_counts", "ext_join_semi", "ext_join_anti", "ext_join_theta",
@@ -83,7 +89,7 @@ QUERY_ORDER = (
     "ext_unpivot", "ext_grouping_sets", "ext_string_agg", "ext_corr_covar",
     "ext_union_missing_cols", "ext_join_revenue_by_nation",
     "ml_kmeans_anomaly", "ml_gbt_regression_eval", "ml_gbt_classifier_eval",
-    "ext_source_jsonl", "llm_embedding_truncate", "llm_inverted_index",
+    "llm_embedding_truncate", "llm_inverted_index",
     "ext_data_profile", "ext_sample_stratified_exact", "ext_python_datasource",
     "ext_gap_fill_ffill", "ext_rolling_median", "ext_histogram",
     "ml_linear_regression_sql", "ext_fuzzy_levenshtein", "llm_multimodal_framesample",
@@ -100,9 +106,9 @@ QUERY_ORDER = (
     "ref_nulls_last_sort", "ref_distinct_sorted", "ref_stats_global",
     "ref_stats_filtered", "ref_count_distinct", "ref_grouped_comparison",
     "ref_time_features", "ref_label_encoding", "ref_table_counts",
-    "ref_zscore_standardize", "ext_asof_join", "ref_sink_batch_insert",
-    "ref_sink_insert_defaults", "ref_sink_insert_json", "tpch_q1", "tpch_q3",
-    "ref_ddl_create_table", "ref_surrogate_ids", "ext_distinct_subset", "ext_sample",
+    "ref_zscore_standardize", "ext_asof_join",
+    "tpch_q1", "tpch_q3",
+    "ref_surrogate_ids", "ext_distinct_subset", "ext_sample",
     "ext_posexplode", "ext_month_boundaries",
     "ext_higher_order_funcs", "ext_sample_stratified",
     "llm_bigram_logprob", "llm_knn_label_accuracy", "ext_sql_tvf",
@@ -118,22 +124,22 @@ QUERY_ORDER = (
     "llm_source_temperature_mix", "ext_asof_join_forward", "ext_grouped_median",
     "ext_decimal_exact", "ext_bitwise_agg", "ext_null_semantics",
     "ext_lateral_view_sql", "llm_minhash_band_tuning", "ext_hll_sketch_merge",
-    "ext_snapshot_time_travel", "llm_ann_filtered_topk", "ext_observation_metrics",
-    "llm_vocab_coverage", "ext_source_xml",
-    "ext_metadata_columns", "llm_bpe_merge_step", "llm_quota_sample_by_source",
+    "llm_ann_filtered_topk", "ext_observation_metrics",
+    "llm_vocab_coverage",
+    "llm_bpe_merge_step", "llm_quota_sample_by_source",
     "ext_shard_balance_report", "llm_embedding_norm_stats", "llm_zipf_topk_terms",
     "ext_sql_pipe_syntax", "ext_collation_ci", "ext_autocorrelation",
     "ml_logistic_regression_gd", "llm_url_domain_stats", "ml_kmeans_lloyd",
     "ext_conditional_reset_cumsum", "ml_decision_stump", "ext_lateral_column_alias",
     "llm_semdedup_prune", "llm_multimodal_audio_energy", "ext_incremental_join_view",
-    "ml_pca_power_iteration", "ml_confusion_matrix", "ext_source_binaryfile",
-    "ext_merge_schema_evolution", "ext_identifier_clause", "ml_decision_tree_depth2",
+    "ml_pca_power_iteration", "ml_confusion_matrix",
+    "ext_identifier_clause", "ml_decision_tree_depth2",
     "ml_roc_auc", "ml_calibration_bins", "ml_ridge_regression_normal_eq",
     "ext_bloom_prefilter_join", "llm_weighted_sample", "llm_hashed_features",
     "ml_ks_drift", "ml_psi_drift_bins", "ml_ndcg_at_k", "ext_count_min_sketch",
     "ext_interval_merge", "ml_spearman_corr", "ml_lift_gains",
     "ext_holt_linear", "ml_ab_ztest_conversion",
-    "ml_welch_ttest", "ext_cusum_changepoint", "ext_source_text",
+    "ml_welch_ttest", "ext_cusum_changepoint",
     "ext_session_variables", "ext_execute_immediate", "ext_sql_scripting",
     "ext_sql_scripting_loop", "ext_aqe_skew_join",
     "ml_kaplan_meier", "ext_skyline_pareto", "ext_seasonal_dow_index",
@@ -152,13 +158,13 @@ QUERY_ORDER = (
     "ml_anova_oneway", "ml_matthews_corrcoef", "ml_brier_score", "graph_weighted_sssp",
     "ml_gmm_em_1d", "ml_hmm_forward", "llm_mmr_rerank", "llm_readability_flesch",
     "llm_langid_confusion", "ml_churn_labels_point_in_time",
-    "ext_dynamic_partition_pruning", "ml_target_encoding_loo", "llm_span_corruption",
+    "ml_target_encoding_loo", "llm_span_corruption",
     "llm_tokenizer_fertility", "ml_learning_curve", "ml_diff_in_diff",
     "ml_cuped_adjustment", "ml_mcnemar_test", "llm_crosslingual_ngram_overlap",
     "ml_sprt_stopping", "ml_winsorized_mean", "ext_interarrival_stats",
     "llm_preference_pairs", "ext_entity_blocking_fuzzy", "ext_holt_winters_seasonal",
     "ml_item_item_cosine", "llm_token_budget_fill", "ext_interval_arithmetic",
-    "ext_variant_roundtrip", "ext_approx_quantile_sketch_merge",
+    "ext_approx_quantile_sketch_merge",
     "ml_model_exact_scoring", "ml_kfold_cv",
     "ml_conformal_interval", "llm_sequence_packing", "ml_rolling_origin_backtest",
     "llm_multimodal_decode", "llm_chunk_dedup_stats", "llm_embedding_centroids",

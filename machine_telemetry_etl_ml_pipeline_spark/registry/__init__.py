@@ -21,7 +21,10 @@ from __future__ import annotations
 import functools
 import importlib
 import pkgutil
+import shutil
+import tempfile
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +68,29 @@ def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     SURVEY §3)."""
     for n in names:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
+
+
+@contextmanager
+def _scratch(prefix: str):
+    """A fresh temp dir for an entry's files, removed on exit. An entry
+    that writes files works under it and returns ``_materialize``-d rows
+    from inside the block, so nothing it wrote outlives the call. Those
+    results are bounded by construction: a digest, per-type count or
+    literal payload of 1 to 50 rows, the 20 files ext_source_binaryfile
+    mints, or ext_manifest_pruned_scan's 21-user window, whose events
+    per user stay flat as SF grows (1,384 rows at sf0.01, 1,409 at
+    sf0.1)."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _materialize(df):
+    """``df``'s rows as a local frame, so the result outlives the
+    files it was read from. The collect is bounded: see ``_scratch``."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
 
 
 def _epoch(col: str = "ts"):

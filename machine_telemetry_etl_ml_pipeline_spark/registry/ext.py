@@ -16,8 +16,6 @@ numerator/denominator columns rather than a rounded quotient.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -26,7 +24,7 @@ from ..llm.prep import md5_bucket
 from ..operators.bucketing import salted_agg, save_bucketed
 from ..operators.joins import anti_join, asof_join, semi_join
 from ..operators.windows import lag_lead, ranked, running, sessionized
-from . import _epoch, _t, _views, register
+from . import _epoch, _materialize, _scratch, _t, _views, register
 
 
 # --- joins ---------------------------------------------------------------
@@ -1418,21 +1416,19 @@ def ext_source_jsonl(spark, sf_dir):
     explicit schema (schema inference is a scan you don't pay twice at
     100 TB), and emit digests the oracle recomputes from the parquet
     view — same robustness pattern as the sink checks."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="jsonl_src_") + "/events"
-    src = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", F.round(F.col("value") * 100).cast("long").alias("cents"))
-    )
-    src.write.mode("overwrite").json(path)
-    back = spark.read.schema("event_id long, cents long").json(path)
-    return back.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("event_id").alias("sum_event_id"),
-        F.sum("cents").alias("sum_cents"),
-    )
+    with _scratch("jsonl_src_") as path:
+        src = (
+            _t(spark, sf_dir, "events")
+            .filter(F.col("event_type") == "purchase")
+            .select("event_id", F.round(F.col("value") * 100).cast("long").alias("cents"))
+        )
+        src.write.mode("overwrite").json(path)
+        back = spark.read.schema("event_id long, cents long").json(path)
+        return _materialize(back.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("event_id").alias("sum_event_id"),
+            F.sum("cents").alias("sum_cents"),
+        ))
 
 
 # --- hypertable-style multi-granularity rollup ------------------------------
@@ -1502,21 +1498,19 @@ def ext_source_orc(spark, sf_dir):
     deterministic events projection written as ORC, read back, digest
     aggregates checked against the parquet view — DuckDB never needs to
     read ORC, only recompute the digests from the logical source."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="orc_src_") + "/events"
-    src = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "error")
-        .select("event_id", F.round(F.col("value") * 100).cast("long").alias("cents"))
-    )
-    src.write.mode("overwrite").orc(path)
-    back = spark.read.orc(path)
-    return back.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("event_id").alias("sum_event_id"),
-        F.sum("cents").alias("sum_cents"),
-    )
+    with _scratch("orc_src_") as path:
+        src = (
+            _t(spark, sf_dir, "events")
+            .filter(F.col("event_type") == "error")
+            .select("event_id", F.round(F.col("value") * 100).cast("long").alias("cents"))
+        )
+        src.write.mode("overwrite").orc(path)
+        back = spark.read.orc(path)
+        return _materialize(back.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("event_id").alias("sum_event_id"),
+            F.sum("cents").alias("sum_cents"),
+        ))
 
 
 # --- higher-order array functions -------------------------------------------
@@ -1748,20 +1742,19 @@ def ext_compact_small_files(spark, sf_dir):
     (coalesce, not repartition: no shuffle, just fewer write tasks),
     and verify the data digest survived and the file count dropped."""
     import glob
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="compact_")
-    src = _t(spark, sf_dir, "events").select("event_id")
-    src.repartition(64).write.parquet(f"{work}/small")
-    n_small = len(glob.glob(f"{work}/small/part-*.parquet"))
-    spark.read.parquet(f"{work}/small").coalesce(4).write.parquet(f"{work}/compact")
-    n_compact = len(glob.glob(f"{work}/compact/part-*.parquet"))
-    back = spark.read.parquet(f"{work}/compact")
-    return back.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("event_id").alias("sum_event_id"),
-        F.lit(n_compact < n_small).alias("fewer_files"),
-    )
+    with _scratch("compact_") as work:
+        src = _t(spark, sf_dir, "events").select("event_id")
+        src.repartition(64).write.parquet(f"{work}/small")
+        n_small = len(glob.glob(f"{work}/small/part-*.parquet"))
+        spark.read.parquet(f"{work}/small").coalesce(4).write.parquet(f"{work}/compact")
+        n_compact = len(glob.glob(f"{work}/compact/part-*.parquet"))
+        back = spark.read.parquet(f"{work}/compact")
+        return _materialize(back.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("event_id").alias("sum_event_id"),
+            F.lit(n_compact < n_small).alias("fewer_files"),
+        ))
 
 
 @register(
@@ -1779,20 +1772,19 @@ def ext_dynamic_partition_overwrite(spark, sf_dir):
     same rows in dynamic mode; the oracle's per-type counts hold iff
     no other partition was clobbered (static mode would have wiped
     them)."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="dpo_") + "/t"
-    e = _t(spark, sf_dir, "events").select("event_id", "event_type")
-    e.write.partitionBy("event_type").parquet(work)
-    clicks = e.filter(F.col("event_type") == "click")
-    (
-        clicks.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type")
-        .parquet(work)
-    )
-    back = spark.read.parquet(work)
-    return back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    with _scratch("dpo_") as work:
+        path = work + "/t"
+        e = _t(spark, sf_dir, "events").select("event_id", "event_type")
+        e.write.partitionBy("event_type").parquet(path)
+        clicks = e.filter(F.col("event_type") == "click")
+        (
+            clicks.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("event_type")
+            .parquet(path)
+        )
+        back = spark.read.parquet(path)
+        return _materialize(back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")))
 
 
 # --- set-op ALL variants + malformed-input handling -------------------------
@@ -1849,30 +1841,33 @@ def ext_source_csv_corrupt(spark, sf_dir):
     short row; ALL THREE malformed rows are captured (Spark 4 treats
     short rows as corrupt too), and no row is silently dropped
     (n_rows = 6)."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="csv_corrupt_") + "/data.csv"
-    with open(path, "w") as f:
-        f.write("id,qty,price\n")
-        f.write("1,10,1.5\n")
-        f.write("2,20,2.5\n")
-        f.write("3,30,3.5\n")
-        f.write("4,notanumber,4.5\n")   # type-corrupt -> _corrupt_record
-        f.write("5,50,alsobad\n")        # type-corrupt -> _corrupt_record
-        f.write("6,60\n")                # short row -> corrupt in Spark 4 PERMISSIVE (not null-padded)
-    df = (
-        spark.read.option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_bad")
-        .schema("id long, qty long, price double, _bad string")
-        .csv(path)
-    )
-    df = df.cache()
-    return df.agg(
-        F.count(F.when(F.col("_bad").isNull(), 1)).alias("n_good"),
-        F.count(F.col("_bad")).alias("n_corrupt"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
+    with _scratch("csv_corrupt_") as work:
+        path = work + "/data.csv"
+        with open(path, "w") as f:
+            f.write("id,qty,price\n")
+            f.write("1,10,1.5\n")
+            f.write("2,20,2.5\n")
+            f.write("3,30,3.5\n")
+            f.write("4,notanumber,4.5\n")   # type-corrupt -> _corrupt_record
+            f.write("5,50,alsobad\n")        # type-corrupt -> _corrupt_record
+            f.write("6,60\n")                # short row -> corrupt in Spark 4 PERMISSIVE (not null-padded)
+        df = (
+            spark.read.option("header", "true")
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_bad")
+            .schema("id long, qty long, price double, _bad string")
+            .csv(path)
+        )
+        # Spark rejects a raw-CSV query that references only the
+        # corrupt-record column; the cache is released once collected
+        df = df.cache()
+        out = _materialize(df.agg(
+            F.count(F.when(F.col("_bad").isNull(), 1)).alias("n_good"),
+            F.count(F.col("_bad")).alias("n_corrupt"),
+            F.count(F.lit(1)).alias("n_rows"),
+        ))
+        df.unpersist()
+        return out
 
 
 @register(
@@ -1935,17 +1930,17 @@ def ext_manifest_pruned_scan(spark, sf_dir):
     the range read resolved through the manifest (only overlapping
     files opened — operators/manifest.py). The oracle is the plain
     relational filter: pruning must be invisible in the answer."""
-    import tempfile
-
     from ..operators.layout import zorder_write
     from ..operators.manifest import build_manifest, pruned_read
 
-    work = tempfile.mkdtemp(prefix="manifest_scan_")
-    e = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    zorder_write(e, "user_id", "value", f"{work}/t", num_files=8)
-    build_manifest(spark, f"{work}/t", ["user_id"], f"{work}/m")
-    out = pruned_read(spark, f"{work}/t", f"{work}/m", "user_id", 40, 60)
-    return out.select("event_id", "user_id", F.round("value", 4).alias("value"))
+    with _scratch("manifest_scan_") as work:
+        e = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
+        zorder_write(e, "user_id", "value", f"{work}/t", num_files=8)
+        build_manifest(spark, f"{work}/t", ["user_id"], f"{work}/m")
+        out = pruned_read(spark, f"{work}/t", f"{work}/m", "user_id", 40, 60)
+        return _materialize(
+            out.select("event_id", "user_id", F.round("value", 4).alias("value"))
+        )
 
 
 @register(
@@ -2142,30 +2137,31 @@ def ext_merge_upsert(spark, sf_dir):
     covers both the merge semantics and the write-read round trip.
     At scale the join shuffles on the merge key — the same plan Delta's
     MERGE produces for the matched partition set."""
-    import tempfile
-
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     target = o.filter(F.col("o_orderkey") < 1000)
     source = o.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") < 1500)).select(
         "o_orderkey", (F.col("o_totalprice") + 10.0).alias("o_totalprice")
     )
-    path = tempfile.mkdtemp(prefix="merge_") + "/t"
-    target.write.mode("overwrite").parquet(path)
+    with _scratch("merge_") as work:
+        path = work + "/t"
+        target.write.mode("overwrite").parquet(path)
 
-    tgt = spark.read.parquet(path).alias("t")
-    src = source.alias("s")
-    merged = tgt.join(src, F.col("t.o_orderkey") == F.col("s.o_orderkey"), "full_outer").select(
-        F.coalesce(F.col("s.o_orderkey"), F.col("t.o_orderkey")).alias("o_orderkey"),
-        F.coalesce(F.col("s.o_totalprice"), F.col("t.o_totalprice")).alias("o_totalprice"),
-    )
-    out_path = tempfile.mkdtemp(prefix="merge_out_") + "/t"
-    merged.write.mode("overwrite").parquet(out_path)
-    back = spark.read.parquet(out_path)
-    return back.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("o_orderkey").alias("sum_keys"),
-        F.round(F.sum("o_totalprice"), 2).alias("sum_total"),
-    )
+        tgt = spark.read.parquet(path).alias("t")
+        src = source.alias("s")
+        merged = tgt.join(
+            src, F.col("t.o_orderkey") == F.col("s.o_orderkey"), "full_outer"
+        ).select(
+            F.coalesce(F.col("s.o_orderkey"), F.col("t.o_orderkey")).alias("o_orderkey"),
+            F.coalesce(F.col("s.o_totalprice"), F.col("t.o_totalprice")).alias("o_totalprice"),
+        )
+        out_path = work + "/out"
+        merged.write.mode("overwrite").parquet(out_path)
+        back = spark.read.parquet(out_path)
+        return _materialize(back.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("o_orderkey").alias("sum_keys"),
+            F.round(F.sum("o_totalprice"), 2).alias("sum_total"),
+        ))
 
 
 @register(
@@ -4169,29 +4165,27 @@ def ext_snapshot_time_travel(spark, sf_dir):
     directory listing, so an in-flight append can't tear a read. Both
     snapshots are aggregated from their manifests and must equal the
     oracle's filter-defined versions."""
-    import tempfile
+    with _scratch("time_travel_") as base:
+        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+        o.filter(F.col("o_orderkey") < 1000).write.parquet(f"{base}/commit1")
+        o.filter(
+            (F.col("o_orderkey") >= 1000) & (F.col("o_orderkey") < 2000)
+        ).write.parquet(f"{base}/commit2")
+        manifest = {1: [f"{base}/commit1"], 2: [f"{base}/commit1", f"{base}/commit2"]}
 
-    base = tempfile.mkdtemp(prefix="time_travel_")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    o.filter(F.col("o_orderkey") < 1000).write.parquet(f"{base}/commit1")
-    o.filter(
-        (F.col("o_orderkey") >= 1000) & (F.col("o_orderkey") < 2000)
-    ).write.parquet(f"{base}/commit2")
-    manifest = {1: [f"{base}/commit1"], 2: [f"{base}/commit1", f"{base}/commit2"]}
-
-    def snapshot(version: int):
-        return (
-            spark.read.parquet(*manifest[version])
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    F.round(F.col("o_totalprice") * 100).cast("long")
-                ).alias("sum_cents"),
+        def snapshot(version: int):
+            return (
+                spark.read.parquet(*manifest[version])
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum(
+                        F.round(F.col("o_totalprice") * 100).cast("long")
+                    ).alias("sum_cents"),
+                )
+                .select(F.lit(version).alias("version"), "n_rows", "sum_cents")
             )
-            .select(F.lit(version).alias("version"), "n_rows", "sum_cents")
-        )
 
-    return snapshot(1).unionAll(snapshot(2))
+        return _materialize(snapshot(1).unionAll(snapshot(2)))
 
 
 # --- Observation API (in-flight metrics) ---------------------------------------
@@ -4251,25 +4245,24 @@ def ext_source_xml(spark, sf_dir):
     schema — no external package since 4.0). The file is written here
     so the entry is hermetic; the oracle is the literal payload. Same
     digest-checked round-trip pattern as ext_source_jsonl/orc."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="xml_src_") + "/data.xml"
     rows = [(1, "alpha", 1.5), (2, "beta", 2.5), (3, "gamma", 3.5),
             (4, "delta", 4.5), (5, "epsilon", 5.5)]
-    with open(path, "w") as f:
-        f.write("<rows>\n")
-        for i, name, price in rows:
-            f.write(
-                f"  <row><id>{i}</id><name>{name}</name>"
-                f"<price>{price}</price></row>\n"
-            )
-        f.write("</rows>\n")
-    return (
-        spark.read.format("xml")
-        .option("rowTag", "row")
-        .schema("id long, name string, price double")
-        .load(path)
-    )
+    with _scratch("xml_src_") as work:
+        path = work + "/data.xml"
+        with open(path, "w") as f:
+            f.write("<rows>\n")
+            for i, name, price in rows:
+                f.write(
+                    f"  <row><id>{i}</id><name>{name}</name>"
+                    f"<price>{price}</price></row>\n"
+                )
+            f.write("</rows>\n")
+        return _materialize(
+            spark.read.format("xml")
+            .option("rowTag", "row")
+            .schema("id long, name string, price double")
+            .load(path)
+        )
 
 
 # --- hidden _metadata columns (file lineage) -----------------------------------
@@ -4290,21 +4283,19 @@ def ext_metadata_columns(spark, sf_dir):
     audit every warehouse debugging session needs. The per-origin
     counts must equal the plain per-type counts (the oracle), proving
     the hidden column binds to real scan-level file paths."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="meta_cols_") + "/by_type"
-    e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    e.write.partitionBy("event_type").mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    return (
-        back.select(
-            F.regexp_extract(
-                F.col("_metadata.file_path"), r"event_type=([^/]+)/", 1
-            ).alias("event_type")
+    with _scratch("meta_cols_") as out:
+        e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
+        e.write.partitionBy("event_type").mode("overwrite").parquet(out)
+        back = spark.read.parquet(out)
+        return _materialize(
+            back.select(
+                F.regexp_extract(
+                    F.col("_metadata.file_path"), r"event_type=([^/]+)/", 1
+                ).alias("event_type")
+            )
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 # hex-digit arithmetic shared with the DuckDB oracles (same contract as
@@ -4796,28 +4787,25 @@ def ext_source_binaryfile(spark, sf_dir):
     so a corrupted read changes the hash. At 100 TB this scan
     parallelizes per file and prunes on path; pair with
     llm_multimodal_* for the decode stages."""
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="binsrc_")
     import hashlib
 
-    for i in range(20):
-        with open(os.path.join(d, f"{i}.bin"), "wb") as f:
-            f.write(hashlib.md5(str(i).encode()).hexdigest().encode())
-    # decoy that the glob filter must exclude
-    with open(os.path.join(d, "ignore.txt"), "wb") as f:
-        f.write(b"not a bin")
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bin")
-        .load(d)
-    )
-    return files.select(
-        F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1).cast("long").alias("doc_id"),
-        F.col("length").alias("n_bytes"),
-        F.md5(F.col("content")).alias("content_md5"),
-    )
+    with _scratch("binsrc_") as d:
+        for i in range(20):
+            with open(os.path.join(d, f"{i}.bin"), "wb") as f:
+                f.write(hashlib.md5(str(i).encode()).hexdigest().encode())
+        # decoy that the glob filter must exclude
+        with open(os.path.join(d, "ignore.txt"), "wb") as f:
+            f.write(b"not a bin")
+        files = (
+            spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.bin")
+            .load(d)
+        )
+        return _materialize(files.select(
+            F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1).cast("long").alias("doc_id"),
+            F.col("length").alias("n_bytes"),
+            F.md5(F.col("content")).alias("content_md5"),
+        ))
 
 
 @register(
@@ -4853,30 +4841,28 @@ def ext_merge_schema_evolution(spark, sf_dir):
     The read-back rollup groups by the evolved column with a sentinel
     for pre-evolution rows; the oracle recomputes it from the logical
     source, so a wrong null-fill or dropped file changes the hash."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="evolve_") + "/t"
-    e = _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        "event_type",
-    )
-    e.filter(F.col("event_id") % 2 == 0).select("event_id", "cents").write.mode(
-        "append"
-    ).parquet(path)
-    e.filter(F.col("event_id") % 2 == 1).select(
-        "event_id", "cents", F.col("event_type").alias("etype")
-    ).write.mode("append").parquet(path)
-    back = spark.read.option("mergeSchema", "true").parquet(path)
-    return back.groupBy(
-        F.coalesce(F.col("etype"), F.lit("<pre-evolution>")).alias("etype")
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum("cents").alias("sum_cents"),
-        F.sum(F.when(F.col("etype").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_missing"),
-    )
+    with _scratch("evolve_") as path:
+        e = _t(spark, sf_dir, "events").select(
+            "event_id",
+            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            "event_type",
+        )
+        e.filter(F.col("event_id") % 2 == 0).select("event_id", "cents").write.mode(
+            "append"
+        ).parquet(path)
+        e.filter(F.col("event_id") % 2 == 1).select(
+            "event_id", "cents", F.col("event_type").alias("etype")
+        ).write.mode("append").parquet(path)
+        back = spark.read.option("mergeSchema", "true").parquet(path)
+        return _materialize(back.groupBy(
+            F.coalesce(F.col("etype"), F.lit("<pre-evolution>")).alias("etype")
+        ).agg(
+            F.count("*").alias("n"),
+            F.sum("cents").alias("sum_cents"),
+            F.sum(F.when(F.col("etype").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_missing"),
+        ))
 
 
 @register(
@@ -5418,12 +5404,7 @@ def ext_source_text(spark, sf_dir):
     narrow write + narrow scan, no shuffle until the 1-row digest
     aggregate; text is the raw-corpus interchange format an LLM
     pipeline ingests by the shard."""
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="text_src_")
-    try:
-        path = root + "/docs"
+    with _scratch("text_src_") as path:
         # coalesce NULL bodies to '' — the text writer requires a
         # non-null value column (regexp_replace propagates null)
         src = _t(spark, sf_dir, "documents").select(
@@ -5433,20 +5414,14 @@ def ext_source_text(spark, sf_dir):
         )
         src.write.mode("overwrite").text(path)
         back = spark.read.text(path)
-        out = back.agg(
+        return _materialize(back.agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(F.length("value")).alias("sum_chars"),
             F.countDistinct("value").alias("n_distinct"),
             F.sum(
                 F.conv(F.substring(F.md5("value"), 1, 8), 16, 10).cast("long")
             ).alias("md5_digest"),
-        )
-        # materialize before the temp dir is removed — the returned
-        # plan must not depend on the scratch files
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ))
 
 
 _DEC = "decimal(38,0)"
@@ -6807,14 +6782,9 @@ def ext_dynamic_partition_pruning(spark, sf_dir):
     instead of all N (tests/test_plan_shapes.py asserts the
     dynamicpruning subquery in the physical plan). The oracle
     collapses to the equivalent static filter. The round trip runs in
-    a scratch dir, result materialized before cleanup (the
-    ext_source_text discipline)."""
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="dpp_")
-    try:
-        path = root + "/orders_by_year"
+    the registry's ``_scratch`` dir and returns ``_materialize``-d
+    rows (at most one per order year)."""
+    with _scratch("dpp_") as path:
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_totalprice",
@@ -6830,7 +6800,8 @@ def ext_dynamic_partition_pruning(spark, sf_dir):
         )
         res = (
             fact.join(dim.hint("broadcast"), "order_year")
-            .groupBy("order_year")
+            # partition discovery reads the year back as int
+            .groupBy(F.col("order_year").cast("long").alias("order_year"))
             .agg(
                 F.count("*").cast("long").alias("n_orders"),
                 F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
@@ -6839,12 +6810,7 @@ def ext_dynamic_partition_pruning(spark, sf_dir):
             )
             .orderBy("order_year")
         )
-        rows = res.collect()
-        return spark.createDataFrame(
-            rows, "order_year bigint, n_orders bigint, total_cents bigint"
-        ).orderBy("order_year")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _materialize(res).orderBy("order_year")
 
 
 @register(
@@ -7168,8 +7134,7 @@ def ext_variant_roundtrip(spark, sf_dir):
         )
     )
     staged = e.select(js.alias("js")).withColumn("v", F.expr("parse_json(js)"))
-    work = tempfile.mkdtemp(prefix="variant_rt_")
-    try:
+    with _scratch("variant_rt_") as work:
         staged.write.mode("overwrite").parquet(work)
         back = spark.read.parquet(work)
         shredded = back.select(
@@ -7184,10 +7149,7 @@ def ext_variant_roundtrip(spark, sf_dir):
             F.sum("arr2").alias("sum_arr2"),
             F.sum(F.when(F.col("rt_ok"), 1).otherwise(0)).cast("long").alias("n_roundtrip"),
         )
-        rows = out.collect()  # materialize before the scratch dir is removed
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _materialize(out)
 
 
 # --- mergeable quantile sketch (accumulate / combine / estimate) ------------

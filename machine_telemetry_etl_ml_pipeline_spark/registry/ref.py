@@ -10,8 +10,6 @@ ids).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators.core import (
@@ -23,7 +21,7 @@ from ..operators.core import (
     stats,
     top_k_by,
 )
-from . import _epoch, _t, register
+from . import _epoch, _materialize, _scratch, _t, register
 
 
 EPOCH_SQL = "CAST(floor(epoch(ts)) AS BIGINT)"
@@ -482,22 +480,22 @@ def ref_sink_batch_insert(spark, sf_dir):
     (distributed write, one atomic commit per batch); the result is the
     read-back count after each commit plus read-back content digests,
     which the oracle recomputes from the logical source."""
-    path = tempfile.mkdtemp(prefix="sink_batch_") + "/t"
     src = _t(spark, sf_dir, "events").select(
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    after_first = None
-    for i in range(2):
-        src.write.mode("append").parquet(path)
-        if i == 0:
-            after_first = spark.read.parquet(path).count()
-    back = spark.read.parquet(path)
-    return back.agg(
-        F.lit(after_first).cast("long").alias("after_first"),
-        F.count(F.lit(1)).alias("after_second"),
-        F.sum("event_id").alias("sum_event_id"),
-        F.sum("cents").alias("sum_cents"),
-    )
+    with _scratch("sink_batch_") as path:
+        after_first = None
+        for i in range(2):
+            src.write.mode("append").parquet(path)
+            if i == 0:
+                after_first = spark.read.parquet(path).count()
+        back = spark.read.parquet(path)
+        return _materialize(back.agg(
+            F.lit(after_first).cast("long").alias("after_first"),
+            F.count(F.lit(1)).alias("after_second"),
+            F.sum("event_id").alias("sum_event_id"),
+            F.sum("cents").alias("sum_cents"),
+        ))
 
 
 @register(
@@ -516,7 +514,6 @@ def ref_sink_insert_defaults(spark, sf_dir):
     write-time default semantics (coalesce applied, timestamp present)
     are read back from the parquet commit and checked against the
     literal expected rows."""
-    path = tempfile.mkdtemp(prefix="sink_defaults_") + "/t"
     rows = spark.createDataFrame(
         [("operator", "q1", "regression", 0.9), ("manager", "q2", "anomaly", None)],
         "role string, query string, intent string, confidence double",
@@ -524,11 +521,12 @@ def ref_sink_insert_defaults(spark, sf_dir):
     stamped = rows.withColumn("confidence", F.coalesce("confidence", F.lit(0.0))).withColumn(
         "ts_epoch", F.unix_timestamp(F.current_timestamp()).cast("long")
     )
-    stamped.write.mode("append").parquet(path)
-    back = spark.read.parquet(path)
-    return back.select(
-        "role", "intent", "confidence", F.col("ts_epoch").isNotNull().alias("has_ts")
-    )
+    with _scratch("sink_defaults_") as path:
+        stamped.write.mode("append").parquet(path)
+        back = spark.read.parquet(path)
+        return _materialize(back.select(
+            "role", "intent", "confidence", F.col("ts_epoch").isNotNull().alias("has_ts")
+        ))
 
 
 @register(
@@ -544,24 +542,24 @@ def ref_sink_insert_json(spark, sf_dir):
     (project/db.py:171-185): map -> to_json at write, from_json on
     read-back (JSONB parity via MapType, SURVEY §1.2). first_key uses
     array_sort for a deterministic map-key order."""
-    path = tempfile.mkdtemp(prefix="sink_json_") + "/t"
     rows = spark.createDataFrame(
         [("M001", "regression", 82.5, {"fuelconsumption": 10.5, "humidity": 68.0})],
         "machine_id string, intent string, numerical_answer double, features map<string,double>",
     )
-    rows.withColumn("features_json", F.to_json("features")).drop("features").write.mode(
-        "append"
-    ).parquet(path)
-    back = spark.read.parquet(path).withColumn(
-        "features", F.from_json("features_json", "map<string,double>")
-    )
-    return back.select(
-        "machine_id",
-        "intent",
-        "numerical_answer",
-        F.array_sort(F.map_keys("features"))[0].alias("first_key"),
-        F.size(F.map_keys("features")).alias("n_features"),
-    )
+    with _scratch("sink_json_") as path:
+        rows.withColumn("features_json", F.to_json("features")).drop("features").write.mode(
+            "append"
+        ).parquet(path)
+        back = spark.read.parquet(path).withColumn(
+            "features", F.from_json("features_json", "map<string,double>")
+        )
+        return _materialize(back.select(
+            "machine_id",
+            "intent",
+            "numerical_answer",
+            F.array_sort(F.map_keys("features"))[0].alias("first_key"),
+            F.size(F.map_keys("features")).alias("n_features"),
+        ))
 
 
 @register(
@@ -583,25 +581,29 @@ def ref_ddl_create_table(spark, sf_dir):
     1-column schema would change the output)."""
     import uuid
 
-    loc = tempfile.mkdtemp(prefix="ddl_") + "/t"
     # unique per invocation: a fixed name would race under concurrent
     # query execution (DROP vs CREATE interleaving)
     name = f"telemetry_ddl_check_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"""
-        CREATE TABLE IF NOT EXISTS {name} (
-          machineid STRING, ts_epoch BIGINT, enginetemperature DOUBLE,
-          status STRING, status_encoded INT
-        ) USING parquet LOCATION '{loc}'
-        """
-    )
-    # idempotency: the reference loops IF NOT EXISTS on every run
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {name} (machineid STRING) USING parquet LOCATION '{loc}'"
-    )
-    out = spark.sql(f"DESCRIBE TABLE {name}").select("col_name", "data_type")
-    return out.filter(~F.col("col_name").startswith("#"))
+    with _scratch("ddl_") as loc:
+        spark.sql(
+            f"""
+            CREATE TABLE IF NOT EXISTS {name} (
+              machineid STRING, ts_epoch BIGINT, enginetemperature DOUBLE,
+              status STRING, status_encoded INT
+            ) USING parquet LOCATION '{loc}'
+            """
+        )
+        # idempotency: the reference loops IF NOT EXISTS on every run
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} (machineid STRING) USING parquet LOCATION '{loc}'"
+        )
+        out = _materialize(
+            spark.sql(f"DESCRIBE TABLE {name}")
+            .select("col_name", "data_type")
+            .filter(~F.col("col_name").startswith("#"))
+        )
+        spark.sql(f"DROP TABLE {name}")
+        return out
 
 
 # --- SERIAL / surrogate keys (SURVEY §1.2 type-mapping row 1) ---------------

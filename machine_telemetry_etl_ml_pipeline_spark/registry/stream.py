@@ -9,16 +9,15 @@ The operators and both drains live in streaming/windows.py: every
 entry opens the testdata with ``events_testdata_stream`` and drains
 through ``run_to_memory`` (naming the output mode its operators need)
 or ``foreach_batch_append``. An entry that writes files does so under
-one ``_scratch`` dir and returns ``_materialize``-d rows, so the dir
-is gone when the entry returns; those results are at most 50 rows.
+the registry's ``_scratch`` dir (``registry/__init__.py``) and returns
+``_materialize``-d rows, so the dir is gone when the entry returns;
+these results are at most 50 rows.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -34,23 +33,7 @@ from ..streaming.windows import (
     session_counts,
 )
 from ..streaming.windows import stream_static_join as broadcast_enrich
-from . import _t, register
-
-
-@contextmanager
-def _scratch(prefix: str):
-    """A fresh temp dir for an entry's files, removed on exit."""
-    work = tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield work
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _materialize(df):
-    """``df``'s rows as a local frame, so the result outlives the
-    files it was read from."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+from . import _materialize, _scratch, _t, register
 
 
 # --- streaming (oracle-checked through the memory sink) -----------------------
