@@ -8,8 +8,14 @@ Differences by design (SURVEY §3):
 - reads return un-executed DataFrames (call .collect()/.toPandas() at
   the edge) — the reference's client-side sort/slice/refilter stages
   are already folded into the plans;
-- writes go through partitioned-parquet sinks with write-time default
-  columns (no SERIAL ids — see ref_surrogate_ids for the parity note);
+- writes stamp write-time default columns (no SERIAL ids — see
+  ref_surrogate_ids for the parity note). Telemetry goes through the
+  partitioned-parquet sink of ``ingest``: the CSV ingest shuffles on
+  ``event_date``, a single-row insert is written by one task without
+  that shuffle (one job). The log appends run no Spark job: the driver
+  writes each row as one parquet file through pyarrow and renames it
+  into place (SCALE.md "Serve writes"); a root whose scheme pyarrow
+  cannot open fails them with ``UnsupportedFilesystem``;
 - ``execute_query`` is spark.sql over the registered views: the
   read-vs-write dispatch heuristic (db.py:55-75) disappears because
   the DataFrame/writer split makes it structural;
@@ -24,18 +30,26 @@ Differences by design (SURVEY §3):
 - the ``get_*`` reads run on a clone of the caller's session with AQE
   off, so each collected read is one Spark job, not one per shuffle
   exchange; the join-free served plans gain nothing from AQE (SCALE.md
-  "Served reads run without AQE"). Ingest, ``insert_telemetry``, the
-  log appends, ``init_db``/``execute_query`` and
-  ``verify_database_setup`` keep the caller's session and its AQE.
+  "Served reads run without AQE"). Ingest, ``insert_telemetry``,
+  ``init_db``/``execute_query`` and ``verify_database_setup`` keep the
+  caller's session and its AQE.
 """
 
 from __future__ import annotations
 
+import os
+import time
+import uuid
 from datetime import datetime, timedelta, timezone
+from urllib.parse import urlsplit
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import ingest as _ingest
 from .plans import telemetry as plans
@@ -48,6 +62,23 @@ _STORED = {
     "user_query_log": USER_QUERY_LOG,
     "predictions": PREDICTIONS,
 }
+
+
+class UnsupportedFilesystem(ValueError):
+    """The engine root's scheme has no pyarrow filesystem, so the log
+    appends, which commit from the driver through pyarrow, cannot write
+    there."""
+
+
+def _filesystem(path: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem and in-filesystem path of a table path: a
+    plain path (relative ones against the working directory, as Spark
+    resolves them) or a URI such as ``file:///``."""
+    uri = path if urlsplit(path).scheme else os.path.abspath(path)
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except (pa.ArrowException, OSError) as e:
+        raise UnsupportedFilesystem(f"pyarrow cannot open a filesystem for {path!r}: {e}") from e
 
 
 class TelemetryEngine:
@@ -107,22 +138,50 @@ class TelemetryEngine:
         target_time_epoch: int | None = None,
     ) -> None:
         """reference db.py:163-169: ts_epoch default + None->0.0."""
-        row = [(role, query, intent, float(confidence or 0.0), machine_id, target_time_epoch, None)]
-        df = self.spark.createDataFrame(row, USER_QUERY_LOG).withColumn(
-            "ts_epoch", F.unix_timestamp(F.current_timestamp()).cast("long")
+        self._append_row(
+            "user_query_log",
+            role=role,
+            query=query,
+            intent=intent,
+            confidence=float(confidence or 0.0),
+            machine_id=machine_id,
+            target_time_epoch=target_time_epoch,
         )
-        df.write.mode("append").parquet(self._paths["user_query_log"])
 
     def log_prediction(
         self, machine_id: str, intent: str, numerical_answer: float | None, features: dict
     ) -> None:
         """reference db.py:171-185: numpy scalars are handled by Arrow;
         the JSONB column is a native map."""
-        row = [(machine_id, intent, float(numerical_answer or 0.0), {k: float(v) for k, v in features.items()}, None)]
-        df = self.spark.createDataFrame(row, PREDICTIONS).withColumn(
-            "ts_epoch", F.unix_timestamp(F.current_timestamp()).cast("long")
+        self._append_row(
+            "predictions",
+            machine_id=machine_id,
+            intent=intent,
+            numerical_answer=float(numerical_answer or 0.0),
+            features={k: float(v) for k, v in features.items()},
         )
-        df.write.mode("append").parquet(self._paths["predictions"])
+
+    def _append_row(self, name: str, **row) -> None:
+        """Commit one row to a log table from the driver: a parquet file
+        written with the stored schema and ``ts_epoch`` stamped in whole
+        seconds, as ``unix_timestamp(current_timestamp())`` would. On a
+        local filesystem the file is written under a dot-name, which
+        Spark's listing skips, and renamed into place, so a concurrent
+        reader never lists a half-written file. Elsewhere (object
+        stores) rename is not atomic but a single-object PUT is, so the
+        final name is written directly."""
+        filesystem, directory = _filesystem(self._paths[name])
+        table = pa.Table.from_pylist(
+            [dict(row, ts_epoch=int(time.time()))], schema=to_arrow_schema(_STORED[name])
+        )
+        filesystem.create_dir(directory, recursive=True)
+        final = f"{directory}/part-{uuid.uuid4()}.parquet"
+        if not isinstance(filesystem, pafs.LocalFileSystem):
+            pq.write_table(table, final, filesystem=filesystem)
+            return
+        staged = f"{directory}/.{uuid.uuid4()}.parquet"
+        pq.write_table(table, staged, filesystem=filesystem)
+        filesystem.move(staged, final)
 
     # --- reads (reference get_* methods, db.py:187-475) ------------------
 

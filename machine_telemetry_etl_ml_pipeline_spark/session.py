@@ -13,7 +13,8 @@ and nowhere else:
   dispatch, before the entry body runs;
 - `TelemetryEngine` tunes its session and its serving clone.
 Table reads (`sources/catalog.load_table`) and entry bodies never set
-conf.
+conf. `tune_session` also puts the package on the Python workers'
+PYTHONPATH, so UDF entries run from any working directory.
 
 Scale posture (100 TB target, tested on local[32]):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting and
@@ -82,10 +83,29 @@ def get_spark(
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply `_sql_conf()` to a session the caller provides (the driver
-    passes its own SparkSession to ``entry``/``queries``)."""
+    passes its own SparkSession to ``entry``/``queries``), and put this
+    package's parent directory on the PYTHONPATH of the Python workers
+    the session starts."""
     for k, v in _sql_conf().items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on a running session; keep going
+    _share_import_root(spark.sparkContext.environment)
     return spark
+
+
+# The directory this package is imported from.
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _share_import_root(environment: dict[str, str]) -> None:
+    """Python UDFs, UDTFs and data sources are pickled by reference to
+    this package's modules, so the workers that unpickle them must be
+    able to import it, wherever the driver was started and whatever its
+    PYTHONPATH. ``environment`` is the SparkContext's worker
+    environment, which each Python function captures when it is
+    wrapped."""
+    paths = [p for p in environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _IMPORT_ROOT not in paths:
+        environment["PYTHONPATH"] = os.pathsep.join([_IMPORT_ROOT, *paths])

@@ -4,8 +4,8 @@ a typo, would silently drop it from the driver's verification order),
 the generated QUERIES.md must list every name in that order, oracles
 must be a subset of queries, every oracle must mention only
 pre-registered tables, importing the checkpoint operators must not
-import the registry, and dispatching an entry tunes the caller's
-session."""
+import the registry, dispatching an entry tunes the caller's session,
+and an entry that starts Python workers runs from outside the repo."""
 
 from __future__ import annotations
 
@@ -67,6 +67,29 @@ def test_ckpt_import_does_not_load_registry():
         [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
     )
     assert out.stdout.strip() == "[]", out.stdout
+
+
+def test_python_worker_entry_runs_outside_the_repo(tmp_path):
+    """The driver imports ``__spark_entry__`` by path from its own
+    working directory, with no PYTHONPATH; the Python workers that
+    ``ext_python_datasource`` starts must still import the package."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import importlib.util\n"
+        f"spec = importlib.util.spec_from_file_location('__spark_entry__', {os.path.join(root, '__spark_entry__.py')!r})\n"
+        "ent = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(ent)\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = SparkSession.builder.master('local[2]').config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "rows = ent.queries()['ext_python_datasource'](spark, '/root/testdata/sf0.001').collect()\n"
+        "print(sum(r.n for r in rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "5000"
 
 
 def test_contract_shapes():

@@ -1,11 +1,17 @@
 from __future__ import annotations
 
 import functools
+import os
+import random
+import time
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow.parquet as pq
 import pytest
 
-from machine_telemetry_etl_ml_pipeline_spark.engine import TelemetryEngine
+from machine_telemetry_etl_ml_pipeline_spark.engine import TelemetryEngine, UnsupportedFilesystem
 from machine_telemetry_etl_ml_pipeline_spark.plans import telemetry as plans
+from machine_telemetry_etl_ml_pipeline_spark.schemas import PREDICTIONS, USER_QUERY_LOG
 
 _START = 1756684800  # 9/1/2025 0:00 UTC, the fixture's first hour
 
@@ -161,14 +167,119 @@ def test_serving_session_matches_caller_session(spark, telemetry_csv, tmp_path):
 
 def test_stored_schema_round_trip(spark, telemetry_csv, tmp_path):
     """The reader supplies each table's schema instead of reading it
-    from the files, so a writer that drifts from it must fail here."""
+    from the files, so a writer that drifts from it must fail here. The
+    log tables are checked holding only driver-written (Arrow) files,
+    then mixed with a file from Spark's writer, and their rows must read
+    back exactly, the predictions map included."""
     eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
     eng.ingest_csv(telemetry_csv)
     eng.insert_telemetry({"machineid": "M009", "timestamp": "9/15/2025 4:00", "status": "Active"})
+    t0 = int(time.time())
     eng.log_user_query("operator", "hottest machine?", "regression", 0.5, "M001", 1756684800)
-    eng.log_prediction("M001", "regression", 81.2, {"humidity": 68.0})
-    for name, path in eng._paths.items():
-        assert spark.read.parquet(path).schema == eng._read_or_empty(name).schema, name
+    eng.log_prediction("M001", "regression", 81.2, {"humidity": 68.0, "pressure": 990.5})
+    t1 = int(time.time())
+    logged = {
+        "user_query_log": ("operator", "hottest machine?", "regression", 0.5, "M001", 1756684800),
+        "predictions": ("M001", "regression", 81.2, {"humidity": 68.0, "pressure": 990.5}),
+    }
+    spark_written = {
+        "user_query_log": ("viewer", "coolest?", "ranking", 0.0, None, None, 7),
+        "predictions": ("M002", "classification", 0.0, {}, 7),
+    }
+
+    def check():
+        for name, path in eng._paths.items():
+            assert spark.read.parquet(path).schema == eng._read_or_empty(name).schema, name
+
+    check()
+    for name, row in logged.items():
+        (got,) = eng._read_or_empty(name).collect()
+        assert tuple(got)[:-1] == row and t0 <= got.ts_epoch <= t1, name
+    for name, schema in (("user_query_log", USER_QUERY_LOG), ("predictions", PREDICTIONS)):
+        spark.createDataFrame([spark_written[name]], schema).write.mode("append").parquet(eng._paths[name])
+    check()
+    for name, row in logged.items():
+        got = [tuple(r)[:-1] for r in eng._read_or_empty(name).collect()]
+        assert sorted(got, key=repr) == sorted([row, spark_written[name][:-1]], key=repr), name
+
+
+def _log_dir_files(path: str) -> list[str]:
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+def test_facade_write_job_budget(spark, tmp_path, count_jobs):
+    """A log append commits from the driver: no Spark job, one parquet
+    file holding its row, no empty file and no staging file left. An
+    insert writes its one row with one job (no shuffle)."""
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    appends = [
+        ("user_query_log", lambda: eng.log_user_query("operator", "q", "regression", 0.9, "M001", 1)),
+        ("predictions", lambda: eng.log_prediction("M001", "regression", 81.2, {"humidity": 68.0})),
+    ] * 2
+    for name, append in appends:
+        before = _log_dir_files(eng._paths[name])
+        assert count_jobs(append) == 0, name
+        files = _log_dir_files(eng._paths[name])
+        assert len(files) == len(before) + 1, files
+        assert all(f.startswith("part-") and f.endswith(".parquet") for f in files), files
+        assert [pq.read_metadata(os.path.join(eng._paths[name], f)).num_rows for f in files] == [1] * len(files)
+    row = {"machineid": "M009", "timestamp": "9/15/2025 4:00", "status": "Active"}
+    assert count_jobs(lambda: eng.insert_telemetry(row)) == 1
+    assert eng.verify_database_setup() == {"telemetry": 1, "user_query_log": 2, "predictions": 2}
+
+
+def test_concurrent_log_appends(spark, tmp_path):
+    """Appends from threads get distinct files and none is lost."""
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+
+    def client(t):
+        for i in range(5):
+            eng.log_user_query("operator", f"q{t}-{i}", "regression", 0.9, "M001", i)
+
+    with ThreadPoolExecutor(8) as pool:
+        list(pool.map(client, range(8), timeout=120))
+    files = _log_dir_files(eng._paths["user_query_log"])
+    assert len(files) == 40 and all(f.startswith("part-") for f in files), files
+    queries = [r.query for r in eng._read_or_empty("user_query_log").collect()]
+    assert sorted(queries) == sorted(f"q{t}-{i}" for t in range(8) for i in range(5))
+
+
+def test_uri_root_writes_then_reads(spark, tmp_path):
+    root = tmp_path / "store"
+    eng = TelemetryEngine(f"file://{root}", spark=spark)
+    eng.log_user_query("operator", "q", "regression")
+    eng.log_prediction("M001", "regression", None, {})
+    eng.insert_telemetry({"machineid": "M009", "timestamp": "9/15/2025 4:00", "status": "Active"})
+    assert eng.verify_database_setup() == {"telemetry": 1, "user_query_log": 1, "predictions": 1}
+    assert TelemetryEngine(str(root), spark=spark).verify_database_setup() == eng.verify_database_setup()
+
+
+def test_log_append_to_unsupported_scheme_is_named(spark):
+    eng = TelemetryEngine("s3a://bucket/store", spark=spark)
+    with pytest.raises(UnsupportedFilesystem, match="s3a://bucket/store/user_query_log"):
+        eng.log_user_query("operator", "q", "regression")
+    assert issubclass(UnsupportedFilesystem, ValueError)
+
+
+def test_telemetry_files_sorted_by_machine_and_time(spark, telemetry_csv, tmp_path):
+    """Each telemetry file is sorted by (machineid, timestamp_epoch), the
+    layout the machine-keyed reads prune on, after an ingest of rows in
+    no order and after an insert."""
+    with open(telemetry_csv) as f:
+        header, *rows = f.readlines()
+    random.Random(0).shuffle(rows)
+    shuffled = tmp_path / "shuffled.csv"
+    shuffled.write_text(header + "".join(rows))
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    eng.ingest_csv(str(shuffled))
+    eng.insert_telemetry({"machineid": "M000", "timestamp": "9/1/2025 5:00", "status": "Active"})
+    table = eng._paths["telemetry"]
+    files = [os.path.join(d, f) for d, _, fs in os.walk(table) for f in fs if f.endswith(".parquet")]
+    assert len(files) >= 3
+    for path in files:
+        t = pq.read_table(path, columns=["machineid", "timestamp_epoch"])
+        keys = list(zip(t.column("machineid").to_pylist(), t.column("timestamp_epoch").to_pylist()))
+        assert keys == sorted(keys), os.path.relpath(path, table)
 
 
 def test_empty_root_reads(spark, tmp_path):
