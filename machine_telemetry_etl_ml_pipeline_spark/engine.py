@@ -9,13 +9,12 @@ Differences by design (SURVEY §3):
   the edge) — the reference's client-side sort/slice/refilter stages
   are already folded into the plans;
 - writes stamp write-time default columns (no SERIAL ids — see
-  ref_surrogate_ids for the parity note). Telemetry goes through the
-  partitioned-parquet sink of ``ingest``: the CSV ingest shuffles on
-  ``event_date``, a single-row insert is written by one task without
-  that shuffle (one job). The log appends run no Spark job: the driver
-  writes each row as one parquet file through pyarrow and renames it
-  into place (SCALE.md "Serve writes"); a root whose scheme pyarrow
-  cannot open fails them with ``UnsupportedFilesystem``;
+  ref_surrogate_ids for the parity note). The CSV ingest writes
+  through Spark's partitioned-parquet sink, shuffled on ``event_date``.
+  The serve writes run no Spark job: an insert and each log append are
+  committed by the driver as parquet files through pyarrow
+  (``ingest.commit_parquet``, SCALE.md "Serve writes"); a root whose
+  scheme pyarrow cannot open fails them with ``UnsupportedFilesystem``;
 - ``execute_query`` is spark.sql over the registered views: the
   read-vs-write dispatch heuristic (db.py:55-75) disappears because
   the DataFrame/writer split makes it structural;
@@ -32,26 +31,24 @@ Differences by design (SURVEY §3):
   exchange; the join-free served plans gain nothing from AQE (SCALE.md
   "Served reads run without AQE"). Ingest, ``insert_telemetry``,
   ``init_db``/``execute_query`` and ``verify_database_setup`` keep the
-  caller's session and its AQE.
+  caller's session and its AQE. A missing table reads as a frame over
+  an empty Arrow table, a local relation, so reading it starts no
+  Python worker and collecting it runs no job.
 """
 
 from __future__ import annotations
 
-import os
 import time
-import uuid
 from datetime import datetime, timedelta, timezone
-from urllib.parse import urlsplit
 
 import pyarrow as pa
-import pyarrow.parquet as pq
-from pyarrow import fs as pafs
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import ingest as _ingest
+from .ingest import UnsupportedFilesystem, commit_parquet  # noqa: F401 -- raised by the writes
 from .plans import telemetry as plans
 from .schemas import PREDICTIONS, TELEMETRY_STORED, USER_QUERY_LOG
 from .session import get_spark, tune_session
@@ -62,23 +59,6 @@ _STORED = {
     "user_query_log": USER_QUERY_LOG,
     "predictions": PREDICTIONS,
 }
-
-
-class UnsupportedFilesystem(ValueError):
-    """The engine root's scheme has no pyarrow filesystem, so the log
-    appends, which commit from the driver through pyarrow, cannot write
-    there."""
-
-
-def _filesystem(path: str) -> tuple[pafs.FileSystem, str]:
-    """The pyarrow filesystem and in-filesystem path of a table path: a
-    plain path (relative ones against the working directory, as Spark
-    resolves them) or a URI such as ``file:///``."""
-    uri = path if urlsplit(path).scheme else os.path.abspath(path)
-    try:
-        return pafs.FileSystem.from_uri(uri)
-    except (pa.ArrowException, OSError) as e:
-        raise UnsupportedFilesystem(f"pyarrow cannot open a filesystem for {path!r}: {e}") from e
 
 
 class TelemetryEngine:
@@ -113,7 +93,7 @@ class TelemetryEngine:
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table())
 
     def telemetry(self) -> DataFrame:
         """The telemetry table on the serving session (AQE off)."""
@@ -162,26 +142,14 @@ class TelemetryEngine:
         )
 
     def _append_row(self, name: str, **row) -> None:
-        """Commit one row to a log table from the driver: a parquet file
-        written with the stored schema and ``ts_epoch`` stamped in whole
-        seconds, as ``unix_timestamp(current_timestamp())`` would. On a
-        local filesystem the file is written under a dot-name, which
-        Spark's listing skips, and renamed into place, so a concurrent
-        reader never lists a half-written file. Elsewhere (object
-        stores) rename is not atomic but a single-object PUT is, so the
-        final name is written directly."""
-        filesystem, directory = _filesystem(self._paths[name])
+        """Commit one row to a log table from the driver
+        (``ingest.commit_parquet``): a parquet file written with the
+        stored schema and ``ts_epoch`` stamped in whole seconds, as
+        ``unix_timestamp(current_timestamp())`` would."""
         table = pa.Table.from_pylist(
             [dict(row, ts_epoch=int(time.time()))], schema=to_arrow_schema(_STORED[name])
         )
-        filesystem.create_dir(directory, recursive=True)
-        final = f"{directory}/part-{uuid.uuid4()}.parquet"
-        if not isinstance(filesystem, pafs.LocalFileSystem):
-            pq.write_table(table, final, filesystem=filesystem)
-            return
-        staged = f"{directory}/.{uuid.uuid4()}.parquet"
-        pq.write_table(table, staged, filesystem=filesystem)
-        filesystem.move(staged, final)
+        commit_parquet(self._paths[name], table)
 
     # --- reads (reference get_* methods, db.py:187-475) ------------------
 

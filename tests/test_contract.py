@@ -4,11 +4,13 @@ a typo, would silently drop it from the driver's verification order),
 the generated QUERIES.md must list every name in that order, oracles
 must be a subset of queries, every oracle must mention only
 pre-registered tables, importing the checkpoint operators must not
-import the registry, dispatching an entry tunes the caller's session,
-and an entry that starts Python workers runs from outside the repo."""
+import the registry, every function perfbench wraps by name exists,
+dispatching an entry tunes the caller's session, and an entry that
+starts Python workers runs from outside the repo."""
 
 from __future__ import annotations
 
+import ast
 import inspect
 import os
 import re
@@ -67,6 +69,41 @@ def test_ckpt_import_does_not_load_registry():
         [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
     )
     assert out.stdout.strip() == "[]", out.stdout
+
+
+def test_perfbench_wrap_targets_exist():
+    """perfbench/serve.py and perfbench/suite.py wrap package functions
+    by name in traced runs only; read their targets from the source, so
+    a rename breaks this test instead of the next ``--trace 1`` run."""
+    from machine_telemetry_etl_ml_pipeline_spark import ingest
+    from machine_telemetry_etl_ml_pipeline_spark.operators import ckpt
+    from machine_telemetry_etl_ml_pipeline_spark.plans import telemetry as plans
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def tree(name):
+        with open(os.path.join(root, "perfbench", name)) as f:
+            return ast.parse(f.read())
+
+    wrapped = {
+        call.args[1].value
+        for call in ast.walk(tree("serve.py"))
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Attribute)
+        and call.func.attr == "wrap"
+        and isinstance(call.args[0], ast.Name)
+        and call.args[0].id == "ingest"
+        and isinstance(call.args[1], ast.Constant)
+    }
+    (ckpt_funcs,) = [
+        ast.literal_eval(node.value)
+        for node in tree("suite.py").body
+        if isinstance(node, ast.Assign) and [t.id for t in node.targets if isinstance(t, ast.Name)] == ["_CKPT_FUNCS"]
+    ]
+    assert len(wrapped) >= 5 and len(ckpt_funcs) >= 4
+    assert not {n for n in wrapped if not callable(getattr(ingest, n, None))}
+    assert not {n for n in ckpt_funcs if not callable(getattr(ckpt, n, None))}
+    assert any(k.startswith("get_") and callable(getattr(plans, k)) for k in dir(plans))
 
 
 def test_python_worker_entry_runs_outside_the_repo(tmp_path):

@@ -5,13 +5,15 @@ import os
 import random
 import time
 from concurrent.futures import ThreadPoolExecutor
+from datetime import date, datetime
 
 import pyarrow.parquet as pq
 import pytest
 
+from machine_telemetry_etl_ml_pipeline_spark import ingest
 from machine_telemetry_etl_ml_pipeline_spark.engine import TelemetryEngine, UnsupportedFilesystem
 from machine_telemetry_etl_ml_pipeline_spark.plans import telemetry as plans
-from machine_telemetry_etl_ml_pipeline_spark.schemas import PREDICTIONS, USER_QUERY_LOG
+from machine_telemetry_etl_ml_pipeline_spark.schemas import PREDICTIONS, TELEMETRY_STORED, USER_QUERY_LOG
 
 _START = 1756684800  # 9/1/2025 0:00 UTC, the fixture's first hour
 
@@ -127,6 +129,9 @@ def test_serving_session_split(spark, tmp_path):
     """The get_* reads plan on a clone of the caller's session with AQE
     off; the caller's session keeps AQE, and so does arbitrary SQL."""
     eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    # plans over a stored file: a missing table is an empty local
+    # relation, which the optimizer folds whatever the session
+    eng.insert_telemetry({"machineid": "M009", "timestamp": "9/15/2025 4:00"})
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     for key in ("spark.sql.session.timeZone", "spark.sql.shuffle.partitions"):
         assert eng._serving.conf.get(key) == spark.conf.get(key), key
@@ -170,11 +175,13 @@ def test_stored_schema_round_trip(spark, telemetry_csv, tmp_path):
     from the files, so a writer that drifts from it must fail here. The
     log tables are checked holding only driver-written (Arrow) files,
     then mixed with a file from Spark's writer, and their rows must read
-    back exactly, the predictions map included."""
+    back exactly, the predictions map included. Telemetry holds Spark's
+    ingest files and a driver-written insert file; the inserted row must
+    read back as Spark's writer stores the same input."""
     eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
     eng.ingest_csv(telemetry_csv)
-    eng.insert_telemetry({"machineid": "M009", "timestamp": "9/15/2025 4:00", "status": "Active"})
     t0 = int(time.time())
+    eng.insert_telemetry({"machineid": "M009", "timestamp": "9/15/2025 4:00", "status": "Active"})
     eng.log_user_query("operator", "hottest machine?", "regression", 0.5, "M001", 1756684800)
     eng.log_prediction("M001", "regression", 81.2, {"humidity": 68.0, "pressure": 990.5})
     t1 = int(time.time())
@@ -195,6 +202,28 @@ def test_stored_schema_round_trip(spark, telemetry_csv, tmp_path):
     for name, row in logged.items():
         (got,) = eng._read_or_empty(name).collect()
         assert tuple(got)[:-1] == row and t0 <= got.ts_epoch <= t1, name
+
+    # timestamps compared as epoch microseconds, exact in any local zone
+    exact = [f"unix_micros({n}) AS {n}" if n in ("timestamp", "ts_utc") else n for n in TELEMETRY_STORED.names]
+    stored = eng._read_or_empty("telemetry").selectExpr(*exact)
+    raw = dict.fromkeys(ingest._INSERT_INPUT.names)
+    csv_row = spark.createDataFrame(
+        [dict(raw, machineid="M009", timestamp="9/15/2025 4:00", status="Active")], ", ".join(f"{c} string" for c in raw)
+    )
+    spark_path = str(tmp_path / "spark_written")
+    ingest.write_telemetry(ingest.normalize_telemetry(csv_row), spark_path)
+    (want,) = spark.read.schema(TELEMETRY_STORED).parquet(spark_path).selectExpr(*exact).collect()
+    (got,) = stored.filter("machineid = 'M009'").collect()
+    stamps = ("ts_utc", "ts_epoch")
+    assert {k: v for k, v in got.asDict().items() if k not in stamps} == {
+        k: v for k, v in want.asDict().items() if k not in stamps
+    }
+    assert got.timestamp == 1757908800 * 10**6 and t0 <= got.ts_epoch <= t1
+    # every row, ingested or inserted: write-time stamps and time features agree
+    assert stored.filter(
+        "ts_utc DIV 1000000 != ts_epoch OR timestamp DIV 1000000 != timestamp_epoch"
+        " OR to_date(timestamp_micros(timestamp)) != event_date"
+    ).count() == 0
     for name, schema in (("user_query_log", USER_QUERY_LOG), ("predictions", PREDICTIONS)):
         spark.createDataFrame([spark_written[name]], schema).write.mode("append").parquet(eng._paths[name])
     check()
@@ -209,8 +238,9 @@ def _log_dir_files(path: str) -> list[str]:
 
 def test_facade_write_job_budget(spark, tmp_path, count_jobs):
     """A log append commits from the driver: no Spark job, one parquet
-    file holding its row, no empty file and no staging file left. An
-    insert writes its one row with one job (no shuffle)."""
+    file holding its row, no empty file and no staging file left. So
+    does an insert: its normalization folds into a local relation, which
+    the driver collects without a job."""
     eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
     appends = [
         ("user_query_log", lambda: eng.log_user_query("operator", "q", "regression", 0.9, "M001", 1)),
@@ -224,7 +254,7 @@ def test_facade_write_job_budget(spark, tmp_path, count_jobs):
         assert all(f.startswith("part-") and f.endswith(".parquet") for f in files), files
         assert [pq.read_metadata(os.path.join(eng._paths[name], f)).num_rows for f in files] == [1] * len(files)
     row = {"machineid": "M009", "timestamp": "9/15/2025 4:00", "status": "Active"}
-    assert count_jobs(lambda: eng.insert_telemetry(row)) == 1
+    assert count_jobs(lambda: eng.insert_telemetry(row)) == 0
     assert eng.verify_database_setup() == {"telemetry": 1, "user_query_log": 2, "predictions": 2}
 
 
@@ -256,8 +286,13 @@ def test_uri_root_writes_then_reads(spark, tmp_path):
 
 def test_log_append_to_unsupported_scheme_is_named(spark):
     eng = TelemetryEngine("s3a://bucket/store", spark=spark)
-    with pytest.raises(UnsupportedFilesystem, match="s3a://bucket/store/user_query_log"):
-        eng.log_user_query("operator", "q", "regression")
+    writes = {
+        "user_query_log": lambda: eng.log_user_query("operator", "q", "regression"),
+        "telemetry": lambda: eng.insert_telemetry({"machineid": "M009", "timestamp": "9/15/2025 4:00"}),
+    }
+    for table, write in writes.items():
+        with pytest.raises(UnsupportedFilesystem, match=f"s3a://bucket/store/{table}"):
+            write()
     assert issubclass(UnsupportedFilesystem, ValueError)
 
 
@@ -282,8 +317,11 @@ def test_telemetry_files_sorted_by_machine_and_time(spark, telemetry_csv, tmp_pa
         assert keys == sorted(keys), os.path.relpath(path, table)
 
 
-def test_empty_root_reads(spark, tmp_path):
+def test_empty_root_reads(spark, tmp_path, count_jobs):
     eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    # a missing table reads as a local relation: no Python worker, no job
+    assert _executed_plan(eng.telemetry()).startswith("LocalTableScan <empty>")
+    assert count_jobs(lambda: eng.telemetry().collect()) == 0
     assert eng.verify_database_setup() == {"telemetry": 0, "user_query_log": 0, "predictions": 0}
     assert [tuple(r) for r in eng.execute_query("SELECT max(event_date) FROM telemetry").collect()] == [(None,)]
     reads = _row_reads(eng)
@@ -295,3 +333,79 @@ def test_empty_root_reads(spark, tmp_path):
 def test_uri_root_reads_like_plain_path(engine, spark):
     uri = TelemetryEngine("file://" + engine.root, spark=spark)
     assert uri.telemetry().count() == engine.telemetry().count() > 0
+
+
+def _table_files(table: str) -> list[str]:
+    """Every file under a table directory, relative to it."""
+    return sorted(os.path.relpath(os.path.join(d, f), table) for d, _, fs in os.walk(table) for f in fs)
+
+
+def test_insert_is_independent_of_the_local_time_zone(spark, tmp_path, monkeypatch):
+    """``collect()`` converts timestamps in the Python process's local
+    zone; the insert must store the same instants and dates in any."""
+    rows = [
+        {"machineid": "M001", "timestamp": "9/15/2025 2:00", "status": "Active"},
+        {"machineid": "M002", "timestamp": datetime(2025, 9, 15, 23, 30), "status": "Idle"},
+    ]
+    cols = ["machineid", "unix_micros(timestamp)", "timestamp_epoch", "event_date"]
+
+    def stored(zone):
+        monkeypatch.setenv("TZ", zone)
+        time.tzset()
+        try:
+            eng = TelemetryEngine(str(tmp_path / zone.replace("/", "_")), spark=spark)
+            ingest.insert_rows(spark, rows, eng._paths["telemetry"])
+        finally:
+            monkeypatch.undo()
+            time.tzset()
+        return sorted(eng._read_or_empty("telemetry").selectExpr(*cols).collect())
+
+    utc = stored("UTC")
+    assert stored("America/New_York") == utc
+    assert [tuple(r)[1:] for r in utc] == [
+        (1757901600 * 10**6, 1757901600, date(2025, 9, 15)),
+        (1757979000 * 10**6, 1757979000, date(2025, 9, 15)),
+    ]
+
+
+def test_insert_without_timestamp_lands_in_the_null_partition(spark, tmp_path):
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    eng.insert_telemetry({"machineid": "M009", "status": "Active"})
+    (path,) = _table_files(eng._paths["telemetry"])
+    assert path.startswith("event_date=__HIVE_DEFAULT_PARTITION__/part-"), path
+    (got,) = eng.telemetry().collect()
+    assert got.machineid == "M009" and got.timestamp is None and got.event_date is None
+
+
+def test_concurrent_inserts(spark, tmp_path):
+    """Inserts from threads commit distinct files, none is lost and no
+    staging file is left behind."""
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+
+    def client(t):
+        for i in range(5):
+            eng.insert_telemetry({"machineid": f"M{t}", "timestamp": f"9/{1 + i}/2025 {t}:00", "status": "Active"})
+
+    with ThreadPoolExecutor(8) as pool:
+        list(pool.map(client, range(8), timeout=300))
+    files = _table_files(eng._paths["telemetry"])
+    assert len(files) == 40 and all(os.path.basename(f).startswith("part-") for f in files), files
+    got = sorted((r.machineid, r.timestamp_epoch) for r in eng.telemetry().collect())
+    assert got == sorted((f"M{t}", _START + i * 86400 + t * 3600) for t in range(8) for i in range(5))
+
+
+def test_multi_date_insert_writes_one_sorted_file_per_date(spark, tmp_path):
+    eng = TelemetryEngine(str(tmp_path / "store"), spark=spark)
+    rows = [
+        {"machineid": m, "timestamp": f"9/{d}/2025 {h}:00"}
+        for m, d, h in [("M2", 2, 5), ("M1", 1, 7), (None, 2, 3), ("M2", 1, 1), ("M1", 2, 9), ("M1", 1, 2), ("M2", 2, 0)]
+    ]
+    assert ingest.insert_rows(spark, rows, eng._paths["telemetry"]) == 7
+    table = eng._paths["telemetry"]
+    files = _table_files(table)
+    assert [os.path.dirname(f) for f in files] == ["event_date=2025-09-01", "event_date=2025-09-02"], files
+    keys = [
+        list(zip(*pq.read_table(os.path.join(table, f), columns=["machineid", "hour"]).to_pydict().values()))
+        for f in files
+    ]
+    assert keys == [[("M1", 2), ("M1", 7), ("M2", 1)], [(None, 3), ("M1", 9), ("M2", 0), ("M2", 5)]]

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
+
 from machine_telemetry_etl_ml_pipeline_spark.ingest import ingest_csv
 from machine_telemetry_etl_ml_pipeline_spark.schemas import TELEMETRY
 
@@ -46,3 +48,21 @@ def test_ingest_end_to_end(spark, telemetry_csv, tmp_path):
     back = spark.read.parquet(table)
     assert back.count() == n
     assert back.filter("ts_epoch IS NULL").count() == 0  # write-time default stamped
+
+
+def test_ingest_job_budget(spark, telemetry_csv, tmp_path, count_jobs):
+    """The CSV is scanned once: its header read, the shuffle's map stage
+    and the write; the write itself counts the rows it commits,
+    duplicates included."""
+    table = str(tmp_path / "telemetry_tbl")
+    got = []
+    assert count_jobs(lambda: got.append(ingest_csv(spark, telemetry_csv, table))) == 3
+    written = sum(pq.read_metadata(os.path.join(d, f)).num_rows for d, _, fs in os.walk(table) for f in fs if f.endswith(".parquet"))
+    assert got == [written] == [3 * 48 + 3]
+
+
+def test_ingest_of_an_empty_csv_returns_zero(spark, tmp_path):
+    csv = tmp_path / "empty.csv"
+    csv.write_text("MachineID,Type,Location,Timestamp,EngineTemperature,FuelConsumption,"
+                   "VibrationLevel,Humidity,Pressure,PowerOutput,OperatingHours,Status\n")
+    assert ingest_csv(spark, str(csv), str(tmp_path / "telemetry_tbl")) == 0
