@@ -35,8 +35,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # (tests/test_contract.py); ml_model_exact_scoring registers only where
 # the reference model blobs exist.
 QUERY_ORDER = (
+    "graph_k_core", "graph_common_neighbors", "ml_als_recommend",
+    "ext_manifest_pruned_scan",
     "ext_compact_small_files", "ext_dynamic_partition_overwrite",
-    "ext_source_csv_corrupt", "ext_manifest_pruned_scan", "ext_source_orc",
+    "ext_source_csv_corrupt", "ext_source_orc",
     "ext_merge_upsert", "ext_source_jsonl", "ref_sink_batch_insert",
     "ref_sink_insert_defaults", "ref_sink_insert_json", "ref_ddl_create_table",
     "ext_snapshot_time_travel", "ext_source_xml", "ext_metadata_columns",
@@ -53,8 +55,8 @@ QUERY_ORDER = (
     "llm_segment_dedup", "ext_salted_join", "llm_lsh_candidate_pairs",
     "llm_minhash_jaccard_estimate", "llm_dedup_keep_best", "llm_dedup_cluster_sizes",
     "llm_semdedup_prune_scaled", "llm_embedding_neardup_scaled", "graph_triangle_count",
-    "graph_k_core", "graph_label_propagation", "graph_bfs_distances",
-    "graph_common_neighbors", "graph_clustering_coefficient",
+    "graph_label_propagation", "graph_bfs_distances",
+    "graph_clustering_coefficient",
     "graph_degree_assortativity", "ext_equiheight_histogram", "ml_random_forest_vote",
     "llm_keyword_rake", "ml_gbt_stumps", "ml_mann_whitney_u", "graph_pagerank",
     "ml_naive_bayes_sql", "ext_intersect_all", "ext_except_all",
@@ -119,7 +121,7 @@ QUERY_ORDER = (
     "ext_attribution_first_touch", "ext_percent_change_wow",
     "ext_running_distinct_users", "ext_json_nested_roundtrip", "ext_skew_metrics",
     "llm_boilerplate_prefix", "ext_mad_outliers", "ext_ewma_smoothing", "ext_crosstab",
-    "ml_chi_square_assoc", "ml_fpgrowth_itemsets", "ml_als_recommend",
+    "ml_chi_square_assoc", "ml_fpgrowth_itemsets",
     "llm_ngram_containment", "llm_char_entropy",
     "llm_source_temperature_mix", "ext_asof_join_forward", "ext_grouped_median",
     "ext_decimal_exact", "ext_bitwise_agg", "ext_null_semantics",

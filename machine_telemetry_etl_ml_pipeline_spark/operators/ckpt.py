@@ -85,12 +85,17 @@ def _jsc(spark: SparkSession):
         return None
 
 
+_RDD_LEAVES = ("LogicalRDD", "ExternalRDD")
+
+
 def owned_ids(df: DataFrame) -> list:
-    """The persisted RDD ids `df` reads: the `LogicalRDD` leaves of its
-    analyzed plan whose RDD is in the context's persistent set, in
-    plan order without repeats (a self-join reads one id twice).
-    `leaf.rdd()` is the JVM plan node's RDD handle, read for its id
-    only: no rows reach Python."""
+    """The persisted RDD ids `df` reads: the RDD leaves of its analyzed
+    plan whose RDD is in the context's persistent set, in plan order
+    without repeats (a self-join reads one id twice). A checkpoint is
+    a `LogicalRDD` leaf; a frame made from a typed RDD, such as an ALS
+    model's factor frames over their cached factor RDDs, is an
+    `ExternalRDD` leaf. `leaf.rdd()` is the JVM plan node's RDD
+    handle, read for its id only: no rows reach Python."""
     jsc = _jsc(df.sparkSession)
     if jsc is None:
         return []
@@ -99,7 +104,7 @@ def owned_ids(df: DataFrame) -> list:
     leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
     while leaves.hasNext():
         leaf = leaves.next()
-        if leaf.getClass().getSimpleName() != "LogicalRDD":
+        if leaf.getClass().getSimpleName() not in _RDD_LEAVES:
             continue
         rid = leaf.rdd().id()
         if rid not in ids and persistent.containsKey(rid):
@@ -125,11 +130,11 @@ def checkpoint_rotate(
 
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
     """localCheckpoint(eager=False): the LOGICAL plan caps immediately
-    (LogicalRDD), but blocks materialize only at the frame's first
-    action — so an iterative loop whose per-round 1-row stats collect
-    already scans the round's frame gets the checkpoint materialized
-    in the SAME job (1 job/round instead of a stats job + an eager
-    checkpoint job; VERDICT r13 item 3). The frame owns its id from
+    (LogicalRDD), but blocks materialize only in the first job that
+    reads the frame — so when the next step of a loop is itself a job
+    over the frame (k-core's eager degree checkpoint over the peeled
+    edge list, label propagation's final round), the checkpoint lands
+    in that job instead of one of its own. The frame owns its id from
     construction on (`owned_ids`). Honors the reliable-checkpoint
     escape hatch like checkpoint_rotate."""
     if _reliable(df):
@@ -141,7 +146,9 @@ def attributed(df: DataFrame, action):
     """Run `action` — the FIRST action over a frame built from
     lazy_checkpoint, which materializes its blocks — and return
     (action result, owned_ids(df)): the ids to retire once the next
-    round's frame has superseded `df`."""
+    round's frame has superseded `df`. No package code calls it any
+    more; it stays because perfbench/suite.py wraps it by name
+    (tests/test_contract.py)."""
     return action(), owned_ids(df)
 
 

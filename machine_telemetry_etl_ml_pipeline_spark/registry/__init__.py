@@ -77,9 +77,9 @@ def _scratch(prefix: str):
     from inside the block, so nothing it wrote outlives the call. Those
     results are bounded by construction: a digest, per-type count or
     literal payload of 1 to 50 rows, the 20 files ext_source_binaryfile
-    mints, or ext_manifest_pruned_scan's 21-user window, whose events
-    per user stay flat as SF grows (1,384 rows at sf0.01, 1,409 at
-    sf0.1)."""
+    mints, or ext_manifest_pruned_scan's 4-user window, whose events
+    per user stay flat as SF grows (266 rows at sf0.001, 258 at sf0.01,
+    289 at sf0.1)."""
     work = tempfile.mkdtemp(prefix=prefix)
     try:
         yield work

@@ -1917,11 +1917,17 @@ def ext_collect_list_ordered(spark, sf_dir):
     )
 
 
+# user ids 2-5: present at every SF (sf0.001 holds ids 0-14), and a
+# low corner of the Z-order, so the manifest skips 3 of the 8 files at
+# sf0.001 and 5 at sf0.1 (tests/test_layout.py)
+_MANIFEST_USERS = (2, 5)
+
+
 @register(
     "ext_manifest_pruned_scan",
-    """
+    f"""
     SELECT event_id, user_id, round(value, 4) AS value
-    FROM events WHERE user_id BETWEEN 40 AND 60
+    FROM events WHERE user_id BETWEEN {_MANIFEST_USERS[0]} AND {_MANIFEST_USERS[1]}
     """,
 )
 def ext_manifest_pruned_scan(spark, sf_dir):
@@ -1937,7 +1943,7 @@ def ext_manifest_pruned_scan(spark, sf_dir):
         e = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
         zorder_write(e, "user_id", "value", f"{work}/t", num_files=8)
         build_manifest(spark, f"{work}/t", ["user_id"], f"{work}/m")
-        out = pruned_read(spark, f"{work}/t", f"{work}/m", "user_id", 40, 60)
+        out = pruned_read(spark, f"{work}/t", f"{work}/m", "user_id", *_MANIFEST_USERS)
         return _materialize(
             out.select("event_id", "user_id", F.round("value", 4).alias("value"))
         )
@@ -4548,7 +4554,7 @@ def ext_equiheight_histogram(spark, sf_dir):
     # removed.
     # r14 session 2 (guide §2.4): the (cents, cnt) rollup is a LAZY
     # localCheckpoint materialized as a side effect of the stats
-    # collect below (the k-core fusion), and the ASSIGNMENT side then
+    # collect below (its first reader lands it), and the ASSIGNMENT side then
     # reads the checkpointed rollup instead of re-scanning lineitem —
     # bucket, n_rows = sum(cnt), and min/max cents are all functions
     # of the rollup alone. One parquet scan end-to-end instead of

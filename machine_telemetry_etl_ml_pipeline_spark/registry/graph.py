@@ -12,7 +12,11 @@ converge to identical values.
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.ckpt import checkpoint_rotate, lazy_checkpoint, owned_ids, retire_ids
 from . import _t, register
@@ -402,7 +406,8 @@ def graph_label_propagation(spark, sf_dir):
     # round's plan nests an earlier round's — and the single eager
     # checkpoint of the FINAL round materializes the entire chain in
     # one job (upstream lazy-checkpoint blocks land as a side effect,
-    # exactly the k-core 1-job/round discipline of graph_k_core).
+    # as graph_k_core's peel lands under the next round's degree
+    # checkpoint).
     # A/B at sf0.1, 7 interleaved reps, identical outputs at
     # sf0.001/sf0.01: 4-job shape min 1.797 s vs fused 1.725 s (and
     # an intermediate 2-job variant was a wash at 1.794) — the win is
@@ -451,6 +456,20 @@ def graph_label_propagation(spark, sf_dir):
 
 
 # --- link prediction: common neighbors / Jaccard -----------------------------
+
+
+def _ordered_rows(spark, rows, schema, *order):
+    """Driver-side result rows as a frame explicitly ordered by `order`
+    (a frame's partitions do not promise to keep list order): an
+    Arrow-built local relation in one partition, sorted in place, so a
+    sink runs one job and starts no Python worker. A global orderBy
+    range-samples and shuffles the rows (3 jobs), and under coalesce(1)
+    a list-built frame's Python-worker partitions run one after
+    another."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table).coalesce(1).sortWithinPartitions(*order)
 
 
 @register(
@@ -537,15 +556,17 @@ def graph_common_neighbors(spark, sf_dir):
     ).limit(20)
     rows = out.collect()  # <=20 rows by construction
     retire_ids(spark, e_ids)
-    # re-apply the ordering explicitly: parallelize happens to keep
-    # local-list order today, but ordered output should not ride on
-    # that (graph_k_core sets the same pattern)
-    return spark.createDataFrame(rows, out.schema).orderBy(
-        F.col("jaccard").desc(), F.col("cn").desc(), "u", "w"
+    return _ordered_rows(
+        spark, rows, out.schema, F.col("jaccard").desc(), F.col("cn").desc(), "u", "w"
     )
 
 
 _K = 2
+
+
+_KCORE_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("peel_round", "n_nodes", "n_edges")]
+)
 
 
 _PEEL_ROUNDS = 6
@@ -610,56 +631,47 @@ def graph_k_core(spark, sf_dir):
     shape GraphX's peeling iteration shuffles. The fixed round cap
     (not run-to-fixpoint) keeps the plan static and SF-independent;
     peel depth beyond 6 is cut off identically on both engines.
-    Early exit (r9): the peel only ever REMOVES edges, so if a
-    round's (n_nodes, n_edges) equals the previous round's, the
-    survivor set is literally unchanged (a subset with equal
-    cardinality is the same set) and every later round's stats are
-    identical — they are filled driver-side and no further jobs run.
-    The fixpoint test is FREE (the per-round 1-row stats collect IS
-    the output) and the emitted trajectory is bit-identical; at
+    One job carries each round's degrees and stats: the degree table
+    is an eager checkpoint whose plan observes (count, sum(c)), so
+    the round's (n_nodes, n_edges) comes off that job's metrics with
+    no separate collect, and the peel's semi-joins read the
+    checkpointed degrees instead of re-deriving them: one 2|E| degree
+    shuffle per round. Early exit (r9): the peel only ever REMOVES
+    edges, so if a round's (n_nodes, n_edges) equals the previous
+    round's, the survivor set is literally unchanged (a subset with
+    equal cardinality is the same set) and every later round's stats
+    are identical — they are filled driver-side and no further jobs
+    run. Stats still precede the peel, so the test stays free; at
     sf0.1 the graph converges at round 4, skipping 2 of 6 rounds
-    (SCALE.md §Round-9 k-core monotone early-exit: 3.87s vs 4.04s min, every
-    interleaved rep pairwise faster). At 100 TB the same test stops
-    paying for converged rounds regardless of where the cap sits.
+    (SCALE.md §k-core reads its stats off the degree checkpoint). At
+    100 TB the same test stops paying for converged rounds regardless
+    of where the cap sits.
     Reference analog: none (extends graph_triangle_count family)."""
-    from ..operators.ckpt import attributed, lazy_checkpoint
-
-    # r14 (VERDICT r13 item 3, guide §5): ONE job per round instead of
-    # two. Each round's edge list is a LAZY localCheckpoint — the plan
-    # caps immediately, and the round's 1-row stats collect (which
-    # scans the full edge list anyway for deg) materializes the
-    # checkpoint blocks as a side effect of the SAME job; the r13
-    # shape paid a separate eager-checkpoint job (one extra read+write
-    # pass over e per round, plus a scheduling round-trip).
-    # `attributed` returns the round frame's own block id with the
-    # collect's rows, so rotation keeps the exact retire-the-superseded
-    # discipline; the previous round's blocks retire only after the
-    # new round's blocks are live (the semi-join that produced them
-    # has already run).
-    # deg stays deliberately unmaterialized: the stats collect and the
-    # survivor semi-joins re-derive it from the checkpoint — measured
-    # cheaper than a per-round deg checkpoint or persist
-    # (OPTIMIZATION_r14.md §graph_k_core peel fusion: fused 3.35s vs
-    # eager 3.52s min at sf0.1 over 5 interleaved reps on the r14 edge
-    # build).
+    # Round i: deg_i is an EAGER checkpoint over e_i, and its one
+    # materializing job (a) fills the observation with the round's
+    # stats and (b) materializes e_i's lazy checkpoint blocks, since
+    # e_i's plan runs underneath it. The peel e_{i+1} stays a lazy
+    # checkpoint over (e_i, deg_i); the next round's deg job lands it.
+    # deg_{i-1} and e_{i-1} retire once deg_i has landed: e_i no longer
+    # needs them. The observation must sit on the EAGER checkpoint: on
+    # the peel's lazy one, with broadcast joins off, it read metrics of
+    # a stage that had not run yet (zeros, a false early exit).
     e = lazy_checkpoint(_copurchase_edges(spark, sf_dir).select("u", "v"))
+    spent: list = []
     rows = []
-    prev_ids: list = []
     for i in range(_PEEL_ROUNDS + 1):
-        deg = (
+        obs = Observation()
+        deg, deg_ids = checkpoint_rotate(
             e.select(F.col("u").alias("node"))
             .union(e.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("c"))
+            .observe(obs, F.count("*").alias("n_nodes"), F.sum("c").alias("cnt2")),
+            retire=spent,
         )
-        st_df = deg.agg(
-            F.count("*").alias("n_nodes"), F.sum("c").alias("cnt2")
-        )
-        st_rows, new_ids = attributed(e, lambda: st_df.collect())
-        st = st_rows[0]
-        retire_ids(spark, prev_ids)
-        prev_ids = new_ids
+        st = obs.get
         rows.append((i, int(st["n_nodes"]), int(st["cnt2"] or 0) // 2))
+        spent = deg_ids + owned_ids(e)
         if i == _PEEL_ROUNDS:
             break
         if i > 0 and rows[i][1:] == rows[i - 1][1:]:
@@ -677,10 +689,8 @@ def graph_k_core(spark, sf_dir):
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
         )
-    retire_ids(spark, prev_ids)  # trajectory is on the driver now
-    return spark.createDataFrame(
-        rows, "peel_round long, n_nodes long, n_edges long"
-    ).orderBy("peel_round")
+    retire_ids(spark, spent)  # trajectory is on the driver now
+    return _ordered_rows(spark, rows, _KCORE_SCHEMA, "peel_round")
 
 
 def _sssp_oracle() -> str:

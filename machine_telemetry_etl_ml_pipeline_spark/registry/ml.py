@@ -20,6 +20,7 @@ from ..llm.prep import md5_bucket
 from ..llm.similarity import _as_double, dot, norm
 from ..llm.textstats import words_col
 from ..ml import refmodels
+from ..operators.ckpt import owned_ids, retire_ids
 from . import _t, register
 from .ext import _CENTS, _DEC
 from .llm import _HEXPOS
@@ -529,17 +530,25 @@ def ml_als_recommend(spark, sf_dir):
     als = ALS(
         rank=4, maxIter=8, seed=7, regParam=0.05,
         userCol="user", itemCol="item", ratingCol="rating",
-        coldStartStrategy="drop",
+        coldStartStrategy="drop", checkpointInterval=-1,
     )
-    pred = als.fit(r).transform(r)
+    model = als.fit(r)
     rmse = RegressionEvaluator(
         metricName="rmse", labelCol="rating", predictionCol="prediction"
-    ).evaluate(pred)
+    ).evaluate(model.transform(r))
     mean_rating = r.agg(F.avg("rating")).collect()[0][0]
     dims = r.agg(
         F.countDistinct("user").alias("n_users"),
         F.countDistinct("item").alias("n_items"),
     ).collect()[0]
+    # fit caches both factor RDDs (ALS's finalStorageLevel); the result
+    # is on the driver now, so free them before the model goes away.
+    # checkpointInterval=-1: where the context has a checkpoint dir, ALS
+    # would otherwise checkpoint round 0's factors and leave one more
+    # persisted RDD that no returned frame reaches
+    retire_ids(
+        spark, owned_ids(model.userFactors) + owned_ids(model.itemFactors)
+    )
     return spark.createDataFrame(
         [(dims.n_users, dims.n_items, bool(rmse < 0.25 * mean_rating))],
         "n_users bigint, n_items bigint, rmse_below_quarter_mean boolean",

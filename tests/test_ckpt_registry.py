@@ -2,7 +2,7 @@
 
 - After build and noop sink, an entry leaves persisted only the blocks
   its returned frame owns (`ckpt.owned_ids`): every superseded round
-  has been retired.
+  has been retired, and ALS's cached factor RDDs are freed.
 - Three checkpointing entries run from threads on one session give
   the sequential rows, and retiring each result's own ids leaves the
   block manager empty. Ownership is read off each frame, so nothing
@@ -79,7 +79,8 @@ def oracle():
 
 
 @pytest.mark.parametrize(
-    "name, n_owned", [("graph_k_core", 0), ("graph_label_propagation", 1)]
+    "name, n_owned",
+    [("graph_k_core", 0), ("graph_label_propagation", 1), ("ml_als_recommend", 0)],
 )
 def test_entry_leaves_only_owned_blocks(spark, name, n_owned):
     unpersist_all(spark)

@@ -39,6 +39,31 @@ def test_k_core_matches_bruteforce_peel(spark):
         assert b[2] <= a[2] and b[1] <= a[1]
 
 
+def test_k_core_trajectory_under_join_strategies_and_reliable_checkpoints(
+    spark, monkeypatch, tmp_path
+):
+    """Each round's stats are observed metrics of the degree checkpoint's
+    own job. Sort-merge joins (no broadcast) and reliable checkpoints
+    change which jobs run when; the trajectory must not move, or a
+    round read metrics of a stage that had not run yet."""
+
+    def trajectory():
+        return [tuple(r) for r in _run(spark, "graph_k_core").collect()]
+
+    expect = trajectory()
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        assert trajectory() == expect
+    finally:
+        for k in keys:
+            spark.conf.unset(k)
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    assert trajectory() == expect
+    assert expect[0][2] > expect[-1][2] > 0  # the peel removed edges and kept some
+
+
 def test_weighted_sssp_matches_bellman_ford(spark):
     rows = _run(spark, "graph_weighted_sssp").collect()
     pair_cnt = defaultdict(int)

@@ -1,4 +1,5 @@
-"""Build-phase Spark job budget per bench headline entry, at sf0.001.
+"""Build-phase Spark job budget per bench headline entry, and the sink
+budget of the entries that return driver-side rows, at sf0.001.
 
 An entry's build is the call that returns its frame. The jobs it runs
 are its construction-time work: checkpoints, bounded collects and
@@ -32,7 +33,7 @@ _BUILD_JOB_BUDGET = dict.fromkeys(HEADLINE, 0) | {
     "llm_semdedup_prune_scaled": 3,
     "ml_gbt_stumps": 2,
     "graph_label_propagation": 16,
-    "graph_k_core": 42,
+    "graph_k_core": 35,
     "ml_gmm_em_1d": 8,
     "ml_random_forest_vote": 2,
     "ext_equiheight_histogram": 7,
@@ -54,3 +55,22 @@ def test_headline_build_job_budget(spark, count_jobs, name):
     finally:
         unpersist_all(spark)
     assert n <= _BUILD_JOB_BUDGET[name]
+
+
+# Sink jobs of a warm build's frame (noop write), for entries that
+# return driver-side rows: one partition sorted in place runs one job,
+# where a global orderBy over a multi-partition local frame ran three
+# (range sampling, the shuffle, the write).
+_SINK_JOB_BUDGET = {"graph_k_core": 1, "graph_common_neighbors": 1}
+
+
+@pytest.mark.parametrize("name", sorted(_SINK_JOB_BUDGET))
+def test_sink_job_budget(spark, count_jobs, name):
+    build = ent.queries()[name]
+    unpersist_all(spark)
+    try:
+        df = build(spark, SF)
+        n = count_jobs(lambda: df.write.format("noop").mode("overwrite").save())
+    finally:
+        unpersist_all(spark)
+    assert n == _SINK_JOB_BUDGET[name]

@@ -81,3 +81,28 @@ def test_manifest_prunes_files_and_preserves_results(spark, tmp_path):
 
     # empty-range predicate opens nothing and returns nothing
     assert pruned_read(spark, zpath, mpath, "user_id", 10_000, 20_000).count() == 0
+
+
+def test_manifest_entry_window_is_checked_and_pruned_at_smallest_sf(spark, monkeypatch):
+    """ext_manifest_pruned_scan at sf0.001: its user window holds rows
+    (the oracle compares something), and the manifest opens fewer than
+    the 8 files the entry writes (the read really prunes)."""
+    import glob
+
+    from machine_telemetry_etl_ml_pipeline_spark.operators import manifest
+    from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
+
+    seen = []
+    real = manifest.pruned_read
+
+    def spy(spark, table_path, *args):
+        out = real(spark, table_path, *args)
+        seen.append((len(out.inputFiles()), len(glob.glob(f"{table_path}/*.parquet"))))
+        return out
+
+    monkeypatch.setattr(manifest, "pruned_read", spy)
+    rows = REGISTRY["ext_manifest_pruned_scan"].fn(spark, "/root/testdata/sf0.001").collect()
+    assert len(rows) > 0
+    [(opened, written)] = seen
+    assert written == 8
+    assert 0 < opened < written
