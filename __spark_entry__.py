@@ -35,6 +35,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # (tests/test_contract.py); ml_model_exact_scoring registers only where
 # the reference model blobs exist.
 QUERY_ORDER = (
+    "ext_range_join", "ext_observation_metrics", "ml_string_indexer",
+    "ml_churn_labels_point_in_time", "llm_dedup_components", "graph_pagerank",
     "graph_k_core", "graph_common_neighbors", "ml_als_recommend",
     "ext_manifest_pruned_scan",
     "ext_compact_small_files", "ext_dynamic_partition_overwrite",
@@ -58,7 +60,7 @@ QUERY_ORDER = (
     "graph_label_propagation", "graph_bfs_distances",
     "graph_clustering_coefficient",
     "graph_degree_assortativity", "ext_equiheight_histogram", "ml_random_forest_vote",
-    "llm_keyword_rake", "ml_gbt_stumps", "ml_mann_whitney_u", "graph_pagerank",
+    "llm_keyword_rake", "ml_gbt_stumps", "ml_mann_whitney_u",
     "ml_naive_bayes_sql", "ext_intersect_all", "ext_except_all",
     "ext_collect_list_ordered", "ext_approx_top_k", "ext_window_time_range_frame",
     "llm_ann_bucket_counts",
@@ -97,10 +99,10 @@ QUERY_ORDER = (
     "ml_linear_regression_sql", "ext_fuzzy_levenshtein", "llm_multimodal_framesample",
     "ext_scd2_point_in_time_join", "ext_try_arithmetic", "llm_novel_ngram_ratio",
     "ext_window_distinct_count", "ext_group_by_all",
-    "ext_sql_unpivot_native", "ml_string_indexer", "llm_bm25_score",
-    "llm_ann_ivf_recall", "udf_map_in_arrow", "llm_dedup_components",
+    "ext_sql_unpivot_native", "llm_bm25_score",
+    "llm_ann_ivf_recall", "udf_map_in_arrow",
     "llm_simhash_hamming_pairs", "ext_join_right", "ext_join_full_outer",
-    "ext_range_join", "ext_join_hinted", "ext_time_rollup", "ext_not_in_subquery",
+    "ext_join_hinted", "ext_time_rollup", "ext_not_in_subquery",
     "ext_lateral_join", "ext_percentile_approx_check", "ref_scan_count",
     "ref_projection_rename", "ref_null_fill", "ref_filter_eq", "ref_filter_range",
     "ref_filter_ilike", "ref_filter_bounds", "ref_latest_n", "ref_range_scan",
@@ -126,7 +128,7 @@ QUERY_ORDER = (
     "llm_source_temperature_mix", "ext_asof_join_forward", "ext_grouped_median",
     "ext_decimal_exact", "ext_bitwise_agg", "ext_null_semantics",
     "ext_lateral_view_sql", "llm_minhash_band_tuning", "ext_hll_sketch_merge",
-    "llm_ann_filtered_topk", "ext_observation_metrics",
+    "llm_ann_filtered_topk",
     "llm_vocab_coverage",
     "llm_bpe_merge_step", "llm_quota_sample_by_source",
     "ext_shard_balance_report", "llm_embedding_norm_stats", "llm_zipf_topk_terms",
@@ -159,7 +161,7 @@ QUERY_ORDER = (
     "llm_embedding_outliers", "ext_rfm_segmentation", "ext_abc_classification",
     "ml_anova_oneway", "ml_matthews_corrcoef", "ml_brier_score", "graph_weighted_sssp",
     "ml_gmm_em_1d", "ml_hmm_forward", "llm_mmr_rerank", "llm_readability_flesch",
-    "llm_langid_confusion", "ml_churn_labels_point_in_time",
+    "llm_langid_confusion",
     "ml_target_encoding_loo", "llm_span_corruption",
     "llm_tokenizer_fertility", "ml_learning_curve", "ml_diff_in_diff",
     "ml_cuped_adjustment", "ml_mcnemar_test", "llm_crosslingual_ngram_overlap",

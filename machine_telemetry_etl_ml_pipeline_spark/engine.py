@@ -49,6 +49,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import ingest as _ingest
 from .ingest import UnsupportedFilesystem, commit_parquet  # noqa: F401 -- raised by the writes
+from .operators.core import local_frame
 from .plans import telemetry as plans
 from .schemas import PREDICTIONS, TELEMETRY_STORED, USER_QUERY_LOG
 from .session import get_spark, tune_session
@@ -93,7 +94,7 @@ class TelemetryEngine:
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
-        return spark.createDataFrame(to_arrow_schema(schema).empty_table())
+        return local_frame(spark, [], schema)
 
     def telemetry(self) -> DataFrame:
         """The telemetry table on the serving session (AQE off)."""

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.ckpt import checkpoint_rotate, retire_ids
+from ..operators.core import local_frame
 
 
 def connected_components(
@@ -98,7 +99,7 @@ def connected_components(
             return nodes.select(
                 F.col(id_col), F.col(id_col).cast("long").alias("component")
             )
-        mdf = spark.createDataFrame(mapping, "u long, mapped long")
+        mdf = local_frame(spark, mapping, "u long, mapped long")
         return (
             nodes.select(F.col(id_col).alias("u"))
             .join(F.broadcast(mdf), "u", "left")

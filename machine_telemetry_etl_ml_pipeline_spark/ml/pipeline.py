@@ -32,6 +32,7 @@ from pyspark.ml.regression import GBTRegressor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.core import local_frame
 from ..schemas import FEATURE_ORDER
 
 # Reference smoke-test row (dags/db_pipeline_dag.py:37-41)
@@ -191,6 +192,6 @@ def smoke_test_scaler(model: PipelineModel, spark) -> list[float]:
     fitted pipeline and return the scaled vector
     (database_and_model_tools.py:211-230)."""
     row = [tuple(SMOKE_FEATURES[f] for f in FEATURE_ORDER)]
-    df = spark.createDataFrame(row, FEATURE_ORDER)
+    df = local_frame(spark, row, ", ".join(f"{f} double" for f in FEATURE_ORDER))
     out = model.transform(df).select("features").head()[0]
     return list(out)

@@ -13,7 +13,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,20 +29,6 @@ def save_bucketed(
     if sort_col is not None:
         w = w.sortBy(sort_col)
     w.saveAsTable(table_name)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on) -> DataFrame:
-    """Join two same-bucketed tables — shuffle-free when bucket specs
-    match (verify with plan_has_shuffle)."""
-    return spark.table(left_table).join(spark.table(right_table), on=on)
-
-
-def plan_has_shuffle(df: DataFrame) -> bool:
-    """True if the executed plan contains a shuffle Exchange
-    (hash/range repartitioning). BroadcastExchange is NOT a shuffle —
-    it's a driver-collected broadcast."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" in plan or "Exchange rangepartitioning" in plan
 
 
 def salted_agg(
@@ -104,12 +90,15 @@ def salted_join(
     needs the join's partitioning, the payload compresses too well for
     the byte-based detector, or the engine runs without AQE.
 
-    The replicated-dim side carries a SHUFFLE_HASH hint (r13): without
-    it the planner — seeing a parquet fact whose size estimate it
-    trusts against a createDataFrame dim with UnknownPartitioning and
-    no stats — picked BuildLeft and BROADCAST THE FACT TABLE (measured
-    at sf0.1: the whole events projection collected to the driver,
-    3.0s, single-threaded; at 100 TB a driver OOM). The hint pins the
+    The replicated-dim side carries a SHUFFLE_HASH hint (r13). Without
+    it the join strategy follows the two sides' size estimates, and
+    those depend on how the dim was built, not on the salting: a dim
+    with no size estimate once made the planner pick BuildLeft and
+    BROADCAST THE FACT TABLE (measured at sf0.1: the whole events
+    projection collected to the driver, 3.0s, single-threaded; at
+    100 TB a driver OOM). A driver-built dim is now an Arrow local
+    relation (``core.local_frame``), which does carry an estimate; the
+    hint stays so that the plan does not move with it. It pins the
     exact shape salting exists to produce: both sides exchange on
     (key, __salt) — the fact shuffled ONCE, each hot key spread over
     salt_buckets reducers — and the per-partition hash table is built

@@ -27,14 +27,34 @@ Scale notes (100 TB posture):
   aggregate or the window below it stays parallel, and the caller
   collects those rows to the driver anyway. An unbounded sort keeps
   ``orderBy``'s parallel range sort.
+- ``local_frame``: rows already on the driver enter Spark as one Arrow
+  table, a ``LocalTableScan`` that Catalyst folds and a sink reads
+  without a job or a Python worker. ``createDataFrame`` over a Python
+  list is a pickled RDD of ``defaultParallelism`` partitions instead:
+  every sink starts Python workers, one per partition.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
+
+
+def local_frame(spark: SparkSession, rows: Sequence, schema: StructType | str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema``'s field order) as an
+    Arrow-built local relation. ``schema`` is a ``StructType`` or a DDL
+    string."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)
 
 
 def latest_per_key(

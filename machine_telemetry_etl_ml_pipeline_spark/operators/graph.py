@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ckpt import checkpoint_rotate, retire_ids
+from .core import local_frame
 
 
 def pagerank(
@@ -74,8 +75,8 @@ def pagerank(
             endpoints.add(r.src)
             endpoints.add(r.dst)
         if endpoints:
-            ep_df = spark.createDataFrame(
-                [(int(u),) for u in sorted(endpoints)], "node long"
+            ep_df = local_frame(
+                spark, [(int(u),) for u in sorted(endpoints)], "node long"
             )
             probe_df = (
                 nodes.select(F.col("node").cast("long").alias("node"))
@@ -112,8 +113,8 @@ def pagerank(
             stats["strategy"] = "local"
         if not rank:
             return nodes.select("node", F.lit(teleport).alias("rank"))
-        mdf = spark.createDataFrame(
-            [(int(u), float(v)) for u, v in rank.items()], "node long, rank double"
+        mdf = local_frame(
+            spark, [(int(u), float(v)) for u, v in rank.items()], "node long, rank double"
         )
         # non-endpoint nodes: no incoming mass ever -> constant teleport
         return (

@@ -88,9 +88,11 @@ def _scratch(prefix: str):
 
 
 def _materialize(df):
-    """``df``'s rows as a local frame, so the result outlives the
-    files it was read from. The collect is bounded: see ``_scratch``."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+    """``df``'s rows as an Arrow-built local relation, so the result
+    outlives the files it was read from; ``df.schema`` keeps the column
+    metadata (comments) that an Arrow schema drops. The collect is
+    bounded: see ``_scratch``."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
 def _epoch(col: str = "ts"):

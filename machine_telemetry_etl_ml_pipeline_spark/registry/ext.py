@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..llm.prep import md5_bucket
 from ..operators.bucketing import salted_agg, save_bucketed
+from ..operators.core import local_frame
 from ..operators.joins import anti_join, asof_join, semi_join
 from ..operators.windows import lag_lead, ranked, running, sessionized
 from . import _epoch, _materialize, _scratch, _t, _views, register
@@ -1384,7 +1385,7 @@ def ext_range_join(spark, sf_dir):
     class, resurfaced by the full-registry 10x sweep: ~3e10 band sums
     put float partial-sum order error above the 4dp grid)."""
     li = _t(spark, sf_dir, "lineitem").select("l_extendedprice")
-    bands = spark.createDataFrame(_BANDS, "band int, lo double, hi double")
+    bands = local_frame(spark, _BANDS, "band int, lo double, hi double")
     joined = li.join(
         F.broadcast(bands),
         (F.col("l_extendedprice") >= F.col("lo")) & (F.col("l_extendedprice") < F.col("hi")),
@@ -2423,7 +2424,8 @@ def ext_salted_join(spark, sf_dir):
     e = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    weights = spark.createDataFrame(
+    weights = local_frame(
+        spark,
         [("click", 10), ("view", 5), ("purchase", 30), ("signup", 20), ("error", 0)],
         "event_type string, wt10 long",
     )
@@ -4228,7 +4230,8 @@ def ext_observation_metrics(spark, sf_dir):
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["n_rows"], m["sum_cents"], m["n_discounted"])],
         "n_rows bigint, sum_cents bigint, n_discounted bigint",
     )

@@ -12,13 +12,12 @@ converge to identical values.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.ckpt import checkpoint_rotate, lazy_checkpoint, owned_ids, retire_ids
+from ..operators.core import local_frame
 from . import _t, register
 
 
@@ -460,16 +459,11 @@ def graph_label_propagation(spark, sf_dir):
 
 def _ordered_rows(spark, rows, schema, *order):
     """Driver-side result rows as a frame explicitly ordered by `order`
-    (a frame's partitions do not promise to keep list order): an
-    Arrow-built local relation in one partition, sorted in place, so a
-    sink runs one job and starts no Python worker. A global orderBy
-    range-samples and shuffles the rows (3 jobs), and under coalesce(1)
-    a list-built frame's Python-worker partitions run one after
-    another."""
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table).coalesce(1).sortWithinPartitions(*order)
+    (a frame's partitions do not promise to keep list order): a
+    `local_frame` in one partition, sorted in place, so a sink runs one
+    job and starts no Python worker. A global orderBy range-samples and
+    shuffles the rows (3 jobs)."""
+    return local_frame(spark, rows, schema).coalesce(1).sortWithinPartitions(*order)
 
 
 @register(

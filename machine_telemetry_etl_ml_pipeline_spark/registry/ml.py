@@ -21,6 +21,7 @@ from ..llm.similarity import _as_double, dot, norm
 from ..llm.textstats import words_col
 from ..ml import refmodels
 from ..operators.ckpt import owned_ids, retire_ids
+from ..operators.core import local_frame
 from . import _t, register
 from .ext import _CENTS, _DEC
 from .llm import _HEXPOS
@@ -49,7 +50,7 @@ def ml_string_indexer(spark, sf_dir):
         inputCol="event_type", outputCol="type_index", stringOrderType="frequencyDesc"
     ).fit(e)
     labels = [(lbl, float(i)) for i, lbl in enumerate(model.labelsArray[0])]
-    return spark.createDataFrame(labels, "event_type string, type_index double")
+    return local_frame(spark, labels, "event_type string, type_index double")
 
 
 @register(
@@ -549,7 +550,8 @@ def ml_als_recommend(spark, sf_dir):
     retire_ids(
         spark, owned_ids(model.userFactors) + owned_ids(model.itemFactors)
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(dims.n_users, dims.n_items, bool(rmse < 0.25 * mean_rating))],
         "n_users bigint, n_items bigint, rmse_below_quarter_mean boolean",
     )
@@ -4356,8 +4358,8 @@ def ml_churn_labels_point_in_time(spark, sf_dir):
     snapshot grid is a 5-row broadcast against one orders scan; both
     aggregates are partial-aggregable on (snap, cust). Reference
     analog: none (training-label extension of ext_cohort_retention)."""
-    snaps = spark.createDataFrame(
-        [(s,) for s in _SNAPSHOTS], "snap_s string"
+    snaps = local_frame(
+        spark, [(s,) for s in _SNAPSHOTS], "snap_s string"
     ).select(F.col("snap_s").cast("date").alias("snap"))
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("cust"), F.col("o_orderdate").cast("date").alias("d")

@@ -17,6 +17,7 @@ from ..operators.core import (
     grouped_stats,
     latest_n,
     latest_per_key,
+    local_frame,
     range_scan,
     stats,
     top_k_by,
@@ -514,7 +515,8 @@ def ref_sink_insert_defaults(spark, sf_dir):
     write-time default semantics (coalesce applied, timestamp present)
     are read back from the parquet commit and checked against the
     literal expected rows."""
-    rows = spark.createDataFrame(
+    rows = local_frame(
+        spark,
         [("operator", "q1", "regression", 0.9), ("manager", "q2", "anomaly", None)],
         "role string, query string, intent string, confidence double",
     )
@@ -542,7 +544,8 @@ def ref_sink_insert_json(spark, sf_dir):
     (project/db.py:171-185): map -> to_json at write, from_json on
     read-back (JSONB parity via MapType, SURVEY §1.2). first_key uses
     array_sort for a deterministic map-key order."""
-    rows = spark.createDataFrame(
+    rows = local_frame(
+        spark,
         [("M001", "regression", 82.5, {"fuelconsumption": 10.5, "humidity": 68.0})],
         "machine_id string, intent string, numerical_answer double, features map<string,double>",
     )

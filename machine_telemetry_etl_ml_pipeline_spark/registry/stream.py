@@ -21,7 +21,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from ..operators.core import latest_per_key
+from ..operators.core import latest_per_key, local_frame
 from ..streaming.stateful import running_user_stats
 from ..streaming.windows import (
     click_purchase_join,
@@ -176,7 +176,8 @@ def stream_static_join(spark, sf_dir):
     """Stream-static broadcast join (dimension enrichment on a live
     stream); oracle is the equivalent batch mapping — every streamed
     row must arrive exactly once with its joined attribute."""
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("click", 0), ("error", 1), ("purchase", 2), ("signup", 3), ("view", 4)],
         "event_type string, type_code int",
     )

@@ -76,64 +76,3 @@ def running_user_stats(stream: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-from pyspark.sql.streaming import StatefulProcessor
-
-
-class _UserStatsProcessor(StatefulProcessor):
-    """transformWithStateInPandas processor (Spark 4's successor to
-    applyInPandasWithState): the same per-user running (count,
-    cents-sum, max) kept in a typed ValueState, so the two APIs are
-    directly comparable — and both are oracle-checked against the same
-    batch aggregate."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        if self._state.exists():
-            n, sum_cents, max_value = self._state.get()
-        else:
-            n, sum_cents, max_value = 0, 0, float("-inf")
-        for pdf in rows:
-            n += len(pdf)
-            sum_cents += int(round(pdf["value"].mul(100).round().sum()))
-            if len(pdf):
-                max_value = max(max_value, float(pdf["value"].max()))
-        self._state.update((n, sum_cents, max_value))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n": [n],
-                "sum_value": [round(sum_cents / 100.0, 4)],
-                "max_value": [max_value],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_stats_tws(stream: DataFrame) -> DataFrame:
-    """running_user_stats via transformWithStateInPandas (Spark 4's
-    successor API). ENVIRONMENT-GATED: the TWS state protocol runs a
-    separate Python driver worker that imports google.protobuf, which
-    is absent in this container — the processor and wiring are real
-    (same shape as the applyInPandasWithState twin above, which IS
-    oracle-checked); on a protobuf-equipped cluster this runs as-is."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env without protobuf
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf (absent "
-            "here); use running_user_stats (applyInPandasWithState) — "
-            "same semantics, oracle-checked"
-        ) from e
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_UserStatsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -45,16 +45,6 @@ EVENTS_STREAM_SCHEMA = StructType(
 )
 
 
-def file_stream(spark: SparkSession, dir_path: str, schema: StructType | None = None) -> DataFrame:
-    """File-source stream over a parquet directory (new files become
-    micro-batches — the continuous twin of the batch catalog read)."""
-    return (
-        spark.readStream.schema(schema or EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir_path)
-    )
-
-
 def events_testdata_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream over the driver's events.parquet. The file source reads
     a DIRECTORY: a single-file table streams ``sf_dir`` itself with a

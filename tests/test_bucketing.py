@@ -2,35 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark.operators.bucketing import (
-    bucketed_join,
-    plan_has_shuffle,
-    salted_agg,
-    save_bucketed,
-)
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    # tables land in the session's default warehouse dir (gitignored);
-    # warehouse.dir is a static conf and can't be retargeted per-test
-    left = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("a"))
-    right = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("b"))
-    save_bucketed(left, "t_bucket_left", "k", num_buckets=4, sort_col="k")
-    save_bucketed(right, "t_bucket_right", "k", num_buckets=4, sort_col="k")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        joined = bucketed_join(spark, "t_bucket_left", "t_bucket_right", "k")
-        assert joined.count() == 1000
-        assert not plan_has_shuffle(joined)  # co-located: no Exchange
-        # contrast: the same join on unbucketed data DOES shuffle
-        plain = left.join(right, "k")
-        plain.count()
-        assert plan_has_shuffle(plain)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_bucket_left")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_right")
+from machine_telemetry_etl_ml_pipeline_spark.operators.bucketing import salted_agg
 
 
 def test_salted_agg_matches_plain(spark):

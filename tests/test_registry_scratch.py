@@ -1,7 +1,8 @@
 """Registry entries own their scratch: files an entry writes live under
 one ``registry._scratch`` dir, and building and collecting an entry
 leaves no directory, catalog table, cache entry or persistent RDD
-behind."""
+behind. Rows on the driver become a frame one way: an Arrow-built
+local relation, never a pickled RDD of Python rows."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import tempfile
 
 import pytest
 
+import machine_telemetry_etl_ml_pipeline_spark as pkg
 from machine_telemetry_etl_ml_pipeline_spark import registry
 from machine_telemetry_etl_ml_pipeline_spark.operators.ckpt import owned_ids
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
@@ -44,6 +46,35 @@ def test_mkdtemp_only_in_scratch():
     assert sites == [("__init__.py", "_scratch")]
 
 
+def test_create_dataframe_only_in_local_frame():
+    """In the package, ``createDataFrame`` is called only by
+    ``operators/core.local_frame`` (Python rows), ``registry._materialize``
+    (an Arrow table of a frame's rows) and ``ingest.insert_rows`` (an
+    Arrow table in the CSV's input schema)."""
+    root = os.path.dirname(pkg.__file__)
+    sites = set()
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Attribute) and node.attr == "createDataFrame":
+            sites.add((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for dirpath, _, files in os.walk(root):
+        for fname in files:
+            if fname.endswith(".py"):
+                path = os.path.join(dirpath, fname)
+                with open(path, encoding="utf-8") as fh:
+                    visit(ast.parse(fh.read()), os.path.relpath(path, root), None)
+    assert sites == {
+        ("operators/core.py", "local_frame"),
+        ("registry/__init__.py", "_materialize"),
+        ("ingest.py", "insert_rows"),
+    }
+
+
 def test_scratch_entries_are_found():
     assert "ref_ddl_create_table" in SCRATCH_ENTRIES
     assert "ext_source_csv_corrupt" in SCRATCH_ENTRIES
@@ -63,6 +94,7 @@ def test_scratch_entries_leave_nothing(spark, name, tmp_path, monkeypatch):
     tables0, cached0, rdds0 = state()
     df = REGISTRY[name].fn(spark, SF)
     df.collect()
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
     tables, cached, rdds = state()
     assert list(tmp_path.iterdir()) == []
     assert tables - tables0 == set()

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 from machine_telemetry_etl_ml_pipeline_spark.sources.catalog import load_table
 from machine_telemetry_etl_ml_pipeline_spark.streaming.windows import (
+    EVENTS_STREAM_SCHEMA,
     click_purchase_join,
     dedup_within_watermark,
-    file_stream,
     run_to_memory,
     session_counts,
     stream_static_join,
@@ -29,6 +29,16 @@ def events_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("stream") / "events")
     load_table(spark, SF, "events").write.parquet(d)
     return d
+
+
+def file_stream(spark, dir_path):
+    """File-source stream over a parquet dir of events, one file per
+    micro-batch."""
+    return (
+        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(dir_path)
+    )
 
 
 def _rows(spark, name):
@@ -177,26 +187,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     # event must NOT have created a 07:00 window.
     assert "2026-01-01 07:00:00" not in rows, rows
     assert rows.get("2026-01-01 08:00:00") == 2, rows
-
-
-def test_transform_with_state_gated_or_works(spark, events_dir):
-    """transformWithStateInPandas twin: runs where protobuf exists,
-    raises the documented NotImplementedError where it doesn't (this
-    container) — either way the wiring is exercised."""
-    from machine_telemetry_etl_ml_pipeline_spark.streaming.stateful import (
-        running_user_stats_tws,
-    )
-
-    stream = file_stream(spark, events_dir)
-    try:
-        out = running_user_stats_tws(stream.select("user_id", "value"))
-    except NotImplementedError as e:
-        assert "protobuf" in str(e)
-        return
-    batch = spark.read.parquet(events_dir).groupBy("user_id").count()
-    got = run_to_memory(out, "update").groupBy("user_id").agg(F.max("n").alias("n"))
-    joined = got.join(batch, "user_id")
-    assert joined.filter("n != count").count() == 0
 
 
 def test_rocksdb_state_store_matches_default_provider(spark):
