@@ -35,6 +35,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # (tests/test_contract.py); ml_model_exact_scoring registers only where
 # the reference model blobs exist.
 QUERY_ORDER = (
+    "llm_pack_sequences", "ext_equiheight_histogram", "ml_mann_whitney_u",
+    "ext_dynamic_partition_pruning", "graph_clustering_coefficient",
+    "graph_degree_assortativity", "llm_minhash_band_tuning", "ml_learning_curve",
     "ext_range_join", "ext_observation_metrics", "ml_string_indexer",
     "ml_churn_labels_point_in_time", "llm_dedup_components", "graph_pagerank",
     "graph_k_core", "graph_common_neighbors", "ml_als_recommend",
@@ -45,7 +48,7 @@ QUERY_ORDER = (
     "ref_sink_insert_defaults", "ref_sink_insert_json", "ref_ddl_create_table",
     "ext_snapshot_time_travel", "ext_source_xml", "ext_metadata_columns",
     "ext_source_binaryfile", "ext_merge_schema_evolution", "ext_source_text",
-    "ext_dynamic_partition_pruning", "ext_variant_roundtrip",
+    "ext_variant_roundtrip",
     "stream_foreach_batch_sink", "stream_stream_join", "stream_session_counts",
     "stream_sliding_counts", "stream_static_join", "stream_dedup_within_watermark",
     "stream_tumbling_counts", "stream_update_mode_upsert",
@@ -58,9 +61,8 @@ QUERY_ORDER = (
     "llm_minhash_jaccard_estimate", "llm_dedup_keep_best", "llm_dedup_cluster_sizes",
     "llm_semdedup_prune_scaled", "llm_embedding_neardup_scaled", "graph_triangle_count",
     "graph_label_propagation", "graph_bfs_distances",
-    "graph_clustering_coefficient",
-    "graph_degree_assortativity", "ext_equiheight_histogram", "ml_random_forest_vote",
-    "llm_keyword_rake", "ml_gbt_stumps", "ml_mann_whitney_u",
+    "ml_random_forest_vote",
+    "llm_keyword_rake", "ml_gbt_stumps",
     "ml_naive_bayes_sql", "ext_intersect_all", "ext_except_all",
     "ext_collect_list_ordered", "ext_approx_top_k", "ext_window_time_range_frame",
     "llm_ann_bucket_counts",
@@ -68,7 +70,7 @@ QUERY_ORDER = (
     "tpch_q9", "tpch_q17", "ext_approx_count_distinct", "ext_bucketed_join_colocated",
     "ext_incremental_rollup", "ext_salted_agg", "tpch_q2", "tpch_q5", "tpch_q7",
     "tpch_q10", "tpch_q11", "tpch_q12", "tpch_q13", "tpch_q15", "tpch_q16", "tpch_q18",
-    "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22", "llm_pack_sequences",
+    "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
     "llm_source_mix", "llm_quality_filter_by_lang", "llm_decontaminate",
     "llm_unigram_logprob", "llm_dedup_keep_first", "llm_chunk_documents",
     "llm_train_test_split", "ext_recursive_cte", "ext_variant_json", "ext_sql_udf",
@@ -127,7 +129,7 @@ QUERY_ORDER = (
     "llm_ngram_containment", "llm_char_entropy",
     "llm_source_temperature_mix", "ext_asof_join_forward", "ext_grouped_median",
     "ext_decimal_exact", "ext_bitwise_agg", "ext_null_semantics",
-    "ext_lateral_view_sql", "llm_minhash_band_tuning", "ext_hll_sketch_merge",
+    "ext_lateral_view_sql", "ext_hll_sketch_merge",
     "llm_ann_filtered_topk",
     "llm_vocab_coverage",
     "llm_bpe_merge_step", "llm_quota_sample_by_source",
@@ -163,7 +165,7 @@ QUERY_ORDER = (
     "ml_gmm_em_1d", "ml_hmm_forward", "llm_mmr_rerank", "llm_readability_flesch",
     "llm_langid_confusion",
     "ml_target_encoding_loo", "llm_span_corruption",
-    "llm_tokenizer_fertility", "ml_learning_curve", "ml_diff_in_diff",
+    "llm_tokenizer_fertility", "ml_diff_in_diff",
     "ml_cuped_adjustment", "ml_mcnemar_test", "llm_crosslingual_ngram_overlap",
     "ml_sprt_stopping", "ml_winsorized_mean", "ext_interarrival_stats",
     "llm_preference_pairs", "ext_entity_blocking_fuzzy", "ext_holt_winters_seasonal",

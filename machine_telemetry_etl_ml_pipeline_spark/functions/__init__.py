@@ -1,3 +1,3 @@
-from .timefeat import with_time_features, with_write_defaults
+from .timefeat import with_write_defaults
 
-__all__ = ["with_time_features", "with_write_defaults"]
+__all__ = ["with_write_defaults"]

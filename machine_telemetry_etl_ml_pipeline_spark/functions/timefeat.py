@@ -17,15 +17,6 @@ def dayofweek_monday0(ts_col) -> "F.Column":
     return ((F.dayofweek(ts_col) + F.lit(5)) % 7).cast("int")
 
 
-def with_time_features(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
-    return (
-        df.withColumn("hour", F.hour(ts_col).cast("int"))
-        .withColumn("dayofweek", dayofweek_monday0(F.col(ts_col)))
-        .withColumn("month", F.month(ts_col).cast("int"))
-        .withColumn("timestamp_epoch", F.unix_timestamp(ts_col).cast("long"))
-    )
-
-
 def with_write_defaults(df: DataFrame) -> DataFrame:
     """Write-time column defaults: the reference uses Postgres DEFAULT
     CURRENT_TIMESTAMP / EXTRACT(EPOCH ...) (project/db.py:100-101);

@@ -81,9 +81,8 @@ def md5_bucket(col, n_digits: int = 2) -> "F.Column":
 
 def hex_bucket_sql(h_expr: str, n_digits: int = 2) -> str:
     """DuckDB twin of md5_bucket, colocated with it so the two stay in
-    lockstep (registry/ext.py carries an older local copy for its
-    already-driver-verified entries): integer in [0, 16^n) from the
-    first n hex digits of an md5 SQL expression."""
+    lockstep: integer in [0, 16^n) from the first n hex digits of an
+    md5 SQL expression."""
     digit = "(strpos('0123456789abcdef', substr({h}, {p}, 1)) - 1)"
     out = digit.format(h=h_expr, p=1)
     for p in range(2, n_digits + 1):
@@ -106,76 +105,68 @@ def with_running_total(
     order_col: str,
     value_col: str,
     out_col: str = "running_total",
-    num_parts: int | None = None,
     total_col: str | None = None,
+    totals_from: DataFrame | None = None,
 ) -> DataFrame:
     """Distributed prefix sum: running total of `value_col` in
-    `order_col` order WITHOUT a single-partition global window.
+    `order_col` order without a single-partition global window, the
+    one prefix sum in the package.
 
-    The naive `Window.orderBy(order_col)` (no partitionBy) funnels the
-    whole table through one task — the classic 100 TB killer. This is
-    the two-phase PRAM scan instead:
+    `Window.orderBy(order_col)` with no partitionBy funnels the whole
+    table through one task, a plan that cannot run at 100 TB. This is
+    the two-phase scan instead, split on a fixed-width integer bucket
+    `__b = order_col DIV 65536`:
 
-      1. range-partition on order_col (partition ids are range-ordered,
-         so cross-partition order is preserved);
-      2. per-partition cumulative sum (a PARALLEL window keyed on the
-         partition id);
-      3. per-partition totals (tiny: one row per partition) get their
-         own exclusive running sum — the only sequential step, over
-         num_parts rows, broadcast back.
+      1. a cumulative sum per bucket (a parallel window keyed on __b);
+      2. per-bucket totals of value_col, one row per bucket;
+      3. an exclusive running sum over those totals (the only
+         sequential step), broadcast back and added to step 1.
 
-    Exactly equal to the global-window cumsum for unique order keys
-    (ties would be order-dependent; callers pass a key). Integer values
+    Precondition: order_col holds unique, non-null integers. Ties
+    would make the sum order-dependent. `DIV` truncates toward zero
+    but stays monotone, so negative keys are in order too (bucket 0
+    spans -65535..65535). The offsets walk holds one row per non-empty
+    bucket, at most (key range) / 65536 rows; a sparse composite key
+    would make it data-sized, so it does not fit here. Integer values
     sum exactly, so the result is oracle-comparable.
 
-    total_col: optionally also attach the GRAND total of value_col to
-    every row (r14, for callers that need per-row access to n — e.g.
-    rank thresholds expressed against the row count). It derives from
-    the same num_parts-row totals frame the offsets walk already
-    aggregates, so it costs nothing beyond one more tiny window sum —
-    the whole-frame window the naive shape would have needed over the
-    DATA is avoided the same way the running sum is.
+    total_col: also attach the grand total of value_col to every row,
+    summed over the same bucket totals.
 
-    Shuffle budget: the plan carries 2-3 wide exchanges (range
-    partition, window hash partition; the totals branch re-derives its
-    input when AQE declines to reuse the range exchange) — deliberately
-    traded for eliminating the Exchange SinglePartition + single-task
-    sort of the naive global window, which is the plan that cannot run
-    at 100 TB. Totals/offsets relations are num_parts rows, so their
-    exchanges are metadata-sized.
+    totals_from: a frame with order_col and value_col whose per-bucket
+    sums of value_col equal df's (default: df itself, read off the
+    windowed frame). A caller whose df is an aggregate can pass the
+    pre-aggregation rows, so the totals come straight off its scan
+    instead of re-embedding the aggregate and the window.
     """
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    n = num_parts or spark.sparkContext.defaultParallelism
-    part = df.repartitionByRange(n, F.col(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
-    )
+    def bucketed(frame: DataFrame) -> DataFrame:
+        return frame.withColumn("__b", F.expr(f"`{order_col}` DIV 65536"))
+
     w_local = (
-        Window.partitionBy("__pid")
+        Window.partitionBy("__b")
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = part.withColumn("__cum", F.sum(value_col).over(w_local))
-    # aggregate totals from `local`, not `part`: local is already
-    # hash-partitioned by __pid for the window, so the groupBy reuses
-    # that exchange instead of re-shuffling the range-partitioned input
-    totals = local.groupBy("__pid").agg(F.sum(value_col).alias("__tot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    local = bucketed(df).withColumn("__cum", F.sum(value_col).over(w_local))
+    src = local if totals_from is None else bucketed(totals_from)
+    totals = src.groupBy("__b").agg(F.sum(value_col).alias("__tot"))
+    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
     off_cols = [
-        "__pid",
+        "__b",
         F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off"),
     ]
     if total_col is not None:
-        w_all = Window.orderBy("__pid").rowsBetween(
+        w_all = Window.orderBy("__b").rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
         off_cols.append(F.sum("__tot").over(w_all).alias(total_col))
     offsets = totals.select(*off_cols)
     return (
-        local.join(F.broadcast(offsets), "__pid")
+        local.join(F.broadcast(offsets), "__b")
         .withColumn(out_col, F.col("__cum") + F.col("__off"))
-        .drop("__pid", "__cum", "__off")
+        .drop("__b", "__cum", "__off")
     )
 
 

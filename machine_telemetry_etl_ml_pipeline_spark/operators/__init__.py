@@ -3,7 +3,6 @@ from .core import (
     grouped_stats,
     latest_n,
     latest_per_key,
-    latest_per_key_maxby,
     range_scan,
     stats,
     top_k_by,
@@ -14,7 +13,6 @@ __all__ = [
     "grouped_stats",
     "latest_n",
     "latest_per_key",
-    "latest_per_key_maxby",
     "range_scan",
     "stats",
     "top_k_by",

@@ -85,15 +85,6 @@ def latest_per_key(
     )
 
 
-def latest_per_key_maxby(df: DataFrame, key: str, order_col: str, payload: str) -> DataFrame:
-    """Single-payload fast path: partial-aggregable ``max_by`` instead of
-    a full window sort (SURVEY §4 candidate optimization (a))."""
-    return df.groupBy(key).agg(
-        F.max(order_col).alias(order_col),
-        F.max_by(payload, order_col).alias(payload),
-    )
-
-
 def latest_n(
     df: DataFrame,
     filter_expr,

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..llm.prep import md5_bucket
+from ..llm.prep import hex_bucket_sql, md5_bucket, with_running_total
 from ..operators.bucketing import salted_agg, save_bucketed
 from ..operators.core import local_frame
 from ..operators.joins import anti_join, asof_join, semi_join
@@ -1201,8 +1201,6 @@ _SAMPLE_THR = int(_SAMPLE_FRACTION * _SAMPLE_SPACE)
 
 
 def _sample_bucket_sql() -> str:
-    from ..llm.prep import hex_bucket_sql
-
     return hex_bucket_sql("md5(CAST(event_id AS VARCHAR))", 7)
 
 
@@ -1661,8 +1659,6 @@ _STRAT_THRS = {k: int(v * _STRAT_SPACE) for k, v in _STRAT_FRACTIONS.items()}
 
 
 def _strat_oracle_sql() -> str:
-    from ..llm.prep import hex_bucket_sql
-
     bucket = hex_bucket_sql("md5(CAST(event_id AS VARCHAR))", 7)
     cases = " ".join(
         f"WHEN '{k}' THEN {thr}" for k, thr in sorted(_STRAT_THRS.items())
@@ -4515,12 +4511,11 @@ def ext_equiheight_histogram(spark, sf_dir):
     .grow heap death — the r9 sweep's one real at-scale find; row
     count corrected r11, see SCALE.md's r10 bookkeeping note). The
     rollup shape is spill-safe end to end: groupBy(cents) is partial-
-    aggregable, and since r14 the cumulative count is the DISTRIBUTED
-    two-phase prefix sum (llm/prep.with_running_total — range
-    partition, parallel per-partition cumsum, metadata-sized offsets
-    walk) instead of a partitionless ORDER BY cents window whose
-    Exchange SinglePartition funneled every distinct value through
-    one task; the row count n rides the same offsets frame
+    aggregable, and since r14 the cumulative count is the distributed
+    prefix sum (llm/prep.with_running_total, keyed on the unique
+    integer cents) instead of a partitionless ORDER BY cents window
+    whose Exchange SinglePartition funneled every distinct value
+    through one task; the row count n rides the same offsets frame
     (total_col), with the decile ranks floor(p*(n-1))+1 expressed
     against the n column, so the 18 order statistics AND n still
     come back in ONE bounded 1-row collect (one lineitem scan; the r9
@@ -4534,27 +4529,8 @@ def ext_equiheight_histogram(spark, sf_dir):
     approx_percentile; the assignment side is unchanged."""
     import math
 
-    from pyspark.sql import Window
-
     li = _t(spark, sf_dir, "lineitem")
     base = li.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"))
-    # r14 (VERDICT r13 item 4, guide §2.2): distributed two-phase
-    # prefix sum replaces the partitionless ORDER BY cents window
-    # (Exchange SinglePartition + one-task sort over ~450k distinct
-    # cents at sf0.1). cents is unique after the rollup, so the
-    # prefix sum equals the global-window cumsum exactly (integer
-    # counts). Unlike the generic llm/prep.with_running_total (whose
-    # repartitionByRange pays a sampling job), cents is an INTEGER
-    # key, so the range split is free: __b = cents DIV 65536 is monotone in cents with
-    # domain-bounded bucket occupancy (<= 65536 distinct values per
-    # bucket by construction) — the local cumsum window is keyed on
-    # __b (parallel), the offsets/total walk runs over the ~160-row
-    # bucket totals (metadata-sized), and the whole thing stays ONE
-    # job with no sampling pass and no checkpoint. A/B at sf0.1 (5
-    # interleaved reps, min): 1.61s (r13 one-task window) / 1.85s
-    # (generic prefix sum + checkpoint) / 1.68s (this shape) — parity
-    # with the one-task plan locally, with the 100 TB straggler
-    # removed.
     # r14 session 2 (guide §2.4): the (cents, cnt) rollup is a LAZY
     # localCheckpoint materialized as a side effect of the stats
     # collect below (its first reader lands it), and the ASSIGNMENT side then
@@ -4570,26 +4546,7 @@ def ext_equiheight_histogram(spark, sf_dir):
     rollup = lazy_checkpoint(
         base.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
     )
-    bkt = rollup.withColumn("__b", F.expr("cents DIV 65536"))
-    w_local = (
-        Window.partitionBy("__b")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bkt.withColumn("__cum", F.sum("cnt").over(w_local))
-    totals = local.groupBy("__b").agg(F.sum("cnt").alias("__tot"))
-    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("__b").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = totals.select(
-        "__b",
-        F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__tot").over(w_all).alias("n"),
-    )
-    cum = local.join(F.broadcast(offsets), "__b").select(
-        "cents", (F.col("__cum") + F.col("__off")).alias("cum"), "n"
-    )
+    cum = with_running_total(rollup, "cents", "cnt", out_col="cum", total_col="n")
     # rank of the lo/hi order statistics for decile p, as expressions
     # over the in-frame total n: pos = (p/10)*(n-1) (same JVM double
     # arithmetic the driver-side replay below uses), lo rank =
@@ -4905,24 +4862,14 @@ def ext_identifier_clause(spark, sf_dir):
     )
 
 
-def _hex_bucket_sql(h_expr: str, n_digits: int) -> str:
-    """DuckDB twin of llm/prep.md5_bucket: integer in [0, 16^n) from
-    the first n hex digits of an md5 expression — keep in lockstep."""
-    digit = "(strpos('0123456789abcdef', substr({h}, {p}, 1)) - 1)"
-    out = digit.format(h=h_expr, p=1)
-    for p in range(2, n_digits + 1):
-        out = f"({out} * 16 + {digit.format(h=h_expr, p=p)})"
-    return out
-
-
 # =========================================================================
 # Scale toolkit: Bloom-filter join pre-filter
 # =========================================================================
 
-_BLOOM_H1 = _hex_bucket_sql("md5(CAST(o_custkey AS VARCHAR))", 4)
+_BLOOM_H1 = hex_bucket_sql("md5(CAST(o_custkey AS VARCHAR))", 4)
 
 
-_BLOOM_H2 = _hex_bucket_sql("md5('b2|' || CAST(o_custkey AS VARCHAR))", 4)
+_BLOOM_H2 = hex_bucket_sql("md5('b2|' || CAST(o_custkey AS VARCHAR))", 4)
 
 
 @register(
@@ -6732,9 +6679,9 @@ def ext_abc_classification(spark, sf_dir):
     no float), so the A/B/C split is bit-exact at any SF. Scale: one
     groupBy(partkey) shuffle collapses lineitem to the part grain
     (200× smaller); the running sum is a single-partition window over
-    that grain — at 100 TB you'd range-partition by rev_cents and
-    broadcast per-range offsets (the llm_pack_sequences distributed
-    prefix-sum pattern), noted in-line. Reference analog: none
+    that grain — at 100 TB it needs a distributed prefix sum over the
+    (rev DESC, partkey) order, which is not the unique integer key
+    llm/prep.with_running_total takes. Reference analog: none
     (extends ext_topn_other / ml_gini_lorenz family)."""
     rev = (
         _t(spark, sf_dir, "lineitem")
@@ -6819,7 +6766,7 @@ def ext_dynamic_partition_pruning(spark, sf_dir):
             )
             .orderBy("order_year")
         )
-        return _materialize(res).orderBy("order_year")
+        return _materialize(res)
 
 
 @register(

@@ -864,7 +864,7 @@ def graph_clustering_coefficient(spark, sf_dir):
     equi-joins + three partial-aggregable groupBys; the same shape
     GraphX's LocalClusteringCoefficient shuffles. Reference analog:
     none (local companion to graph_triangle_count)."""
-    e = _copurchase_edges(spark, sf_dir).select("u", "v").localCheckpoint()
+    e, _ = checkpoint_rotate(_copurchase_edges(spark, sf_dir).select("u", "v"))
     deg = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
@@ -959,7 +959,7 @@ def graph_degree_assortativity(spark, sf_dir):
     broadcast-able degree joins + one moment aggregate — all
     partial-aggregable; 3x replica per the graph-densification
     protocol. Reference analog: none (extends the graph family)."""
-    e = _copurchase_edges(spark, sf_dir).select("u", "v").localCheckpoint()
+    e, _ = checkpoint_rotate(_copurchase_edges(spark, sf_dir).select("u", "v"))
     deg = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))

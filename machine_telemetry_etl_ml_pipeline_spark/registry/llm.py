@@ -27,7 +27,7 @@ from ..llm.dedup import (
     with_fingerprint,
     word_ngrams,
 )
-from ..llm.prep import md5_bucket
+from ..llm.prep import hex_bucket_sql, md5_bucket
 from ..llm.similarity import (
     ADAPTIVE_SIGN_DIMS,
     _as_double,
@@ -44,7 +44,7 @@ from ..llm.similarity import (
 from ..llm.textstats import words_col
 from ..operators.ckpt import checkpoint_rotate, retire_ids
 from . import _t, register
-from .ext import _HEX1, _hex_bucket_sql
+from .ext import _HEX1
 
 
 @register(
@@ -1414,14 +1414,14 @@ def llm_minhash_band_tuning(spark, sf_dir):
     1 row = recall-leaning, 2x2 = balanced, 1x4 = precision-leaning)
     — the probe a dedup pipeline runs to place the S-curve before
     committing a config at full scale. The signature pipeline is
-    materialized ONCE (localCheckpoint) and each layout is a
+    materialized ONCE (an eager checkpoint) and each layout is a
     band-keyed self-equi-join over its own exploded key set (band
     index is baked into the key, so no cross-band collisions); counts
     decrease monotonically as rows-per-band grows."""
     from ..llm.dedup import minhash_from_docs
 
     d = _t(spark, sf_dir, "documents")
-    sigs = minhash_from_docs(d).localCheckpoint(eager=True)
+    sigs, _ = checkpoint_rotate(minhash_from_docs(d))
 
     def pairs_count(groups, label, n_bands, rows_per_band):
         keys = [
@@ -2065,7 +2065,7 @@ def llm_multimodal_audio_energy(spark, sf_dir):
 # LLM-data toolkit: weighted sampling + feature hashing
 # =========================================================================
 
-_WS_BUCKET = _hex_bucket_sql("md5(CAST(doc_id AS VARCHAR))", 7)
+_WS_BUCKET = hex_bucket_sql("md5(CAST(doc_id AS VARCHAR))", 7)
 
 
 @register(
@@ -4890,10 +4890,9 @@ def llm_vector_quantize(spark, sf_dir):
 def llm_pack_sequences(spark, sf_dir):
     """Context-window packing (training-sequence binning): docs in id
     order fill 512-token bins; bin = exclusive running token total //
-    budget. The running total is a DISTRIBUTED prefix sum
-    (llm/prep.with_running_total: range partition -> parallel
-    per-partition cumsum -> broadcast per-partition offsets), not the
-    single-task global window the oracle's `sum() OVER (ORDER BY)`
+    budget. The running total is the distributed prefix sum
+    (llm/prep.with_running_total, keyed on the integer doc_id), not
+    the single-task global window the oracle's `sum() OVER (ORDER BY)`
     implies — same answer, cluster-scalable plan."""
     from ..llm.prep import pack_sequences
 

@@ -16,11 +16,11 @@ import numpy as np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..llm.prep import md5_bucket
+from ..llm.prep import md5_bucket, with_running_total
 from ..llm.similarity import _as_double, dot, norm
 from ..llm.textstats import words_col
 from ..ml import refmodels
-from ..operators.ckpt import owned_ids, retire_ids
+from ..operators.ckpt import checkpoint_rotate, owned_ids, retire_ids
 from ..operators.core import local_frame
 from . import _t, register
 from .ext import _CENTS, _DEC
@@ -2094,25 +2094,16 @@ def ml_mann_whitney_u(spark, sf_dir):
     tie-correction sum(t^3 - t) reduce as exact integer sums, and U
     plus the z statistic are single scalar formulas over those exact
     values — identical doubles cross-engine at any partition order.
-    Scale shape (r14 session 2, guide §2.2 — the equiheight prefix-sum
-    pattern): the doubled tie-averaged rank is a function of cents
-    alone (rr2 = 2*prefix_count_below + tc + 1), so the r13 global
-    rank window — whose Exchange SinglePartition funneled EVERY order
-    row through one sort task, the 100 TB straggler — is replaced by
-    a partial-aggregable (cents, tc, c1) rollup plus the fixed-width
-    integer-bucket distributed prefix sum (cents DIV 65536 is
-    monotone; the only SinglePartition left is over the ~850-row
-    bucket totals). The grouped rank sum sum(c1 * rr2) equals the
-    per-row sum exactly (integer arithmetic in DECIMAL(38,0)), and
-    sum(tc^3 - tc) no longer needs its tc>1 filter (singleton terms
-    are identically zero). Outputs bit-identical (u/z compared by
-    IEEE bit pattern) at all three SFs; local cost ~+9% (calm-window
-    A/B: 0.766 one-task window / 0.834 this shape / 0.914 a first cut
-    that derived bucket totals from the windowed frame) — the win is
-    the removed one-task sort, not local seconds.
+    Scale shape: the doubled tie-averaged rank is a function of cents
+    alone (rr2 = 2*prefix_count_below + tc + 1), so instead of a
+    global rank window (an Exchange SinglePartition sort over every
+    order row) it reads a partial-aggregable (cents, tc, c1) rollup
+    through the distributed prefix sum (llm/prep.with_running_total),
+    whose bucket totals come straight off the order scan. The grouped
+    rank sum sum(c1 * rr2) equals the per-row sum exactly (integer
+    arithmetic in DECIMAL(38,0)), and sum(tc^3 - tc) needs no tc>1
+    filter (singleton terms are identically zero).
     Reference analog: none."""
-    from pyspark.sql import Window
-
     v = _t(spark, sf_dir, "orders").select(
         F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
         .otherwise(0)
@@ -2122,32 +2113,13 @@ def ml_mann_whitney_u(spark, sf_dir):
     roll = v.groupBy("cents").agg(
         F.count(F.lit(1)).alias("tc"), F.sum("grp").alias("c1")
     )
-    bkt = roll.withColumn("__b", F.expr("cents DIV 65536"))
-    w_local = (
-        Window.partitionBy("__b")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bkt.withColumn("__cum", F.sum("tc").over(w_local))
-    # bucket totals come straight off the scan (partial-aggregable
-    # ~850-group count), NOT off `local`: deriving them from the
-    # windowed frame re-embedded the whole rollup+window subtree in
-    # the offsets branch (A/B at sf0.1, 6 interleaved reps: 0.914 s
-    # from-local vs 0.834 s from-scan; the one-task r13 window read
-    # 0.766 in the same window — the residual gap is the price of
-    # removing the SinglePartition sort, same trade equiheight made)
-    totals = v.groupBy(F.expr("cents DIV 65536").alias("__b")).agg(
-        F.count(F.lit(1)).alias("__tot")
-    )
-    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__b", F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off")
-    )
-    cum = local.join(F.broadcast(offsets), "__b").select(
+    cum = with_running_total(
+        roll,
+        "cents",
         "tc",
-        "c1",
-        (F.col("__cum") + F.col("__off") - F.col("tc")).alias("before"),
-    )
+        out_col="cum",
+        totals_from=v.select("cents", F.lit(1).alias("tc")),
+    ).select("tc", "c1", (F.col("cum") - F.col("tc")).alias("before"))
     # rank sums and tc^3 exceed BIGINT once a group passes ~2M ties /
     # ~1.5e9 rows (ANSI Spark errors; DuckDB silently promotes to
     # HUGEINT) — accumulate in DECIMAL(38,0) like ml_spearman_corr and
@@ -4571,14 +4543,16 @@ def ml_learning_curve(spark, sf_dir):
         F.col("l_quantity").alias("q"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
     )
-    labeled = li.select(
-        "q",
-        "y",
-        md5_bucket(F.col("rid").cast("string"), n_digits=2).alias("split_b"),
-        md5_bucket(
-            F.concat(F.lit("sub:"), F.col("rid").cast("string")), n_digits=2
-        ).alias("sub_b"),
-    ).localCheckpoint()
+    labeled, _ = checkpoint_rotate(
+        li.select(
+            "q",
+            "y",
+            md5_bucket(F.col("rid").cast("string"), n_digits=2).alias("split_b"),
+            md5_bucket(
+                F.concat(F.lit("sub:"), F.col("rid").cast("string")), n_digits=2
+            ).alias("sub_b"),
+        )
+    )
     test = labeled.where(F.col("split_b") >= 205)
     out = []
     for fb in _CURVE_FRACTIONS:

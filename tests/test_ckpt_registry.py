@@ -41,16 +41,20 @@ SF = "/root/testdata/sf0.001"
 CHECKPOINTING = (
     "ext_equiheight_histogram",
     "graph_bfs_distances",
+    "graph_clustering_coefficient",
     "graph_common_neighbors",
+    "graph_degree_assortativity",
     "graph_k_core",
     "graph_label_propagation",
     "graph_triangle_count",
     "graph_weighted_sssp",
     "llm_embedding_neardup_scaled",
     "llm_lsh_candidate_pairs",
+    "llm_minhash_band_tuning",
     "llm_minhash_jaccard_estimate",
     "llm_mmr_rerank",
     "llm_semdedup_prune_scaled",
+    "ml_learning_curve",
 )
 CONCURRENT = ("graph_k_core", "graph_label_propagation", "ext_equiheight_histogram")
 

@@ -7,7 +7,6 @@ from machine_telemetry_etl_ml_pipeline_spark.operators.core import (
     grouped_stats,
     latest_n,
     latest_per_key,
-    latest_per_key_maxby,
     range_scan,
     stats,
     top_k_by,
@@ -35,13 +34,6 @@ def test_latest_per_key_null_key(spark):
     df = _df(spark, [(None, 1, 1.0), (None, 2, 2.0), ("a", 1, 3.0)])
     out = latest_per_key(df, "k", "t")
     assert out.count() == 2  # NULL keys form their own group
-
-
-def test_latest_per_key_maxby_matches_window(spark):
-    df = _df(spark, [("a", 1, 1.0), ("a", 3, 2.0), ("b", 2, 5.0), ("b", 9, 7.0)])
-    w = {(r.k, r.t, r.v) for r in latest_per_key(df, "k", "t").collect()}
-    m = {(r.k, r.t, r.v) for r in latest_per_key_maxby(df, "k", "t", "v").collect()}
-    assert w == m
 
 
 def test_latest_n_and_range_scan(spark):

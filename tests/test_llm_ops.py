@@ -287,41 +287,60 @@ def test_chunking_invariants(spark):
         assert got[4][idx][15:] == got[4][idx + 1][: len(got[4][idx][15:])]
 
 
+def _running_total_input(spark):
+    """100 unique keys from -500,000 to 490,000 in steps of 10,000:
+    they span 15 of the prefix sum's 65,536-wide buckets, and bucket 0
+    holds keys of both signs (`DIV` truncates toward zero)."""
+    from pyspark.sql import functions as F
+
+    return spark.range(100).select(
+        ((F.col("id") - 50) * 10_000).alias("k"), (F.col("id") % 7 + 1).alias("v")
+    )
+
+
 def test_running_total_matches_global_window(spark):
-    """Distributed prefix sum == naive global-window cumsum, including
-    across partition boundaries (8 range partitions over 100 rows)."""
+    """Distributed prefix sum == naive global-window cumsum, across
+    bucket boundaries and negative keys; totals read off another frame
+    with the same per-bucket sums (`totals_from`) give the same
+    result."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from machine_telemetry_etl_ml_pipeline_spark.llm.prep import with_running_total
 
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7 + 1).alias("v")
-    )
-    got = {
-        r.id: r.rt
-        for r in with_running_total(df, "id", "v", out_col="rt", num_parts=8).collect()
-    }
-    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    want = {r.id: r.rt for r in df.withColumn("rt", F.sum("v").over(w)).collect()}
+    df = _running_total_input(spark)
+    got = {r.k: r.rt for r in with_running_total(df, "k", "v", out_col="rt").collect()}
+    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = {r.k: r.rt for r in df.withColumn("rt", F.sum("v").over(w)).collect()}
     assert got == want
+    # one row of value 1 per unit of v: the shape of a rollup's input rows
+    units = df.select(
+        "k", F.explode(F.array_repeat(F.lit(1), F.col("v").cast("int"))).alias("v")
+    )
+    from_units = with_running_total(df, "k", "v", out_col="rt", totals_from=units)
+    assert {r.k: r.rt for r in from_units.collect()} == want
 
 
 def test_running_total_total_col_attaches_grand_total(spark):
-    """total_col (r14, the equi-height histogram's n) rides the
-    metadata-sized offsets frame: every row carries the exact grand
-    total, and the running sum is unchanged."""
-    from pyspark.sql import functions as F
-
+    """total_col rides the bucket-sized offsets frame: every row
+    carries the exact grand total, and the running sum is unchanged."""
     from machine_telemetry_etl_ml_pipeline_spark.llm.prep import with_running_total
 
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 7 + 1).alias("v"))
     out = with_running_total(
-        df, "id", "v", out_col="rt", num_parts=8, total_col="n"
+        _running_total_input(spark), "k", "v", out_col="rt", total_col="n"
     ).collect()
     grand = sum((i % 7) + 1 for i in range(100))
     assert {r.n for r in out} == {grand}
     assert max(r.rt for r in out) == grand
+
+
+def test_running_total_empty_input(spark):
+    from machine_telemetry_etl_ml_pipeline_spark.llm.prep import with_running_total
+
+    empty = _running_total_input(spark).limit(0)
+    out = with_running_total(empty, "k", "v", out_col="rt", total_col="n")
+    assert out.columns == ["k", "v", "n", "rt"]
+    assert out.collect() == []
 
 
 def test_source_weighted_sample_rate(spark):

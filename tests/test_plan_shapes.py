@@ -231,18 +231,18 @@ def test_time_range_pushes_ts_bounds(spark, queries):
 
 
 def test_pack_sequences_no_global_window(spark, queries):
-    """The packing cumsum must be the distributed prefix sum: every
-    Window node partitioned (by __pid or over the tiny per-partition
-    totals), never a whole-table single-partition sort. A global
-    window's signature is an Exchange SinglePartition feeding a Window
-    over the FULL document relation — assert the doc-bearing window is
-    keyed."""
+    """The packing cumsum must be the distributed prefix sum, never a
+    whole-table single-partition sort: every Window that carries the
+    documents (ordered on doc_id) is partitioned by the fixed-width
+    bucket __b. The only unpartitioned window runs over the per-bucket
+    totals."""
+    import re
+
     plan = plan_of(queries["llm_pack_sequences"](spark, SF))
-    # the distributed plan's signature: a RangePartitioning exchange
-    # (phase 1) and the spark_partition_id window key — both absent
-    # from the naive Exchange-SinglePartition global-window plan
-    assert "rangepartitioning" in plan.lower()
-    assert "spark_partition_id" in plan.lower()
+    doc_windows = [ln for ln in plan.splitlines() if "Window [" in ln and "doc_id" in ln]
+    assert doc_windows, plan
+    for ln in doc_windows:
+        assert re.search(r"\], \[__b#\d+L?\], \[doc_id#", ln), plan
 
 
 def test_dynamic_partition_pruning(spark, tmp_path):

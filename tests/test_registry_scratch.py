@@ -1,8 +1,9 @@
 """Registry entries own their scratch: files an entry writes live under
 one ``registry._scratch`` dir, and building and collecting an entry
 leaves no directory, catalog table, cache entry or persistent RDD
-behind. Rows on the driver become a frame one way: an Arrow-built
-local relation, never a pickled RDD of Python rows."""
+behind. The returned rows are already on the driver, so the collect
+runs no Spark job. Rows on the driver become a frame one way: an
+Arrow-built local relation, never a pickled RDD of Python rows."""
 
 from __future__ import annotations
 
@@ -81,7 +82,7 @@ def test_scratch_entries_are_found():
 
 
 @pytest.mark.parametrize("name", SCRATCH_ENTRIES)
-def test_scratch_entries_leave_nothing(spark, name, tmp_path, monkeypatch):
+def test_scratch_entries_leave_nothing(spark, count_jobs, name, tmp_path, monkeypatch):
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     cache = spark._jsparkSession.sharedState().cacheManager()
     jsc = spark.sparkContext._jsc
@@ -93,7 +94,7 @@ def test_scratch_entries_leave_nothing(spark, name, tmp_path, monkeypatch):
 
     tables0, cached0, rdds0 = state()
     df = REGISTRY[name].fn(spark, SF)
-    df.collect()
+    assert count_jobs(df.collect) == 0
     assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
     tables, cached, rdds = state()
     assert list(tmp_path.iterdir()) == []
