@@ -35,12 +35,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # (tests/test_contract.py); ml_model_exact_scoring registers only where
 # the reference model blobs exist.
 QUERY_ORDER = (
+    "graph_k_core", "graph_triangle_count", "llm_semdedup_prune_scaled",
     "llm_pack_sequences", "ext_equiheight_histogram", "ml_mann_whitney_u",
     "ext_dynamic_partition_pruning", "graph_clustering_coefficient",
     "graph_degree_assortativity", "llm_minhash_band_tuning", "ml_learning_curve",
     "ext_range_join", "ext_observation_metrics", "ml_string_indexer",
     "ml_churn_labels_point_in_time", "llm_dedup_components", "graph_pagerank",
-    "graph_k_core", "graph_common_neighbors", "ml_als_recommend",
+    "graph_common_neighbors", "ml_als_recommend",
     "ext_manifest_pruned_scan",
     "ext_compact_small_files", "ext_dynamic_partition_overwrite",
     "ext_source_csv_corrupt", "ext_source_orc",
@@ -59,8 +60,7 @@ QUERY_ORDER = (
     "stream_stream_join_full_outer",
     "llm_segment_dedup", "ext_salted_join", "llm_lsh_candidate_pairs",
     "llm_minhash_jaccard_estimate", "llm_dedup_keep_best", "llm_dedup_cluster_sizes",
-    "llm_semdedup_prune_scaled", "llm_embedding_neardup_scaled", "graph_triangle_count",
-    "graph_label_propagation", "graph_bfs_distances",
+    "llm_embedding_neardup_scaled", "graph_label_propagation", "graph_bfs_distances",
     "ml_random_forest_vote",
     "llm_keyword_rake", "ml_gbt_stumps",
     "ml_naive_bayes_sql", "ext_intersect_all", "ext_except_all",

@@ -16,7 +16,13 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.ckpt import checkpoint_rotate, lazy_checkpoint, owned_ids, retire_ids
+from ..operators.ckpt import (
+    broadcast_if_small,
+    checkpoint_rotate,
+    lazy_checkpoint,
+    owned_ids,
+    retire_ids,
+)
 from ..operators.core import local_frame
 from . import _t, register
 
@@ -212,27 +218,36 @@ def graph_triangle_count(spark, sf_dir):
     vertex, a second equi-join closes them, so each triangle is
     counted exactly once and the intermediate is Sum(deg_in*deg_out),
     bounded by the sparse degree distribution — the same shape
-    GraphX/Pregel triangle counting shuffles. The three 1-row count
-    aggregates combine via broadcast cross joins. The edge list is
-    checkpointed once: the counting plan references it FIVE times
-    (e1/e2/e3 + the node and edge counts) and would re-derive the
+    GraphX/Pregel triangle counting shuffles. The two 1-row count
+    aggregates combine via a broadcast cross join. The edge list is
+    checkpointed once: the counting plan references it FOUR times
+    (e1/e2/e3 + the node count) and would re-derive the
     pair-generation build per branch (measured 1.3x on the entry).
-    The lazy plan is returned — the r7 eager collect-and-rebuild
-    cost 20% in the isolated A/B (SCALE.md §Triangle-count eager-collect
-    A/B: eager 2.94s vs lazy 2.45s min-of-3 at sf0.1), so the returned
-    frame owns the checkpoint's blocks (ckpt.owned_ids) until the
-    consumer has materialized it (bench's between-query sweep covers
-    them too)."""
-    e, _ = checkpoint_rotate(_copurchase_edges(spark, sf_dir))
-    return count_triangles(e)
+    The checkpoint's own job observes the edge count, which sizes the
+    closing joins and is the output's `n_edges` (`count_triangles`). The lazy plan is returned — the
+    r7 eager collect-and-rebuild cost 20% in the isolated A/B
+    (SCALE.md §Triangle-count eager-collect A/B: eager 2.94s vs lazy
+    2.45s min-of-3 at sf0.1), so the returned frame owns the
+    checkpoint's blocks (ckpt.owned_ids) until the consumer has
+    materialized it (bench's between-query sweep covers them too)."""
+    obs = Observation()
+    e, _ = checkpoint_rotate(
+        _copurchase_edges(spark, sf_dir).observe(obs, F.count("*").alias("n_edges"))
+    )
+    return count_triangles(e, obs.get["n_edges"])
 
 
-def count_triangles(edges):
+def count_triangles(edges, n_edges: int):
     """Ordered-triple triangle count over an (u, v) edge frame with
-    u < v, assumed distinct. Returns 1 row (n_nodes, n_edges,
-    n_triangles). Property-fuzzed against brute force on random graphs
-    in tests/test_properties.py."""
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
+    u < v, assumed distinct, whose row count `n_edges` the caller has
+    measured. Returns 1 row (n_nodes, n_edges, n_triangles), with
+    `n_edges` the caller's count. The two closing joins broadcast the
+    edge list when `n_edges` puts it under the broadcast threshold
+    (`ckpt.broadcast_if_small`) instead of shuffling it for a
+    sort-merge plan that AQE demotes after the fact. Property-fuzzed against brute force on random graphs in
+    tests/test_properties.py."""
+    build = broadcast_if_small(edges, n_edges)
+    e1, e2, e3 = edges.alias("e1"), build.alias("e2"), build.alias("e3")
     wedge = (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
         .select(F.col("e1.u").alias("u"), F.col("e2.v").alias("w"))
@@ -246,10 +261,9 @@ def count_triangles(edges):
         .union(edges.select(F.col("v").alias("x")))
         .agg(F.countDistinct("x").alias("n_nodes"))
     )
-    n_edges = edges.agg(F.count("*").alias("n_edges"))
-    return nodes.crossJoin(n_edges).crossJoin(tri).select(
+    return nodes.crossJoin(tri).select(
         F.col("n_nodes").cast("long").alias("n_nodes"),
-        F.col("n_edges").cast("long").alias("n_edges"),
+        F.lit(n_edges).cast("long").alias("n_edges"),
         F.col("n_triangles").cast("long").alias("n_triangles"),
     )
 
@@ -621,10 +635,13 @@ def graph_k_core(spark, sf_dir):
     exact integers, no floats anywhere. Scale: every round's shuffle
     is bounded by the CURRENT edge list (monotonically shrinking);
     degrees are partial-aggregable; the survivor node set rides
-    broadcast-able semi-joins on the shrinking frontier, the same
-    shape GraphX's peeling iteration shuffles. The fixed round cap
-    (not run-to-fixpoint) keeps the plan static and SF-independent;
-    peel depth beyond 6 is cut off identically on both engines.
+    broadcast semi-joins on the shrinking frontier whenever the round's
+    measured node count puts it under the broadcast threshold
+    (`ckpt.broadcast_if_small`), so the edge list is never shuffled
+    for the peel; a survivor set over the threshold keeps sort-merge
+    semi-joins. The fixed round cap (not run-to-fixpoint) keeps the
+    plan static and SF-independent; peel depth beyond 6 is cut off
+    identically on both engines.
     One job carries each round's degrees and stats: the degree table
     is an eager checkpoint whose plan observes (count, sum(c)), so
     the round's (n_nodes, n_edges) comes off that job's metrics with
@@ -677,7 +694,13 @@ def graph_k_core(spark, sf_dir):
                 for j in range(i + 1, _PEEL_ROUNDS + 1)
             )
             break
-        keep = deg.where(F.col("c") >= _K).select("node")
+        # the kept nodes are a subset of this round's n_nodes degree
+        # rows: a measured bound, so the semi-joins broadcast them
+        # instead of shuffling the edge list, and a kept set over the
+        # broadcast threshold keeps the sort-merge plan
+        keep = broadcast_if_small(
+            deg.where(F.col("c") >= _K).select("node"), rows[i][1]
+        )
         e = lazy_checkpoint(
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")

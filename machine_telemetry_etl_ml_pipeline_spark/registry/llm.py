@@ -3576,8 +3576,10 @@ def llm_semdedup_prune_scaled(spark, sf_dir):
             F.sum("idb").cast("long").alias("sum_dropped_raw"),
         )
     )
+    # agg is grouped by thr, so it holds at most len(thresholds) = 3
+    # rows at any scale: broadcast it rather than shuffle both sides
     return (
-        thresholds.join(agg, "thr", "left")
+        thresholds.join(F.broadcast(agg), "thr", "left")
         .crossJoin(F.broadcast(params))
         .select(
             F.col("thr").alias("threshold"),

@@ -10,7 +10,9 @@ Pins the facts the iterative operators rely on:
   chains),
 - a retired frame is genuinely dead (truncated lineage cannot be
   recomputed) — the reason rotation must only ever retire frames
-  nothing downstream references.
+  nothing downstream references,
+- a measured side gets a broadcast hint only under both broadcast
+  thresholds (`broadcast_if_small`).
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from machine_telemetry_etl_ml_pipeline_spark.operators.ckpt import (
+    broadcast_if_small,
     checkpoint_rotate,
     lazy_checkpoint,
     owned_ids,
@@ -178,3 +181,58 @@ def test_second_checkpoint_dir_is_honored(spark, tmp_path, monkeypatch):
     assert len(files_under(first)) == n_first
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
     unpersist_all(spark)
+
+
+_THRESHOLDS = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+
+@pytest.fixture
+def thresholds(spark):
+    """``thresholds(auto, adaptive)``: set the two broadcast thresholds
+    (None leaves one at its default); teardown unsets both."""
+
+    def set_(auto=None, adaptive=None):
+        for k, v in zip(_THRESHOLDS, (auto, adaptive)):
+            if v is not None:
+                spark.conf.set(k, v)
+
+    yield set_
+    for k in _THRESHOLDS:
+        spark.conf.unset(k)
+
+
+def _hinted(df) -> bool:
+    return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+
+# spark.range's one bigint column: 8 + 8 bytes per row, and the default
+# threshold is 10 MiB = 655,360 such rows
+@pytest.mark.parametrize(
+    "auto, adaptive, rows, hint",
+    [
+        (None, None, 655_359, True),
+        (None, None, 655_360, False),  # size at the threshold, not under it
+        ("-1", None, 10, False),
+        (None, "-1", 10, False),
+        (None, "1k", 63, True),
+        (None, "1k", 64, False),  # adaptive twin smaller than rows x width
+        ("1k", "10m", 64, False),  # the size must be under both
+    ],
+)
+def test_broadcast_if_small_reads_both_thresholds(spark, thresholds, auto, adaptive, rows, hint):
+    thresholds(auto, adaptive)
+    df = spark.range(rows)
+    out = broadcast_if_small(df, rows)
+    assert _hinted(out) is hint
+    if not hint:
+        assert out is df
+
+
+def test_broadcast_if_small_without_jvm_access():
+    """A Spark Connect frame has no JVM handle: no hint, no error."""
+
+    class ConnectFrame:
+        sparkSession = object()
+
+    df = ConnectFrame()
+    assert broadcast_if_small(df, 1) is df

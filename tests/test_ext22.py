@@ -42,26 +42,36 @@ def test_k_core_matches_bruteforce_peel(spark):
 def test_k_core_trajectory_under_join_strategies_and_reliable_checkpoints(
     spark, monkeypatch, tmp_path
 ):
-    """Each round's stats are observed metrics of the degree checkpoint's
-    own job. Sort-merge joins (no broadcast) and reliable checkpoints
-    change which jobs run when; the trajectory must not move, or a
-    round read metrics of a stage that had not run yet."""
+    """Each k-core round's stats are observed metrics of the degree
+    checkpoint's own job. Sort-merge joins (no broadcast) and reliable
+    checkpoints change which jobs run when; the trajectory must not
+    move, in collect order, or a round read metrics of a stage that had
+    not run yet. The same runs cover the other entries whose joins are
+    sized by a measurement or hinted: both thresholds at -1 turn off
+    the `ckpt.broadcast_if_small` hints (semdedup's plain broadcast of
+    its 3-row aggregate stays), and their outputs must not move."""
 
-    def trajectory():
-        return [tuple(r) for r in _run(spark, "graph_k_core").collect()]
+    def outputs():
+        k_core = [tuple(r) for r in _run(spark, "graph_k_core").collect()]
+        return {"graph_k_core": k_core} | {
+            n: sorted(tuple(r) for r in _run(spark, n).collect())
+            for n in ("graph_triangle_count", "llm_semdedup_prune_scaled")
+        }
 
-    expect = trajectory()
+    expect = outputs()
     keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
     try:
         for k in keys:
             spark.conf.set(k, "-1")
-        assert trajectory() == expect
+        assert outputs() == expect
     finally:
         for k in keys:
             spark.conf.unset(k)
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
-    assert trajectory() == expect
-    assert expect[0][2] > expect[-1][2] > 0  # the peel removed edges and kept some
+    assert outputs() == expect
+    k_core = expect["graph_k_core"]
+    assert k_core[0][2] > k_core[-1][2] > 0  # the peel removed edges and kept some
+    assert expect["graph_triangle_count"][0][2] > 0
 
 
 def test_weighted_sssp_matches_bellman_ford(spark):

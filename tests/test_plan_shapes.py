@@ -375,6 +375,25 @@ def test_pagerank_edge_join_is_shuffle_hash(spark, queries):
     assert "ShuffledHashJoin" in joined, joined
 
 
+def test_k_core_peel_broadcasts_its_kept_nodes(spark, queries):
+    """Each peel's semi-joins broadcast the kept-node set, whose size
+    the round's degree checkpoint measured (`ckpt.broadcast_if_small`):
+    no peel plan shuffles the edge list, and no build plan holds a
+    shuffle that AQE read back locally after demoting a sort-merge
+    join."""
+    from tools.plan_audit import executed_plans
+
+    queries["graph_k_core"](spark, SF)  # warm: schema inference
+    plans = [
+        p.split("== Initial Plan ==")[0]
+        for p in executed_plans(spark, lambda: queries["graph_k_core"](spark, SF))
+    ]
+    peels = [p for p in plans if "LeftSemi" in p]
+    assert peels, plans
+    assert not any("AQEShuffleRead local" in p for p in plans), plans
+    assert not any("Exchange hashpartitioning" in p for p in peels), peels
+
+
 def test_construction_time_take_is_audited(spark, queries):
     """`llm_dedup_components` runs a bounded take while it builds its
     frame; the audit must see that execution's shuffles even though no

@@ -227,7 +227,7 @@ def test_triangle_count_matches_bruteforce_on_random_graphs(spark, raw):
     if not edges:
         return
     df = spark.createDataFrame(sorted(edges), "u long, v long")
-    out = count_triangles(df).collect()[0]
+    out = count_triangles(df, len(edges)).collect()[0]
     nodes = {u for u, _ in edges} | {v for _, v in edges}
     fwd: dict = {}
     for u, v in edges:

@@ -10,10 +10,12 @@ construction-time actions — checkpoints, bounded stats collects,
 takes — wherever in the package they run. Each row sums the
 scale-relevant plan properties over all of them: exchanges
 (shuffles), broadcast vs sort-merge joins, filter pushdown,
-whole-stage-codegen spans, scan column pruning. This is the work a
-timed run actually performs. Output is a markdown table (PLANS.md is
-its checked-in snapshot): the audit trail that the declarative plans
-actually compile to the physical shapes SCALE.md claims.
+whole-stage-codegen spans, scan column pruning, and shuffles that AQE
+read back locally under a join it demoted to a broadcast. This is the
+work a timed run actually performs. Output is a markdown table
+(PLANS.md is its checked-in snapshot): the audit trail that the
+declarative plans actually compile to the physical shapes SCALE.md
+claims.
 
     python tools/plan_audit.py [--sf /root/testdata/sf0.01] [--write]
 
@@ -93,6 +95,9 @@ def audit(plan: str) -> dict:
         "group_limit": "WindowGroupLimit" in plan,
         "take_ordered": "TakeOrderedAndProject" in plan,
         "cartesian": "CartesianProduct" in plan,
+        # a shuffle AQE read back locally under a join it demoted to a
+        # broadcast: the exchange's write and its job were wasted
+        "local_reads": plan.count("AQEShuffleRead local"),
     }
 
 
@@ -157,6 +162,8 @@ def main() -> None:
             notes.append("TakeOrderedAndProject")
         if a["cartesian"]:
             notes.append("CARTESIAN (bad)")
+        if a["local_reads"]:
+            notes.append(f"{a['local_reads']} local shuffle reads")
         row = (
             f"| {name} | {a['exchanges']} | {a['bhj']} | {a['smj']} | {a['bnlj']} "
             f"| {a['pushed']} | {a['codegen']} | {', '.join(notes)} |"
